@@ -77,19 +77,20 @@ object Q {
   }
 
   /** Run a bounded streaming job with a state-partition count derived
-    * from its INPUT SIZE instead of the session's core-count default,
-    * restoring the session conf afterwards.
+    * from its INPUT SIZE instead of the session width, restoring the
+    * session conf afterwards.
     *
     * Stateful streaming latches `spark.sql.shuffle.partitions` into the
     * checkpoint at the first batch, and every stateful operator then
     * pays per-partition state-store machinery (provider load, delta
     * write, snapshot bookkeeping, commit fsync) on EVERY micro-batch of
     * every partition — cost proportional to the partition count, not
-    * the data. State partitioning must therefore scale with STATE SIZE
-    * (key cardinality / bytes), never with local core count: measured
-    * here, a 3-batch stream-stream interval join over ~2 MB of input
-    * spent ~100 s of cumulative task time on 32 partitions and ~5 s on
-    * 4, identical results. One 64 MB-of-input-per-partition target (a
+    * the data. A bounded query stream therefore sizes its state by its
+    * input bytes (the live pipeline, `tools.Main`, runs at the core
+    * count instead: one wave per trigger): measured here, a 3-batch
+    * stream-stream interval join over ~2 MB of input spent ~100 s of
+    * cumulative task time on 32 partitions and ~5 s on 4, identical
+    * results. One 64 MB-of-input-per-partition target (a
     * floor of 4 for probe-side parallelism, capped by the session
     * setting so a production session's width is never exceeded) makes
     * the shape scale-adaptive: at 100 TB the hint exceeds cores and the

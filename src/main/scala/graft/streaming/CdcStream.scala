@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.cdc.{Transform, Wal2Json}
@@ -197,32 +197,37 @@ object CdcStream {
         // the sink's batch_id idempotence / broker Msg-Id dedup make the
         // retry safe).
         val df = batch.toDF()
-        if (metrics.isDefined) df.persist() // one materialization for write + count
-        try {
-          sinkWriter match {
-            // broker-backed deployment (E6 seam): the per-item ordered /
-            // unordered publish loops own their retry policy; the
-            // quarantine handler carries the dlq/skip/crash policy
-            // (SinkPublisher.quarantineFor)
-            case Some(factory) =>
-              SinkPublisher.writeBatchVia(df, factory,
-                maxPublishRetries, ordered = !unsafeUnorderedAsyncPublish,
-                quarantine = sinkQuarantine,
-                onRetry = () => retryAcc.add(1L))
-              metrics.foreach { m =>
-                val total = retryAcc.value
-                m.publishRetries.add(total - drained.getAndSet(total))
-              }
-            case None =>
-              Reliability.withRetry(maxPublishRetries,
-                  onRetry = () => metrics.foreach(_.publishRetries.inc()))(() =>
-                if (unsafeUnorderedAsyncPublish)
-                  UnorderedSink.writeBatch(df, batchId, outPath)
-                else OrderedSink.writeBatch(df, batchId, outPath,
-                  numPartitions = sinkPartitions))
-          }
-          metrics.foreach(_.published.add(df.count()))
-        } finally if (metrics.isDefined) df.unpersist()
+        // the published count rides the write (no extra job); a fresh
+        // Observation per attempt, since withRetry re-runs the write
+        var published = Option.empty[Observation]
+        def observed(): DataFrame = metrics.fold(df) { _ =>
+          published = Some(Observation())
+          df.observe(published.get, count(lit(1)).as("rows"))
+        }
+        sinkWriter match {
+          // broker-backed deployment (E6 seam): the per-item ordered /
+          // unordered publish loops own their retry policy; the
+          // quarantine handler carries the dlq/skip/crash policy
+          // (SinkPublisher.quarantineFor)
+          case Some(factory) =>
+            SinkPublisher.writeBatchVia(observed(), factory,
+              maxPublishRetries, ordered = !unsafeUnorderedAsyncPublish,
+              quarantine = sinkQuarantine,
+              onRetry = () => retryAcc.add(1L))
+            metrics.foreach { m =>
+              val total = retryAcc.value
+              m.publishRetries.add(total - drained.getAndSet(total))
+            }
+          case None =>
+            Reliability.withRetry(maxPublishRetries,
+                onRetry = () => metrics.foreach(_.publishRetries.inc()))(() =>
+              if (unsafeUnorderedAsyncPublish)
+                UnorderedSink.writeBatch(observed(), batchId, outPath)
+              else OrderedSink.writeBatch(observed(), batchId, outPath,
+                numPartitions = sinkPartitions))
+        }
+        for (m <- metrics; o <- published)
+          m.published.add(o.get("rows").asInstanceOf[Long])
       }
       .start()
   }

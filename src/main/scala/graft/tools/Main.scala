@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -36,6 +37,11 @@ import graft.streaming.{CdcMetrics, CdcStream, HealthServer}
   * set, or spark-submit the assembly with the same env. SIGTERM/Ctrl-C
   * stops the query, then the health server, then the session (the
   * signal.NotifyContext analog).
+  *
+  * State width: keyed state and the ordered sink run at the default
+  * parallelism ([[shufflePartitions]]), latched into a checkpoint at its
+  * first batch; pass `--conf spark.sql.shuffle.partitions=N` before the
+  * first start to choose another.
   */
 object Main {
 
@@ -141,6 +147,15 @@ object Main {
          else if (cfg.protoVersion >= 2) ";streaming=on" else "") +
         (if (cfg.protoVersion >= 3) ";two_phase=on" else "")
     else "format-version=2;include-xids=1;include-timestamp=1"
+
+  /** Width of keyed state and the ordered sink: Spark's conf, else the
+    * default parallelism (executor cores; N for `local[N]`). A state-store
+    * commit costs ~100 ms even when empty, so a width above the cores adds
+    * a wave of that cost to every trigger, whatever its rows.
+    */
+  private[graft] def shufflePartitions(conf: SparkConf,
+      defaultParallelism: Int): String =
+    conf.get("spark.sql.shuffle.partitions", defaultParallelism.toString)
 
   /** Build the raw frame stream for the configured source kind. */
   private def rawStream(spark: SparkSession, cfg: GraftConfig,
@@ -378,8 +393,6 @@ object Main {
     val builder = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("graft-cdc")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
     // the pgoutput path's keyed state (relation registry + tx assembly)
     // runs under transformWithState, which requires the RocksDB provider
@@ -387,6 +400,8 @@ object Main {
       builder.config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     else builder).getOrCreate()
+    spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions(
+      spark.sparkContext.getConf, spark.sparkContext.defaultParallelism))
     val running = start(spark, sys.env)
     sys.addShutdownHook {
       running.stop()

@@ -3,7 +3,14 @@ package graft
 import java.net.{HttpURLConnection, URL}
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.SparkConf
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.streaming.Trigger
+
+import graft.streaming.{CdcMetrics, CdcStream}
 import graft.tools.Main
 
 /** The one-command deployment entrypoint (reference:
@@ -66,13 +73,146 @@ class ToolsMainSpec extends SparkSpec {
       val out = spark.read.parquet(s"$tmp/out")
       assert(out.select("subject").distinct().collect().map(_.getString(0)).toList
         == List("cdc.maindb.public.users"))
-      // /metrics serves the engine counters in Prometheus exposition
-      val (mCode, mBody) = get(s"http://localhost:$port/metrics")
-      assert(mCode == 200 && mBody.contains("cdc_publisher_jetstream_published_total"))
+      // /metrics serves the engine counters in Prometheus exposition, and
+      // `published` counts exactly the rows the sink holds (it is added
+      // once the batch's write has committed, so poll for it)
+      def published(): Option[Long] = {
+        val (code, body) = get(s"http://localhost:$port/metrics")
+        assert(code == 200)
+        "(?m)^cdc_publisher_jetstream_published_total (\\d+)$".r
+          .findFirstMatchIn(body).map(_.group(1).toLong)
+      }
+      while (!published().contains(rows()) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(200)
+      assert(published().contains(rows()), s"published ${published()}")
     } finally {
       running.stop()
       assert(!running.query.isActive)
     }
+  }
+
+  /** Jobs per (query id, micro-batch id), from the local properties each
+    * streaming job carries. [[drain]] runs a marker job and waits for its
+    * end: the listener bus delivers in order, so every earlier job has
+    * been counted by then.
+    */
+  private final class BatchJobs extends SparkListener {
+    val jobs = new ConcurrentHashMap[(String, String), AtomicInteger]()
+    @volatile private var markerId = -1
+    @volatile private var markerDone = false
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).foreach { p =>
+        if (p.getProperty("graft.test.marker") != null) markerId = e.jobId
+        for (q <- Option(p.getProperty("sql.streaming.queryId"));
+             b <- Option(p.getProperty("streaming.sql.batchId")))
+          jobs.computeIfAbsent((q, b), _ => new AtomicInteger).incrementAndGet()
+      }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      if (e.jobId == markerId) markerDone = true
+    def drain(): Unit = {
+      val sc = spark.sparkContext
+      sc.setLocalProperty("graft.test.marker", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.marker", null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!markerDone && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(markerDone, "listener bus drained")
+    }
+  }
+
+  test("the published metric rides the sink write: no extra job per micro-batch") {
+    val listener = new BatchJobs
+    spark.sparkContext.addSparkListener(listener)
+    // one committed tx through CdcStream.start; returns the data-carrying
+    // batch's (query id, batch id) and the published count
+    def run(metrics: Option[CdcMetrics.Registry]): ((String, String), Long) = {
+      val tmp = Files.createTempDirectory("graft_main_jobs").toString
+      val walDir = s"$tmp/wal"; Files.createDirectories(Paths.get(walDir))
+      Files.write(Paths.get(walDir, "wal-01.log"),
+        Seq(walLine("B", 1, 0), walLine("I", 1, 31),
+          walLine("I", 1, 32), walLine("C", 1, 0))
+          .mkString("\n").getBytes(UTF_8))
+      val raw = spark.readStream.format("graft.sources.WalDirectorySource")
+        .option("path", walDir).load()
+      val q = CdcStream.start(spark, raw, "jobsdb", s"$tmp/out", s"$tmp/ck",
+        trigger = Trigger.ProcessingTime("100 milliseconds"), metrics = metrics)
+      try {
+        val deadline = System.currentTimeMillis() + 30000
+        def dataBatch = q.recentProgress.find(_.numInputRows > 0).map(_.batchId)
+        while (dataBatch.isEmpty && q.exception.isEmpty &&
+          System.currentTimeMillis() < deadline) Thread.sleep(100)
+        q.exception.foreach(e => throw e)
+        assert(spark.read.parquet(s"$tmp/out").count() == 2)
+        ((q.id.toString, dataBatch.get.toString),
+          metrics.fold(-1L)(_.published.get))
+      } finally q.stop()
+    }
+    try {
+      val (on, published) = run(Some(new CdcMetrics.Registry))
+      val (off, _) = run(None)
+      listener.drain()
+      def jobs(k: (String, String)) = Option(listener.jobs.get(k)).fold(0)(_.get)
+      assert(published == 2, "published counts the batch's rows")
+      assert(jobs(off) > 0, s"jobs observed: ${listener.jobs}")
+      assert(jobs(on) == jobs(off),
+        s"metrics on: ${jobs(on)} jobs, metrics off: ${jobs(off)} jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("shufflePartitions: the default parallelism unless Spark's conf sets it") {
+    val key = "spark.sql.shuffle.partitions"
+    assert(Main.shufflePartitions(new SparkConf(false), 6) == "6")
+    assert(Main.shufflePartitions(new SparkConf(false).set(key, "8"), 6) == "8")
+    // the shared session sets it through its builder, i.e. its SparkConf
+    val sc = spark.sparkContext
+    assert(Main.shufflePartitions(sc.getConf, 99) == sc.getConf.get(key))
+  }
+
+  test("a checkpoint started at 32 partitions keeps its width under the new default") {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    val tmp = Files.createTempDirectory("graft_main_width").toString
+    val walDir = s"$tmp/wal"; Files.createDirectories(Paths.get(walDir))
+    def writeTx(file: String, xid: Long, ids: Int*): Unit =
+      Files.write(Paths.get(walDir, file),
+        (walLine("B", xid, 0) +: ids.map(walLine("I", xid, _)) :+
+          walLine("C", xid, 0)).mkString("\n").getBytes(UTF_8))
+    val env = Map(
+      "GRAFT_WAL_DIR" -> walDir,
+      "GRAFT_OUT_DIR" -> s"$tmp/out",
+      "GRAFT_CHECKPOINT_DIR" -> s"$tmp/ck",
+      "BATCH_TIMEOUT" -> "100ms")
+    def rows() =
+      try spark.read.parquet(s"$tmp/out").count() catch { case _: Exception => 0L }
+    def runUntil(n: Long): Unit = {
+      val running = Main.start(spark, env, healthPortOverride = Some(0))
+      try {
+        val deadline = System.currentTimeMillis() + 30000
+        while (rows() < n && running.query.exception.isEmpty &&
+          System.currentTimeMillis() < deadline) Thread.sleep(200)
+        running.query.exception.foreach(e => throw e)
+      } finally running.stop()
+    }
+    try {
+      spark.conf.set(key, "32") // the width Main pinned before
+      writeTx("wal-01.log", 1, 41, 42)
+      runUntil(2)
+      // restart at the width Main now sets
+      spark.conf.set(key, Main.shufflePartitions(spark.sparkContext.getConf,
+        spark.sparkContext.defaultParallelism))
+      writeTx("wal-02.log", 2, 43, 44)
+      runUntil(4)
+    } finally spark.conf.set(key, prev)
+    val offsets = new java.io.File(s"$tmp/ck/offsets").listFiles()
+      .filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
+    assert(new String(Files.readAllBytes(offsets.toPath), UTF_8)
+      .contains(s"\"$key\":\"32\""), "the offset log keeps the first width")
+    assert(new java.io.File(s"$tmp/ck/state/0").list().count(_.forall(_.isDigit))
+      == 32, "the assembly state keeps 32 partitions")
+    val ids = spark.read.parquet(s"$tmp/out").select("event_id").collect()
+      .map(_.getString(0))
+    assert(ids.length == 4 && ids.distinct.length == 4,
+      s"each change exactly once: ${ids.toList}")
   }
 
   test("Main.start with CDC_SOURCE=socket dials the replication endpoint from DATABASE_URL") {
@@ -145,6 +285,10 @@ class ToolsMainSpec extends SparkSpec {
       assert(got.key == "cdc.kafkadb.public.users")
       assert(got.headers.contains("event-id"))
       assert(got.value.contains("\"event_id\""))
+      // published counts the SinkWriter path's rows too, once it commits
+      while (running.metrics.published.get < 2 &&
+        System.currentTimeMillis() < deadline) Thread.sleep(200)
+      assert(running.metrics.published.get == 2)
     } finally { running.stop(); broker.close() }
   }
 
