@@ -74,6 +74,7 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config(graft.tools.LocalFs.sessionConfs())
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -42,6 +42,10 @@ import graft.streaming.{CdcMetrics, CdcStream, HealthServer}
   * parallelism ([[shufflePartitions]]), latched into a checkpoint at its
   * first batch; pass `--conf spark.sql.shuffle.partitions=N` before the
   * first start to choose another.
+  *
+  * Local files: `file:` checkpoints, state stores and the parquet sink go
+  * through [[LocalFs]]'s fork-free classes unless Spark's conf names
+  * other `fs.file.impl` / `fs.AbstractFileSystem.file.impl` classes.
   */
 object Main {
 
@@ -149,9 +153,10 @@ object Main {
     else "format-version=2;include-xids=1;include-timestamp=1"
 
   /** Width of keyed state and the ordered sink: Spark's conf, else the
-    * default parallelism (executor cores; N for `local[N]`). A state-store
-    * commit costs ~100 ms even when empty, so a width above the cores adds
-    * a wave of that cost to every trigger, whatever its rows.
+    * default parallelism (executor cores; N for `local[N]`). Every state
+    * partition commits a file per trigger, even when empty, so a width
+    * above the cores adds a wave of that cost to every trigger, whatever
+    * its rows.
     */
   private[graft] def shufflePartitions(conf: SparkConf,
       defaultParallelism: Int): String =
@@ -394,6 +399,7 @@ object Main {
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("graft-cdc")
       .config("spark.sql.session.timeZone", "UTC")
+      .config(LocalFs.sessionConfs())
     // the pgoutput path's keyed state (relation registry + tx assembly)
     // runs under transformWithState, which requires the RocksDB provider
     val spark = (if (sys.env.get("CDC_PLUGIN").contains("pgoutput"))

@@ -12,6 +12,7 @@ object TestSession {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.tools.LocalFs.sessionConfs())
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -668,36 +668,6 @@ class StreamingSpec extends SparkSpec {
     batch.unpersist()
   }
 
-  test("Kafka producer-record shape carries subject-keyed order + event_id header (E6)") {
-    import graft.streaming.KafkaSinkShape
-    val events = Seq(
-      ("1/0:7:INSERT:public.users:1", "cdc.testdb.public.users", "INSERT"))
-      .toDF("event_id", "subject", "operation")
-      .withColumn("event_type", lit("cdc.insert")).withColumn("source", lit("postgres"))
-      .withColumn("timestamp", lit(java.sql.Timestamp.valueOf("2024-01-15 10:30:00")))
-      .withColumn("commit_time", col("timestamp"))
-      .withColumn("lsn", lit("1/0")).withColumn("txid", lit(7L))
-      .withColumn("schema", lit("public")).withColumn("table", lit("users"))
-      .withColumn("before", lit(null).cast("map<string,string>"))
-      .withColumn("after", map(lit("id"), lit("1")))
-      .withColumn("metadata", map(lit("txid"), lit("7")))
-    val rec = KafkaSinkShape.toProducerRecords(events).head()
-    assert(rec.getAs[String]("topic") == "cdc.testdb.public.users")
-    assert(new String(rec.getAs[Array[Byte]]("key")) == "cdc.testdb.public.users")
-    val value = new String(rec.getAs[Array[Byte]]("value"))
-    assert(value.contains("\"event_id\":\"1/0:7:INSERT:public.users:1\""))
-    assert(value.contains("\"after\":{\"id\":\"1\"}"))
-    val hdr = rec.getSeq[org.apache.spark.sql.Row](rec.fieldIndex("headers")).head
-    assert(hdr.getAs[String]("key") == "event_id")
-    assert(new String(hdr.getAs[Array[Byte]]("value")) == "1/0:7:INSERT:public.users:1")
-    // E2 mode pins one in-flight request (no reorder-on-retry); E3 allows 5
-    val ordered = KafkaSinkShape.producerOptions("broker:9092", ordered = true)
-    val unordered = KafkaSinkShape.producerOptions("broker:9092", ordered = false)
-    assert(ordered("kafka.max.in.flight.requests.per.connection") == "1")
-    assert(unordered("kafka.max.in.flight.requests.per.connection") == "5")
-    assert(ordered("kafka.enable.idempotence") == "true")
-  }
-
   test("startFromConfig wires the E3 flag + batch cadence from the env surface (config round trip)") {
     val cfg = graft.config.GraftConfig.load(Map(
       "UNSAFE_UNORDERED_ASYNC_PUBLISH" -> "true",
