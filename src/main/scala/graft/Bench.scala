@@ -454,17 +454,6 @@ object Bench {
     // costs per-batch driver latency. Restored after the section.
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // Optional RocksDB + changelog checkpointing (the pgoutput path's
-    // required store). A/B'd repeatedly against the HDFS-backed default
-    // at this state size: no reproducible difference above this
-    // environment's ±40% scheduler noise, so the default stays put.
-    if (sys.env.get("SPARK_GRAFT_STREAM_ROCKSDB").contains("1")) {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      boundRocksDbMemory(spark)
-    }
     val reps = try {
       // rep 0 is UNTIMED — the batch section's warmup philosophy applied
       // to streaming: the first run through IncrementalExecution, the
@@ -487,7 +476,7 @@ object Bench {
             s"[stream-debug] rep=$rep batch=${p.batchId} rows=${p.numInputRows} " +
               s"durations=${p.durationMs}"))
         // each rep's checkpoint is single-use: unload its providers so
-        // state (heap or RocksDB native) never accumulates across reps
+        // state never accumulates across reps
         unloadStateStores()
         (spark.read.parquet(s"$outDir-$rep").count(), wall)
       }.drop(1)

@@ -115,19 +115,16 @@ object PgOutput {
   }
 
   /** Stateful decode core, shared by the batch `mapPartitions` path
-    * ([[decodePartition]]: registry in a local map, one archive partition)
-    * and the streaming keyed-state processor
-    * (graft.streaming.PgOutputStreamDecoder: registry in a per-slot
-    * MapState, persisted across micro-batches — the reference keeps its
-    * registry for the stream's lifetime and replaces entries on Relation
-    * messages at any point, pgoutput.go:216-230). The registry access is
-    * injected; transaction cursor (current xid + commit ts from the last
-    * Begin) is plain mutable fields the caller saves/restores around the
-    * session.
+    * ([[decodePartition]]: one archive partition) and the streaming
+    * per-slot decoder (graft.streaming.PgOutputStream: the session's
+    * fields are restored from and saved to one state value per slot, so
+    * they persist across micro-batches — the reference keeps its registry
+    * for the stream's lifetime and replaces entries on Relation messages
+    * at any point, pgoutput.go:216-230). The transaction cursor (current
+    * xid + commit ts from the last Begin) is plain mutable fields.
     */
-  final class DecodeSession(
-      getRel: Int => Option[RelationInfo],
-      putRel: RelationInfo => Unit) {
+  final class DecodeSession {
+    val registry: mutable.Map[Int, RelationInfo] = mutable.Map.empty
     var currentXid: Long = 0L
     var currentTs: Timestamp = null
 
@@ -139,18 +136,14 @@ object PgOutput {
     // commit metadata, and StreamAbort retracts one member (or the whole
     // tx). A streaming caller persists these across batches the same way
     // it persists currentXid/currentTs (the segment bracket and the
-    // in-flight set both outlive a micro-batch); `removedStreamTops`
-    // records commits/full aborts so persisted entries can be deleted.
+    // in-flight set both outlive a micro-batch).
     var streamTop: Long = -1L
-    val streamXids: scala.collection.mutable.Map[Long,
-      scala.collection.mutable.LinkedHashSet[Long]] =
-      scala.collection.mutable.Map.empty
-    val removedStreamTops: scala.collection.mutable.Set[Long] =
-      scala.collection.mutable.Set.empty
+    val streamXids: mutable.Map[Long, mutable.LinkedHashSet[Long]] =
+      mutable.Map.empty
 
     private def relation(b: ByteBuffer, walStart: Long): RelationInfo = {
       val id = b.getInt()
-      getRel(id).getOrElse(throw new IllegalStateException(
+      registry.getOrElse(id, throw new IllegalStateException(
         s"pgoutput: data message at wal_start=$walStart references " +
           s"relation $id with no prior Relation message"))
     }
@@ -181,7 +174,7 @@ object PgOutput {
         if (inSeg && "RIUDTM".indexOf(msgType) >= 0) {
           val x = b.getInt().toLong & 0xffffffffL
           streamXids.getOrElseUpdate(streamTop,
-            scala.collection.mutable.LinkedHashSet(streamTop)) += x
+            mutable.LinkedHashSet(streamTop)) += x
           x
         } else currentXid
       val evTs: Timestamp = if (inSeg) null else currentTs
@@ -203,7 +196,7 @@ object PgOutput {
             b.getInt() // typmod
             i += 1
           }
-          putRel(RelationInfo(id, schema, table, names, oids))
+          registry(id) = RelationInfo(id, schema, table, names, oids)
           Nil
         case 'B' =>
           b.getLong() // final LSN
@@ -249,7 +242,7 @@ object PgOutput {
           val nrels = b.getInt()
           b.get() // options (cascade/restart identity)
           (0 until nrels).flatMap { _ =>
-            getRel(b.getInt()).map { rel =>
+            registry.get(b.getInt()).map { rel =>
               // truncate -> DDL with empty before AND after images
               DecodedWalEvent(walStart, "DDL", is_begin = false, is_commit = false,
                 rel.schema, rel.table, Map.empty, Map.empty, evXid, evTs)
@@ -309,7 +302,7 @@ object PgOutput {
           b.get() // first-segment flag
           streamTop = xid
           streamXids.getOrElseUpdate(xid,
-            scala.collection.mutable.LinkedHashSet(xid))
+            mutable.LinkedHashSet(xid))
           Nil
         case 'E' =>
           if (!inSeg) corrupt("StreamStop without an open segment")
@@ -324,7 +317,6 @@ object PgOutput {
           val members = streamXids.remove(xid)
             .map(_.toSeq)
             .getOrElse(Seq(xid))
-          removedStreamTops += xid
           members.map(x => DecodedWalEvent(walStart, "C", is_begin = false,
             is_commit = true, null, null, null, null, x, ts))
         case 'A' =>
@@ -349,7 +341,6 @@ object PgOutput {
             val members = streamXids.remove(xid)
               .map(_.toSeq)
               .getOrElse(Seq(xid))
-            removedStreamTops += xid
             members.map(x => DecodedWalEvent(walStart, "ABORT",
               is_begin = false, is_commit = false,
               null, null, null, null, x, abortTs))
@@ -397,7 +388,7 @@ object PgOutput {
           // ('c'/'K'/'r') take for a slice that starts mid-transaction,
           // NOT a corrupt frame.
           streamXids.getOrElseUpdate(xid,
-            scala.collection.mutable.LinkedHashSet(xid))
+            mutable.LinkedHashSet(xid))
           Nil
         case 'K' =>
           b.get() // flags
@@ -405,9 +396,7 @@ object PgOutput {
           val ts = pgTimestamp(b.getLong())
           val xid = b.getInt().toLong & 0xffffffffL
           readCString(b)
-          val members = streamXids.remove(xid).map { m =>
-            removedStreamTops += xid; m.toSeq
-          }.getOrElse(Seq(xid))
+          val members = streamXids.remove(xid).map(_.toSeq).getOrElse(Seq(xid))
           members.map(x => DecodedWalEvent(walStart, "C", is_begin = false,
             is_commit = true, null, null, null, null, x, ts))
         case 'r' =>
@@ -415,9 +404,7 @@ object PgOutput {
           b.getLong(); b.getLong(); b.getLong(); b.getLong() // LSNs + both ts
           val xid = b.getInt().toLong & 0xffffffffL
           readCString(b)
-          val members = streamXids.remove(xid).map { m =>
-            removedStreamTops += xid; m.toSeq
-          }.getOrElse(Seq(xid))
+          val members = streamXids.remove(xid).map(_.toSeq).getOrElse(Seq(xid))
           members.map(x => DecodedWalEvent(walStart, "ABORT",
             is_begin = false, is_commit = false, null, null, null, null,
             x, null))
@@ -435,8 +422,7 @@ object PgOutput {
     * Registry and current-transaction id persist across the iterator.
     */
   def decodePartition(it: Iterator[(Long, Array[Byte])]): Iterator[DecodedWalEvent] = {
-    val registry = mutable.Map[Int, RelationInfo]()
-    val session = new DecodeSession(registry.get, r => registry(r.id) = r)
+    val session = new DecodeSession
     it.flatMap { case (walStart, data) => session.decode(walStart, data) }
   }
 

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * Streaming mode is `flatMapGroupsWithState` keyed by txid (see
   * [[graft.streaming.StreamingTxAssembly]]) — state-store backed, which also
   * subsumes the reference's large-transaction disk spill (P4,
-  * pgoutput.go:38-111): RocksDB state spills for free.
+  * pgoutput.go:38-111): the state store spills for free.
   */
 object TxAssembly {
 

@@ -176,7 +176,7 @@ object Wal2Json {
 
   /** Payload parse of assembled raw lines (StreamingTxAssembly.assembleRaw
     * output): full wal2json decode of `data`, emitting the
-    * SequencedWalEvent column shape Transform.normalize expects. Only data
+    * column shape Transform.normalize expects. Only data
     * rows reach here — markers were consumed by assembly.
     */
   def decodePayload(assembled: DataFrame, dataCol: String = "data"): DataFrame =

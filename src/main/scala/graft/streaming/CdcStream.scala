@@ -11,7 +11,10 @@ import graft.cdc.{Transform, Wal2Json}
   * StreamingTxAssembly.assembleRaw (commit-gated assembly + positional
   * replay tombstones, ONE stateful operator) -> Wal2Json.decodePayload ->
   * Transform.normalize -> foreachBatch OrderedSink, with
-  * checkpointLocation for recovery.
+  * checkpointLocation for recovery. pgoutput ([[pipelinePgOutput]]) puts
+  * a per-slot decoder in front of the same assembly operator. Both run on
+  * `flatMapGroupsWithState` with event-time timeouts, on whatever
+  * state-store provider the session configures.
   *
   * Semantics vs the reference (SURVEY.md §7.4):
   *  - at-least-once base + tx-granular replay suppression in assembly
@@ -28,9 +31,9 @@ object CdcStream {
 
   /** Day-or-smaller interval string ("2 minutes", "3650 days") → millis —
     * the same grammar watermark delays use, so one config string serves
-    * both the wal2json watermark and the pgoutput state TTL.
+    * as both the watermark delay and the assembly TTLs.
     */
-  private[streaming] def intervalMs(s: String): Long = {
+  private[graft] def intervalMs(s: String): Long = {
     val i = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
       org.apache.spark.unsafe.types.UTF8String.fromString(s))
     require(i.months == 0, s"month-based intervals are ambiguous in ms: $s")
@@ -74,10 +77,10 @@ object CdcStream {
     // the stranded data-row buffer that leaves behind is evicted by the
     // abandoned-tx TTL, which therefore defaults to the same window
     val sequenced = Wal2Json.decodePayload(
-        StreamingTxAssembly.assembleRaw(spark,
+        StreamingTxAssembly.assembleRaw[String](spark,
           filtered.withWatermark("action_time", dedupWatermark),
           txTtl.orElse(Some(dedupWatermark)),
-          dedupTtl = dedupWatermark).toDF())
+          dedupTtl = Some(dedupWatermark)).toDF())
       .withColumn("is_begin", lit(false))
       .withColumn("is_commit", lit(false))
     Transform.normalize(sequenced, database)
@@ -87,22 +90,17 @@ object CdcStream {
     * (cmd/cdc-handler/main.go:59-74): binary replication frames
     * (wal_start: long, data: binary[, slot]) → [[PgOutputStream.decode]]
     * (per-slot keyed registry state, mid-stream Relation replacement) →
-    * [[TxAssemblyProcessor]] commit-gated assembly → Transform.normalize.
+    * the same [[StreamingTxAssembly.assembleRaw]] operator as wal2json,
+    * buffering decoded rows ([[PgRow]]) → Transform.normalize.
     *
-    * Both stateful operators run on the arbitrary-state v2 API
-    * (transformWithState), so the query REQUIRES the RocksDB state-store
-    * provider. Unlike the wal2json path there is no header/payload parse
-    * split — pgoutput decode is a single cheap binary walk whose output
-    * maps feed assembly directly — and replay suppression rides on the
-    * sink's idempotence (batch_id overwrite / broker Msg-Id), the
-    * reference's own E7 shape for this plugin. `txTtlMs > 0` evicts
-    * abandoned transactions via state TTL — PROCESSING-TIME timers, so
-    * the query never reports idle (a CDC stream never idles in
-    * production; tests must poll the sink rather than
-    * `processAllAvailable`).
+    * Assembly gives pgoutput the same E7 replay suppression and the same
+    * event-time abandoned-tx TTL as wal2json, both from `dedupWatermark`;
+    * the watermark rides the commit markers' action_time. There is no
+    * header/payload parse split — pgoutput decode is a single cheap
+    * binary walk whose rows are the payload.
     */
   def pipelinePgOutput(spark: SparkSession, raw: DataFrame, database: String,
-      tableAllowlist: Seq[String] = Nil, txTtlMs: Long = 0L,
+      tableAllowlist: Seq[String] = Nil, dedupWatermark: String = "2 minutes",
       slotCol: Option[String] = None,
       corruptPolicy: String = "crash"): DataFrame = {
     val decoded = PgOutputStream.decode(spark, raw, slotCol = slotCol,
@@ -120,8 +118,21 @@ object CdcStream {
         col("is_begin") || col("is_commit") ||
         concat_ws(".", col("schema_name"), col("table_name"))
           .isin(tableAllowlist: _*))
-    val assembled = TxAssemblyProcessor.assemble(spark, filtered, txTtlMs)
-      .toDF()
+    // assembly's line shape, as Wal2Json.decodeHeader gives it: markers as
+    // actions, the row as payload, action_time on commit markers only
+    val lines = filtered.select(col("wal_start"),
+      struct("operation", "schema_name", "table_name", "old_values",
+        "new_values").as("data"),
+      when(col("is_begin"), "B").when(col("is_commit"), "C")
+        .when(col("operation") === "ABORT", "A")
+        .otherwise(col("operation")).as("action"),
+      col("txid"),
+      when(col("is_commit"), col("action_time")).as("action_time"))
+    val assembled = StreamingTxAssembly.assembleRaw[PgRow](spark,
+        lines.withWatermark("action_time", dedupWatermark),
+        txTtl = Some(dedupWatermark), dedupTtl = Some(dedupWatermark))
+      .select(col("wal_start"), col("data.*"), col("txid"), col("seq_in_tx"),
+        col("commit_time"), col("commit_lsn"))
       .withColumn("is_begin", lit(false))
       .withColumn("is_commit", lit(false))
     val normalized = Transform.normalize(assembled, database)
@@ -159,8 +170,8 @@ object CdcStream {
     * the decode pipeline like the reference's CDC_PLUGIN option
     * (cmd/cdc-handler/main.go:59-74): "wal2json" expects (wal_start LONG,
     * data STRING) lines, "pgoutput" expects (wal_start LONG, data BINARY)
-    * replication frames (and requires the RocksDB state-store provider);
-    * the pgoutput path's abandoned-tx TTL reuses the dedup window.
+    * replication frames; both take their replay window and abandoned-tx
+    * TTL from `dedupWatermark`.
     */
   def start(spark: SparkSession, raw: DataFrame, database: String,
       outPath: String, checkpointPath: String,
@@ -175,8 +186,8 @@ object CdcStream {
       plugin: String = "wal2json",
       sinkPartitions: Int = 0): StreamingQuery = {
     val events = plugin match {
-      case "pgoutput" => pipelinePgOutput(spark, raw, database, tableAllowlist,
-        txTtlMs = intervalMs(dedupWatermark))
+      case "pgoutput" =>
+        pipelinePgOutput(spark, raw, database, tableAllowlist, dedupWatermark)
       case "wal2json" | "" =>
         pipeline(spark, raw, database, tableAllowlist, dedupWatermark)
       case other => throw new IllegalArgumentException(

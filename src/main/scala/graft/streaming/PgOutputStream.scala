@@ -3,40 +3,50 @@ package graft.streaming
 import java.sql.Timestamp
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor,
-  TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.cdc.PgOutput
 
 /** One replication frame addressed to a slot's decoder. */
 case class PgOutputFrame(slot: String, wal_start: Long, data: Array[Byte])
 
-/** The decoder's cross-batch transaction cursor: txid + commit timestamp of
-  * the last Begin seen, carried so a transaction split across micro-batches
-  * keeps stamping its data messages (pgoutput carries xid only on Begin).
-  * `tsMicros` Long.MinValue = no Begin seen yet. `streamTop` is the open
-  * protocol-v2 segment's top-level xid (-1 between segments) — a segment
-  * can span a micro-batch boundary like a v1 transaction can.
+/** A slot decoder's cross-batch state, one value per slot: the relation
+  * registry, the transaction cursor (xid + commit timestamp of the last
+  * Begin — pgoutput carries xid only on Begin, so a transaction split
+  * across micro-batches keeps stamping its data messages), the open
+  * protocol-v2 segment's top-level xid (-1 between segments; a segment
+  * can span a batch boundary like a v1 transaction can) and, per
+  * in-flight streamed top-level tx, the (sub)xids whose changes were
+  * observed, so a StreamCommit in a later batch still fans out to every
+  * member.
   */
-case class PgTxCursor(xid: Long, tsMicros: Long, streamTop: Long = -1L)
+case class PgSlotState(
+    relations: Map[Int, PgOutput.RelationInfo],
+    xid: Long,
+    ts: Timestamp,
+    streamTop: Long,
+    streams: Map[Long, Seq[Long]])
 
-/** Per in-flight streamed (protocol v2) top-level tx: the (sub)xids whose
-  * changes were observed, persisted so StreamCommit in a later micro-batch
-  * still fans out to every member.
+/** A decoded pgoutput data row: the payload transaction assembly buffers
+  * ([[StreamingTxAssembly]]), flattened again after it.
   */
-case class StreamTxMembers(xids: Seq[Long])
+case class PgRow(
+    operation: String,
+    schema_name: String,
+    table_name: String,
+    old_values: Map[String, String],
+    new_values: Map[String, String])
 
-/** Streaming pgoutput decode on `transformWithState`, keyed by SLOT: the
-  * per-stream relation registry that the batch path keeps in a
-  * per-partition map ([[PgOutput.decodePartition]]) here lives in a
-  * MapState keyed by relation id, so it survives across micro-batches —
-  * mirroring the reference, whose registry lives for the stream's lifetime
-  * and is replaced in place by mid-stream Relation messages
-  * (internal/parser/pgoutput.go:216-230). The transaction cursor (current
-  * xid/commit-ts) rides in a ValueState for transactions that span batch
-  * boundaries.
+/** Streaming pgoutput decode on `flatMapGroupsWithState`, keyed by SLOT:
+  * the per-stream relation registry that the batch path keeps in a
+  * per-partition map ([[PgOutput.decodePartition]]) here lives in the
+  * slot's state value, so it survives across micro-batches — mirroring the
+  * reference, whose registry lives for the stream's lifetime and is
+  * replaced in place by mid-stream Relation messages
+  * (internal/parser/pgoutput.go:216-230). The same value carries the
+  * transaction cursor for transactions that span batch boundaries.
   *
   * Scale shape: ONE slot = one key = serial decode — inherent to a WAL
   * (the stream is serial; the reference decodes its slot on one goroutine
@@ -45,60 +55,23 @@ case class StreamTxMembers(xids: Seq[Long])
   * Frames are processed in wal_start order within the batch regardless of
   * arrival partitioning.
   */
-class PgOutputStreamDecoder(corruptPolicy: String = "crash")
-    extends StatefulProcessor[String, PgOutputFrame, DecodedWalEvent] {
+object PgOutputStream {
 
-  @transient private var registry: MapState[Int, PgOutput.RelationInfo] = _
-  @transient private var cursor: ValueState[PgTxCursor] = _
-  @transient private var streamReg: MapState[Long, StreamTxMembers] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    // no TTL on any state: relations, the tx cursor and the in-flight
-    // streamed-tx set are stream-lifetime metadata (a few rows per slot),
-    // not per-event state
-    registry = getHandle.getMapState[Int, PgOutput.RelationInfo]("relreg",
-      Encoders.scalaInt, Encoders.product[PgOutput.RelationInfo], TTLConfig.NONE)
-    cursor = getHandle.getValueState[PgTxCursor]("txcursor",
-      Encoders.product[PgTxCursor], TTLConfig.NONE)
-    streamReg = getHandle.getMapState[Long, StreamTxMembers]("streamreg",
-      Encoders.scalaLong, Encoders.product[StreamTxMembers], TTLConfig.NONE)
-  }
-
-  private def tsToMicros(ts: Timestamp): Long =
-    if (ts == null) Long.MinValue
-    else {
-      val i = ts.toInstant
-      Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L),
-        i.getNano / 1000L)
-    }
-
-  private def microsToTs(micros: Long): Timestamp =
-    if (micros == Long.MinValue) null
-    else Timestamp.from(java.time.Instant.ofEpochSecond(
-      Math.floorDiv(micros, 1000000L),
-      Math.floorMod(micros, 1000000L) * 1000L))
-
-  override def handleInputRows(slot: String, rows: Iterator[PgOutputFrame],
-      timers: TimerValues): Iterator[DecodedWalEvent] = {
-    // write-through overlay: Relation messages are rare, data messages
-    // look the same relation up per event — cache state-store reads for
-    // the batch and write updates straight through
-    val local = mutable.Map[Int, PgOutput.RelationInfo]()
-    val session = new PgOutput.DecodeSession(
-      id => local.get(id).orElse {
-        Option(registry.getValue(id)).map { r => local(id) = r; r }
-      },
-      r => { local(r.id) = r; registry.updateValue(r.id, r) })
-    Option(cursor.get()).foreach { c =>
-      session.currentXid = c.xid
-      session.currentTs = microsToTs(c.tsMicros)
-      session.streamTop = c.streamTop
-    }
-    // restore the in-flight streamed-tx membership (protocol v2): a
-    // handful of entries per slot — only large, still-open streamed txs
-    streamReg.iterator().foreach { case (top, members) =>
-      session.streamXids(top) =
-        scala.collection.mutable.LinkedHashSet(members.xids: _*)
+  /** Decode one slot's frames of one micro-batch. Curried so the policy is
+    * captured in the task closure.
+    */
+  def decodeSlot(corruptPolicy: String)(slot: String,
+      frames: Iterator[PgOutputFrame],
+      state: GroupState[PgSlotState]): Iterator[DecodedWalEvent] = {
+    val session = new PgOutput.DecodeSession
+    state.getOption.foreach { st =>
+      session.registry ++= st.relations
+      session.currentXid = st.xid
+      session.currentTs = st.ts
+      session.streamTop = st.streamTop
+      st.streams.foreach { case (top, xids) =>
+        session.streamXids(top) = mutable.LinkedHashSet(xids: _*)
+      }
     }
     // a slot's WAL is serial: decode in wal_start order whatever the
     // batch's arrival order was. Corrupt frames follow the parser-fatal
@@ -108,7 +81,7 @@ class PgOutputStreamDecoder(corruptPolicy: String = "crash")
     // micro-batch replays — never a bare BufferUnderflow), dlq emits a
     // CORRUPT marker row the pipeline routes to the dead-letter subject,
     // skip drops the frame.
-    val out = rows.toArray.sortBy(_.wal_start).flatMap { f =>
+    val out = frames.toArray.sortBy(_.wal_start).flatMap { f =>
       try session.decode(f.wal_start, f.data)
       catch {
         case e @ (_: PgOutput.CorruptFrameException | _: IllegalStateException)
@@ -124,27 +97,17 @@ class PgOutputStreamDecoder(corruptPolicy: String = "crash")
             session.currentXid, session.currentTs))
       }
     }
-    cursor.update(PgTxCursor(session.currentXid, tsToMicros(session.currentTs),
-      session.streamTop))
-    // write back the streamed-tx membership delta: commits/full aborts
-    // delete their entry, everything still in flight is (re)written
-    session.removedStreamTops.foreach(streamReg.removeKey)
-    session.streamXids.foreach { case (top, xids) =>
-      streamReg.updateValue(top, StreamTxMembers(xids.toSeq))
-    }
+    state.update(PgSlotState(session.registry.toMap, session.currentXid,
+      session.currentTs, session.streamTop,
+      session.streamXids.map { case (top, xids) => top -> xids.toSeq }.toMap))
     out.iterator
   }
-}
-
-object PgOutputStream {
 
   /** Streaming analog of [[PgOutput.decode]]: (wal_start LONG, data
     * BINARY[, slot]) frames → DecodedWalEvent rows, registry + tx cursor in
     * keyed state. Without `slotCol` every frame belongs to one implicit
     * slot ("slot0") — the single-replication-connection shape of the
     * reference; pass a slot column to fan out multiple slots in one query.
-    *
-    * Requires the RocksDB state-store provider (transformWithState).
     *
     * `corruptPolicy` routes structurally invalid frames mid-stream (the
     * reference's parser-fatal failure policy, parser.go:33-38): "crash"
@@ -165,8 +128,7 @@ object PgOutputStream {
         col(dataCol).as("data"))
       .as[PgOutputFrame]
       .groupByKey(_.slot)
-      .transformWithState(new PgOutputStreamDecoder(corruptPolicy),
-        TimeMode.None(), OutputMode.Append(),
-        Encoders.product[DecodedWalEvent])
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+        decodeSlot(corruptPolicy))
   }
 }

@@ -1,13 +1,13 @@
 package graft.streaming
 
 import scala.annotation.tailrec
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryIdleEvent, QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
 /** Reliability surface: fatal-vs-transient error classification, retry with
-  * capped exponential backoff, and restart policy (reference S4/E4:
+  * capped exponential backoff, and the restart policy that
+  * [[graft.tools.Main.Running]] supervises with (reference S4/E4:
   * internal/wal/reader.go:233-293, 533-592; internal/engine/engine.go:223-226,
   * 698-704).
   */
@@ -119,28 +119,5 @@ object Reliability {
     def snapshot: Map[String, Long] = Map(
       "batches" -> batches.get, "input_rows" -> inputRows.get,
       "starts" -> starts.get, "terminations" -> terminations.get)
-  }
-
-  /** Supervise a streaming query with the reference's restart policy: on
-    * transient failure restart (with reconnect backoff) from the same
-    * checkpoint; on fatal error or clean stop, return. Returns the number
-    * of restarts performed.
-    */
-  def superviseRestarts(spark: SparkSession, maxRestarts: Int,
-      sleep: Long => Unit = Thread.sleep)(
-      start: () => org.apache.spark.sql.streaming.StreamingQuery): Int = {
-    var restarts = 0
-    var done = false
-    while (!done) {
-      val q = start()
-      try { q.awaitTermination(); done = true }
-      catch {
-        case e: Throwable if !isFatal(e) && restarts < maxRestarts =>
-          restarts += 1
-          sleep(reconnectBackoffMillis(restarts))
-        case e: Throwable => throw e
-      }
-    }
-    restarts
   }
 }

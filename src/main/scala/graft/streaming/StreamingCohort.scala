@@ -39,8 +39,8 @@ class CohortProcessor(zoneId: String = "UTC", ttlMs: Long = 0L)
     // of true inactivity, never mid-life for an active entity. A
     // re-entering entity is RE-COHORTED at its next event with a cleared
     // weeksSeen (its prior hits stand — append-only output), bounding
-    // state for unbounded visitor populations. Same knob shape as
-    // TxAssemblyProcessor, default NONE.
+    // state for unbounded visitor populations. Same TTLConfig knob as
+    // StreamingFunnel and StreamingTransitions, default NONE.
     val ttl = if (ttlMs > 0) TTLConfig(java.time.Duration.ofMillis(ttlMs))
       else TTLConfig.NONE
     cohortDay = getHandle.getValueState[Long]("cohortDay",

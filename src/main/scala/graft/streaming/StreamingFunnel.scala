@@ -39,8 +39,9 @@ class FunnelProcessor(stages: Seq[String], ttlMs: Long = 0L)
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     // ttlMs > 0 bounds state for churned entities (visitors who never
     // return): an expired entity re-entering restarts at stage 1 — the
-    // same knob shape as TxAssemblyProcessor. Default NONE preserves the
-    // exact-forever contract for bounded entity populations.
+    // same TTLConfig knob as StreamingCohort and StreamingTransitions.
+    // Default NONE preserves the exact-forever contract for bounded
+    // entity populations.
     //
     // TTL clock boundary: handleInputRows rewrites `reached` on EVERY
     // row that reaches the processor — including stage-typed events

@@ -29,7 +29,8 @@ class TransitionProcessor(ttlMs: Long = 0L)
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     // ttlMs > 0 expires churned entities' last-event state: a re-entering
     // entity starts a fresh path (its first new event emits no edge) —
-    // same knob shape as TxAssemblyProcessor, default NONE.
+    // same TTLConfig knob as StreamingFunnel and StreamingCohort,
+    // default NONE.
     val ttl = if (ttlMs > 0) TTLConfig(java.time.Duration.ofMillis(ttlMs))
       else TTLConfig.NONE
     last = getHandle.getValueState[(String, Long)]("last",

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -17,38 +18,24 @@ case class DecodedWalEvent(
     txid: Long,
     action_time: Timestamp)
 
-/** Assembled event with commit metadata + deterministic ordinal. */
-case class SequencedWalEvent(
-    wal_start: Long,
-    operation: String,
-    schema_name: String,
-    table_name: String,
-    old_values: Map[String, String],
-    new_values: Map[String, String],
-    txid: Long,
-    seq_in_tx: Long,
-    commit_time: Timestamp,
-    commit_lsn: Long)
-
-/** Per-transaction buffer state (reference txBuffer,
-  * internal/parser/pgoutput.go:28-36).
+/** One line entering transaction assembly: its WAL position, the payload
+  * carried through state untouched, and the header fields assembly reads.
+  * `action` is "B"/"C" for Begin/Commit, "A" for an abort marker, anything
+  * else for a data line; `action_time` is set on commit markers only. The
+  * payload is the raw wal2json document (`String`) or a decoded pgoutput
+  * row ([[PgRow]]).
   */
-case class TxState(events: List[DecodedWalEvent])
-
-/** Header-parsed WAL line: action/txid/time known, payload still raw JSON
-  * (Wal2Json.decodeHeader output shape).
-  */
-case class RawWalLine(
+case class TxLine[P](
     wal_start: Long,
-    data: String,
+    data: P,
     action: String,
     txid: Long,
     action_time: Timestamp)
 
-/** Per-transaction buffer of raw (wal_start, document) lines; after the
-  * commit emits, the state stays behind as a tombstone carrying the
-  * commit's event time AND WAL position, so a replayed delivery of the
-  * same transaction (source reconnect replaying unacked WAL — the
+/** Per-transaction buffer of (wal_start, payload) lines; after the commit
+  * emits, the state stays behind as a tombstone carrying the commit's
+  * event time AND WAL position, so a replayed delivery of the same
+  * transaction (source reconnect replaying unacked WAL — the
   * at-least-once case) emits nothing. Suppression is POSITIONAL, not
   * txid-based: only lines at or below the committed position are
   * replays; higher positions under the same txid are a genuinely new
@@ -56,9 +43,10 @@ case class RawWalLine(
   * likewise keys event identity on lsn:txid, never txid alone). The
   * tombstone is evicted when the WATERMARK passes commit_time + dedup
   * window — exactly dropDuplicatesWithinWatermark's retention rule, the
-  * DUPLICATE_WINDOW analog.
+  * DUPLICATE_WINDOW analog. Field names and types are the checkpointed
+  * state layout: keep them.
   */
-case class RawTxState(lines: List[(Long, String)],
+case class TxBuffer[P](lines: List[(Long, P)],
     committedAtMs: Option[Long] = None,
     // sentinel MinValue = nothing committed: 0 is a VALID carrier position
     // (fileIndex 0, line 0) and must not be swallowed by the replay filter
@@ -69,12 +57,13 @@ case class RawTxState(lines: List[(Long, String)],
     // clock rather than evict a possibly-live buffer
     provisionalTimeout: Boolean = false)
 
-/** Assembled raw line with commit metadata + deterministic ordinal; the
-  * payload parse happens downstream (Wal2Json.decodePayload).
+/** Assembled line with commit metadata + deterministic ordinal; the
+  * payload is unpacked downstream (Wal2Json.decodePayload, or a flatten of
+  * the pgoutput row).
   */
-case class SequencedRawLine(
+case class SequencedLine[P](
     wal_start: Long,
-    data: String,
+    data: P,
     txid: Long,
     seq_in_tx: Long,
     commit_time: Timestamp,
@@ -82,86 +71,29 @@ case class SequencedRawLine(
 
 /** Streaming transaction assembly (reference P3+P4:
   * internal/parser/pgoutput.go:247-304, 467-531): buffer each transaction's
-  * events in keyed state until its Commit marker arrives, then emit every
-  * event stamped with commitTime/commitLSN and a WAL-order `seq_in_tx`.
+  * lines in keyed state until its Commit marker arrives, then emit every
+  * line stamped with commitTime/commitLSN and a WAL-order `seq_in_tx`. The
+  * one operator both plugins run: wal2json buffers its raw documents,
+  * pgoutput its decoded rows.
   *
   * Spark-first restatement:
   *  - `flatMapGroupsWithState` keyed by txid — state lives in the state
   *    store, so the reference's hand-rolled 100k-event disk spill (P4,
-  *    pgoutput.go:38-111) is subsumed by the store's own spill (RocksDB
-  *    provider in production).
-  *  - abandoned transactions (crash before commit) are evicted by a
-  *    processing-time timeout instead of growing state forever — the
+  *    pgoutput.go:38-111) is subsumed by the store, on whatever provider
+  *    the session configures.
+  *  - abandoned transactions (crash before commit) are evicted by an
+  *    event-time timeout instead of growing state forever — the
   *    100 TB-scale bound the reference gets from MaxTxBufferSize.
   */
 object StreamingTxAssembly {
 
-  /** Curried so the TTL is captured in the task closure (an object field
-    * would not ship to executor JVMs). Empty TTL = no timeout registration.
-    */
-  def assembleTx(txTimeout: String)(txid: Long, it: Iterator[DecodedWalEvent],
-      state: GroupState[TxState]): Iterator[SequencedWalEvent] = {
-    if (state.hasTimedOut) {
-      // abandoned tx: drop buffered events (the reference replays them from
-      // the WAL on reconnect — at-least-once, never at-most-once loss of a
-      // *committed* tx, because commit markers always flush synchronously).
-      state.remove()
-      Iterator.empty
-    } else {
-      val prior = state.getOption.map(_.events).getOrElse(Nil)
-      val arrived = it.toList
-      // protocol v2 StreamAbort: the marker retracts the whole
-      // (sub)transaction — drop the buffer and everything arriving with it
-      if (arrived.exists(_.operation == "ABORT")) {
-        state.remove()
-        return Iterator.empty
-      }
-      val commit = arrived.find(_.is_commit)
-      val data = prior ++ arrived.filterNot(e => e.is_begin || e.is_commit)
-      commit match {
-        case Some(c) =>
-          state.remove()
-          data.sortBy(_.wal_start).iterator.zipWithIndex.map { case (e, i) =>
-            SequencedWalEvent(e.wal_start, e.operation, e.schema_name,
-              e.table_name, e.old_values, e.new_values, txid,
-              i.toLong, c.action_time, c.wal_start)
-          }
-        case None =>
-          state.update(TxState(data))
-          if (txTimeout.nonEmpty) state.setTimeoutDuration(txTimeout)
-          Iterator.empty
-      }
-    }
-  }
-
-  /** Apply stateful assembly to a streaming Dataset of decoded WAL rows.
-    * @param txTtl processing-time TTL for abandoned (never-committed)
-    *              transactions; None disables the timeout entirely.
-    */
-  def assemble(spark: SparkSession, decoded: DataFrame,
-      txTtl: Option[String] = None): Dataset[SequencedWalEvent] = {
-    import spark.implicits._
-    val timeoutConf = if (txTtl.isEmpty) GroupStateTimeout.NoTimeout
-      else GroupStateTimeout.ProcessingTimeTimeout
-    decoded.select("wal_start", "operation", "is_begin", "is_commit",
-        "schema_name", "table_name", "old_values", "new_values", "txid",
-        "action_time")
-      .as[DecodedWalEvent]
-      .groupByKey(_.txid)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
-        assembleTx(txTtl.getOrElse("")))
-  }
-
-  /** Same commit-gated assembly over HEADER-parsed lines: only (action,
-    * txid, action_time) are known pre-assembly and the raw JSON document
-    * rides through state as one string. This is the production pipeline's
-    * shape ([[CdcStream.pipeline]]): the expensive payload parse
-    * (columns/identity arrays → maps) runs AFTER assembly, on data rows
-    * only — begin/commit markers never pay it — and the state encoder
-    * moves one string per buffered event instead of two maps, so both the
-    * per-batch encoder work and the state-store bytes shrink. Same
-    * emission semantics as [[assembleTx]] (commit-gated, WAL-order seq,
-    * TTL eviction of abandoned txs).
+  /** Commit-gated assembly of one txid's lines. Only (action, txid,
+    * action_time) are read; the payload rides through state as-is. For
+    * wal2json ([[CdcStream.pipeline]]) that is the raw JSON document, so
+    * the expensive payload parse (columns/identity arrays → maps) runs
+    * AFTER assembly, on data rows only — begin/commit markers never pay
+    * it. For pgoutput ([[CdcStream.pipelinePgOutput]]) it is the decoded
+    * row.
     *
     * E7 replay suppression lives HERE, at transaction granularity: after
     * the commit emits, a tombstone (carrying the commit's event time)
@@ -170,7 +102,11 @@ object StreamingTxAssembly {
     * reference's semantics (slot replay after reconnect + Nats-Msg-Id
     * sink dedup) without a second stateful operator shuffling the whole
     * stream on event_id. Duplicate lines WITHIN a buffered tx collapse by
-    * wal_start at emission (a WAL position never carries two events).
+    * (wal_start, payload) at emission: a pgoutput TRUNCATE frame carries
+    * one row per relation at the same position.
+    *
+    * An abort marker ("A": protocol v2 StreamAbort, RollbackPrepared)
+    * retracts the buffered lines at or below its own position.
     *
     * Timeouts are EVENT-TIME (the stream must carry a watermark on
     * action_time): the tombstone evicts when the watermark passes
@@ -180,9 +116,9 @@ object StreamingTxAssembly {
     * Processing-time timeouts would busy-loop an ASAP-triggered query
     * (every armed timeout schedules another no-data batch).
     */
-  def assembleRawTx(txTtlMs: Long, dedupTtlMs: Long)(
-      txid: Long, it: Iterator[RawWalLine],
-      state: GroupState[RawTxState]): Iterator[SequencedRawLine] = {
+  def assembleRawTx[P](txTtlMs: Long, dedupTtlMs: Long)(
+      txid: Long, it: Iterator[TxLine[P]],
+      state: GroupState[TxBuffer[P]]): Iterator[SequencedLine[P]] = {
     // setTimeoutTimestamp rejects timestamps at or behind the watermark —
     // clamp (a tombstone whose window already passed evicts next batch)
     def armAt(ms: Long): Unit =
@@ -199,7 +135,7 @@ object StreamingTxAssembly {
       } else state.remove()
       Iterator.empty
     } else {
-      val st = state.getOption.getOrElse(RawTxState(Nil))
+      val st = state.getOption.getOrElse(TxBuffer[P](Nil))
       // positional replay drop: anything at or below the last committed
       // position of this txid is a redelivery; higher positions are the
       // NEXT transaction under a recycled txid. Arrivals are processed in
@@ -210,15 +146,18 @@ object StreamingTxAssembly {
       var buf = st.lines
       var tombAtMs = st.committedAtMs
       var tombLsn = st.committedLsn
-      val out = List.newBuilder[SequencedRawLine]
+      val out = List.newBuilder[SequencedLine[P]]
       arrived.foreach { l =>
         l.action match {
           case "B" => ()
+          case "A" => buf = buf.filter(_._1 > l.wal_start)
           case "C" =>
             val (emit, beyond) = buf.partition(_._1 <= l.wal_start)
-            emit.sortBy(_._1).distinctBy(_._1).zipWithIndex.foreach {
+            // `buf` is newest-first: reverse so lines sharing a position
+            // keep their arrival order
+            emit.reverse.sortBy(_._1).distinct.zipWithIndex.foreach {
               case ((ws, d), i) =>
-                out += SequencedRawLine(ws, d, txid, i.toLong, l.action_time, l.wal_start)
+                out += SequencedLine(ws, d, txid, i.toLong, l.action_time, l.wal_start)
             }
             buf = beyond
             // a commit with an unparseable/missing timestamp still emits
@@ -253,7 +192,7 @@ object StreamingTxAssembly {
         val provisional =
           buf.nonEmpty && txTtlMs > 0 && state.getCurrentWatermarkMs() <= 0
         state.update(
-          RawTxState(buf, if (tombstone) tombAtMs else None, tombLsn, provisional))
+          TxBuffer(buf, if (tombstone) tombAtMs else None, tombLsn, provisional))
         if (buf.nonEmpty) {
           if (txTtlMs > 0) {
             if (provisional) armAt(1L) // clamps to wm+1
@@ -263,54 +202,35 @@ object StreamingTxAssembly {
           armAt(tombAtMs.getOrElse(state.getCurrentWatermarkMs()) + dedupTtlMs)
         }
       } else if (state.exists) {
-        // suppression disabled (dedupTtl=0) and nothing buffered
+        // suppression disabled (no dedupTtl) and nothing buffered
         state.remove()
       }
       out.result().iterator
     }
   }
 
-  /** "N unit" duration → millis (unit: milliseconds/seconds/minutes/hours/
-    * days, singular or plural) — the subset of Spark's interval syntax the
-    * TTL surfaces use.
-    */
-  private[graft] def durationMs(s: String): Long = s.trim match {
-    case "" => 0L
-    case d =>
-      val parts = d.toLowerCase.split("\\s+")
-      require(parts.length == 2, s"expected '<n> <unit>', got '$d'")
-      val n = parts(0).toLong
-      val unit = parts(1).stripSuffix("s") match {
-        case "millisecond" => 1L
-        case "second" => 1000L
-        case "minute" => 60000L
-        case "hour" => 3600000L
-        case "day" => 86400000L
-        case u => throw new IllegalArgumentException(s"unknown duration unit '$u'")
-      }
-      n * unit
-  }
-
-  /** Apply raw-line stateful assembly ([[assembleRawTx]]) to a streaming
-    * DataFrame of header-parsed WAL rows (Wal2Json.decodeHeader output).
-    * With either TTL set, `header` MUST carry a watermark on action_time
-    * (event-time timeouts).
+  /** Apply [[assembleRawTx]] to a streaming DataFrame of [[TxLine]]
+    * columns (wal_start, data, action, txid, action_time). With either TTL
+    * set, `lines` MUST carry a watermark on action_time (event-time
+    * timeouts). TTLs are interval strings ([[CdcStream.intervalMs]]).
+    * @param txTtl    abandoned (never-committed) tx eviction; None = never.
     * @param dedupTtl how long a committed tx's tombstone suppresses
     *                 replayed deliveries past its commit_time (the
-    *                 DUPLICATE_WINDOW analog); empty = no suppression
+    *                 DUPLICATE_WINDOW analog); None = no suppression
     *                 (state removed at commit).
     */
-  def assembleRaw(spark: SparkSession, header: DataFrame,
-      txTtl: Option[String] = None, dedupTtl: String = ""): Dataset[SequencedRawLine] = {
+  def assembleRaw[P: TypeTag](spark: SparkSession, lines: DataFrame,
+      txTtl: Option[String] = None,
+      dedupTtl: Option[String] = None): Dataset[SequencedLine[P]] = {
     import spark.implicits._
-    val txMs = durationMs(txTtl.getOrElse(""))
-    val dedupMs = durationMs(dedupTtl)
+    val txMs = txTtl.fold(0L)(CdcStream.intervalMs)
+    val dedupMs = dedupTtl.fold(0L)(CdcStream.intervalMs)
     val timeoutConf = if (txMs == 0 && dedupMs == 0) GroupStateTimeout.NoTimeout
       else GroupStateTimeout.EventTimeTimeout
-    header.select("wal_start", "data", "action", "txid", "action_time")
-      .as[RawWalLine]
+    lines.select("wal_start", "data", "action", "txid", "action_time")
+      .as[TxLine[P]]
       .groupByKey(_.txid)
       .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
-        assembleRawTx(txMs, dedupMs))
+        assembleRawTx[P](txMs, dedupMs))
   }
 }

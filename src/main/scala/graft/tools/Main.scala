@@ -43,6 +43,13 @@ import graft.streaming.{CdcMetrics, CdcStream, HealthServer}
   * first batch; pass `--conf spark.sql.shuffle.partitions=N` before the
   * first start to choose another.
   *
+  * State: both plugins run their keyed state (pgoutput's per-slot decoder,
+  * the shared transaction assembly) on `flatMapGroupsWithState`, so Main
+  * sets no state-store provider; pass `--conf
+  * spark.sql.streaming.stateStore.providerClass=...` to choose one. Both
+  * suppress replayed transactions within `DUPLICATE_WINDOW` and evict
+  * abandoned ones by event time.
+  *
   * Local files: `file:` checkpoints, state stores and the parquet sink go
   * through [[LocalFs]]'s fork-free classes unless Spark's conf names
   * other `fs.file.impl` / `fs.AbstractFileSystem.file.impl` classes.
@@ -334,7 +341,7 @@ object Main {
             case _ => cfg.plugin match {
               case "pgoutput" => CdcStream.pipelinePgOutput(spark,
                 rawStream(spark, cfg, env), cfg.database, cfg.tableFilters,
-                txTtlMs = cfg.duplicateWindow.toMillis)
+                s"${cfg.duplicateWindow.toSeconds} seconds")
               case _ => CdcStream.pipeline(spark, rawStream(spark, cfg, env),
                 cfg.database, cfg.tableFilters,
                 s"${cfg.duplicateWindow.toSeconds} seconds")
@@ -395,17 +402,12 @@ object Main {
   }
 
   def main(args: Array[String]): Unit = {
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("graft-cdc")
       .config("spark.sql.session.timeZone", "UTC")
       .config(LocalFs.sessionConfs())
-    // the pgoutput path's keyed state (relation registry + tx assembly)
-    // runs under transformWithState, which requires the RocksDB provider
-    val spark = (if (sys.env.get("CDC_PLUGIN").contains("pgoutput"))
-      builder.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    else builder).getOrCreate()
+      .getOrCreate()
     spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions(
       spark.sparkContext.getConf, spark.sparkContext.defaultParallelism))
     val running = start(spark, sys.env)

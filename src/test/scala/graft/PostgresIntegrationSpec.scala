@@ -238,9 +238,6 @@ class PostgresIntegrationSpec extends SparkSpec {
       pg.exec(s"SELECT pg_create_logical_replication_slot('$slot', 'pgoutput')")
       pg.exec("BEGIN; INSERT INTO graft_it_orders VALUES (10, 99.5), (11, 1.25); COMMIT")
     }
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val out = java.nio.file.Files.createTempDirectory("it_pgo_out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("it_pgo_ckpt").toString
     val raw = spark.readStream.format("graft.sources.CopyBothSource")
@@ -262,10 +259,6 @@ class PostgresIntegrationSpec extends SparkSpec {
         .map(_.getMap[String, String](0)("id")).toSet == Set("10", "11"))
     } finally {
       q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
       withAdmin { pg =>
         pg.execIgnoring(s"SELECT pg_drop_replication_slot('$slot')")
         pg.execIgnoring(s"DROP PUBLICATION IF EXISTS $pub")
@@ -298,9 +291,6 @@ class PostgresIntegrationSpec extends SparkSpec {
       pg.exec("ALTER SYSTEM SET logical_decoding_work_mem = '64kB'")
       pg.exec("SELECT pg_reload_conf()")
     }
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val out = java.nio.file.Files.createTempDirectory("it_pgv2_out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("it_pgv2_ckpt").toString
     val raw = spark.readStream.format("graft.sources.CopyBothSource")
@@ -343,10 +333,6 @@ class PostgresIntegrationSpec extends SparkSpec {
         s"stream_txns must count the spilled tx, got $streamed")
     } finally {
       q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
       withAdmin { pg =>
         pg.execIgnoring("ALTER SYSTEM RESET logical_decoding_work_mem")
         pg.execIgnoring("SELECT pg_reload_conf()")
@@ -383,10 +369,6 @@ class PostgresIntegrationSpec extends SparkSpec {
     }
     assume(canTwoPhase, "server lacks two_phase slots or " +
       "max_prepared_transactions=0 (restart-only GUC)")
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val out = java.nio.file.Files.createTempDirectory("it_2pc_out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("it_2pc_ckpt").toString
     val raw = spark.readStream.format("graft.sources.CopyBothSource")
@@ -437,12 +419,6 @@ class PostgresIntegrationSpec extends SparkSpec {
         s"ROLLBACK PREPARED rows must never land: ${sinkIds()}")
     } finally {
       q.stop()
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
       withAdmin { pg =>
         pg.execIgnoring("ROLLBACK PREPARED 'graft_2pc_a'")
         pg.execIgnoring("ROLLBACK PREPARED 'graft_2pc_b'")
@@ -472,11 +448,6 @@ class PostgresIntegrationSpec extends SparkSpec {
       parseLsn(pg.queryFirst("SELECT confirmed_flush_lsn FROM " +
         s"pg_replication_slots WHERE slot_name = '$slot'").get)
     }
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    if (!useW2j)
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val out = java.nio.file.Files.createTempDirectory("it_fb_out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("it_fb_ckpt").toString
     val raw0 = spark.readStream.format("graft.sources.CopyBothSource")
@@ -509,12 +480,6 @@ class PostgresIntegrationSpec extends SparkSpec {
         s"creation point ${PgWireProtocol.lsnHex(atCreation)}")
     } finally {
       q.stop()
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => if (!useW2j)
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
       withAdmin { pg =>
         pg.execIgnoring(s"SELECT pg_drop_replication_slot('$slot')")
         pg.execIgnoring(s"DROP PUBLICATION IF EXISTS $pub")

@@ -417,11 +417,12 @@ class SocketReplicationWireSpec extends AnyFunSuite {
   test("supervised restart rides out a transient socket error; fatal auth never restarts") {
     // S4 end-to-end over the REAL transport: the server kills the first
     // session with a TRANSIENT SQLSTATE (57P01 admin shutdown) before
-    // delivering anything; Reliability.superviseRestarts classifies it
-    // restartable (via the socket transport's "(SQLSTATE)" message
-    // suffix), restarts from the same checkpoint, and the second session
-    // re-delivers the unconfirmed WAL — the reference's reconnect loop
-    // (reader.go:574-592) as a streaming-query supervisor.
+    // delivering anything; Main's supervisor (Running.await) classifies
+    // it restartable (via the socket transport's "(SQLSTATE)" message
+    // suffix), restarts from the same checkpoint after the reconnect
+    // backoff, and the second session re-delivers the unconfirmed WAL —
+    // the reference's reconnect loop (reader.go:574-592) as a
+    // streaming-query supervisor.
     val spark = TestSession.spark
     import org.apache.spark.sql.streaming.Trigger
     val srv = new InProcessPgReplicationServer
@@ -451,8 +452,8 @@ class SocketReplicationWireSpec extends AnyFunSuite {
         watcher.setDaemon(true); watcher.start()
         q
       }
-      val restarts = graft.streaming.Reliability.superviseRestarts(
-        spark, maxRestarts = 3, sleep = _ => ())(() => startQuery())
+      val restarts = new graft.tools.Main.Running(() => startQuery(),
+        new graft.streaming.CdcMetrics.Registry, maxRestarts = 3).await()
       assert(restarts == 1 && starts == 2,
         s"one transient failure, one successful restart (restarts=$restarts starts=$starts)")
       assert(spark.read.parquet(out).count() == 2,
@@ -466,8 +467,7 @@ class SocketReplicationWireSpec extends AnyFunSuite {
         val ckF = java.nio.file.Files.createTempDirectory("sock_fat_ck").toString
         var startsF = 0
         val e = intercept[Throwable] {
-          graft.streaming.Reliability.superviseRestarts(
-            spark, maxRestarts = 3, sleep = _ => ()) { () =>
+          new graft.tools.Main.Running(() => {
             startsF += 1
             spark.readStream.format("graft.sources.CopyBothSource")
               .option("host", "127.0.0.1").option("port", srvF.port.toString)
@@ -475,7 +475,7 @@ class SocketReplicationWireSpec extends AnyFunSuite {
               .writeStream.format("parquet").option("path", outF)
               .option("checkpointLocation", ckF)
               .trigger(Trigger.ProcessingTime("50 milliseconds")).start()
-          }
+          }, new graft.streaming.CdcMetrics.Registry, maxRestarts = 3).await()
         }
         def chain(t: Throwable): List[String] =
           if (t == null) Nil else Option(t.getMessage).toList ::: chain(t.getCause)
@@ -491,9 +491,6 @@ class SocketReplicationWireSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.cdc.PgWire
     val srv = new InProcessPgReplicationServer
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val t0 = 1705314600123456L
       srv.inner.deliverBytes(10L,
@@ -514,29 +511,14 @@ class SocketReplicationWireSpec extends AnyFunSuite {
       val q = graft.streaming.CdcStream.start(spark, raw, "testdb", out, ckpt,
         trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("50 milliseconds"),
         plugin = "pgoutput")
-      // the abandoned-tx TTL arms PROCESSING-TIME timers: the query never
-      // reports idle, so poll the sink instead of processAllAvailable
-      try {
-        val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-        def written() =
-          try spark.read.parquet(out).count() catch { case _: Exception => 0L }
-        while (written() < 2 && q.exception.isEmpty &&
-            System.nanoTime() < deadline) Thread.sleep(100)
-        q.exception.foreach(throw _)
-      } finally q.stop()
+      try q.processAllAvailable() finally q.stop()
       val events = spark.read.parquet(out)
       assert(events.count() == 2, "only the committed pgoutput tx emits")
       assert(events.select("txid").as[Long].collect().toSet == Set(7L))
       assert(events.select("after").collect()
         .map(_.getMap[String, String](0)("name")).toSet == Set("alice", "bob"),
         "binary tuple values decode through the socket unchanged")
-    } finally {
-      srv.close()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally srv.close()
   }
 
   test("full CDC pipeline over the socket transport via DSv2 host/port options") {

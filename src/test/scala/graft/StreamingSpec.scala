@@ -50,50 +50,42 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("transformWithState tx assembly matches fMGWS semantics (commit-gated, ordered)") {
+  test("shared tx assembly over decoded-row payloads: commit-gated, ordered") {
+    // cross-batch buffering, WAL order restored within a batch, the commit
+    // LSN stamp, and an uncommitted tx that never emits
     implicit val sctx = spark.sqlContext
-    // the v2 state API only runs on the RocksDB provider
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[graft.streaming.DecodedWalEvent]
-    val q = graft.streaming.TxAssemblyProcessor.assemble(spark, input.toDF())
+    import graft.streaming.{PgRow, StreamingTxAssembly, TxLine}
+    val input = MemoryStream[TxLine[PgRow]]
+    val q = StreamingTxAssembly.assembleRaw[PgRow](spark, input.toDF())
       .writeStream.outputMode("append")
-      .format("memory").queryName("tws_out").start()
-    def ev(ws: Long, op: String, xid: Long, begin: Boolean = false, commit: Boolean = false) =
-      graft.streaming.DecodedWalEvent(ws, op, begin, commit, "public", "users",
-        Map.empty, Map("id" -> ws.toString), xid,
-        java.sql.Timestamp.valueOf("2024-01-15 10:30:00"))
+      .format("memory").queryName("rows_assembly_out").start()
+    def ev(ws: Long, action: String, xid: Long) = TxLine(ws,
+      PgRow("INSERT", "public", "users", Map.empty, Map("id" -> ws.toString)),
+      action, xid,
+      if (action == "C") java.sql.Timestamp.valueOf("2024-01-15 10:30:00") else null)
     try {
-      // tx 7 spans two micro-batches (ListState appends without a commit);
-      // tx 8 never commits
-      input.addData(ev(1, "B", 7, begin = true), ev(3, "I", 7), ev(2, "I", 7),
-        ev(10, "B", 8, begin = true), ev(11, "I", 8))
+      // tx 7 spans two micro-batches; tx 8 never commits
+      input.addData(ev(1, "B", 7), ev(3, "INSERT", 7), ev(2, "INSERT", 7),
+        ev(10, "B", 8), ev(11, "INSERT", 8))
       q.processAllAvailable()
-      assert(spark.table("tws_out").count() == 0, "no commit -> no emit")
-      input.addData(ev(4, "U", 7), ev(5, "C", 7, commit = true))
+      assert(spark.table("rows_assembly_out").count() == 0, "no commit -> no emit")
+      input.addData(ev(4, "UPDATE", 7), ev(5, "C", 7))
       q.processAllAvailable()
-      val out = spark.table("tws_out").orderBy($"seq_in_tx")
-        .select($"wal_start", $"seq_in_tx", $"commit_lsn", $"txid")
-        .as[(Long, Long, Long, Long)].collect().toList
-      // WAL order restored across batches (3 arrived before 2), commit LSN stamped
-      assert(out == List((2L, 0L, 5L, 7L), (3L, 1L, 5L, 7L), (4L, 2L, 5L, 7L)))
-      assert(spark.table("tws_out").filter($"txid" === 8).count() == 0)
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+      val out = spark.table("rows_assembly_out").orderBy($"seq_in_tx")
+        .select($"wal_start", $"seq_in_tx", $"commit_lsn", $"txid",
+          $"data.new_values".getItem("id"))
+        .as[(Long, Long, Long, Long, String)].collect().toList
+      // WAL order restored (3 arrived before 2), commit LSN stamped, the
+      // buffered payload carried through state unchanged
+      assert(out == List((2L, 0L, 5L, 7L, "2"), (3L, 1L, 5L, 7L, "3"),
+        (4L, 2L, 5L, 7L, "4")))
+      assert(spark.table("rows_assembly_out").filter($"txid" === 8).count() == 0)
+    } finally q.stop()
   }
 
   test("pgoutput streaming pipeline: keyed registry survives batches, mid-stream schema change, cross-batch tx") {
     implicit val sctx = spark.sqlContext
     import graft.cdc.PgWire
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val t0 = 1705314600123456L
     val input = MemoryStream[(Long, Array[Byte])]
     val events = CdcStream.pipelinePgOutput(spark,
@@ -145,22 +137,13 @@ class StreamingSpec extends SparkSpec {
         "the replaced relation schema applies to events after it")
       assert(out(3)._2("id") == "4" && out(3)._2("email") == null)
       assert(out.forall(e => e._3 == "INSERT" && e._4 == "cdc.testdb.public.users"))
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
   }
 
   test("pgoutput v2: a streamed tx spans micro-batches — segment bracket " +
       "and membership persist; StreamAbort retracts, StreamCommit releases") {
     implicit val sctx = spark.sqlContext
     import graft.cdc.PgWire
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val t0 = 1705314600123456L
     val input = MemoryStream[(Long, Array[Byte])]
     val events = CdcStream.pipelinePgOutput(spark,
@@ -201,22 +184,13 @@ class StreamingSpec extends SparkSpec {
       assert(out.map(_._2("name")).toList == List("early", "late"),
         "both segments' rows release on StreamCommit, WAL-ordered")
       assert(out.forall(_._3 == "INSERT"))
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
   }
 
   test("pgoutput two-phase: a prepared tx stays pending across micro-" +
       "batches until CommitPrepared; RollbackPrepared drops it") {
     implicit val sctx = spark.sqlContext
     import graft.cdc.PgWire
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val t0 = 1705314600123456L
     val input = MemoryStream[(Long, Array[Byte])]
     val events = CdcStream.pipelinePgOutput(spark,
@@ -253,13 +227,66 @@ class StreamingSpec extends SparkSpec {
       assert(out == List((31L, "held"), (33L, "plain")),
         s"CommitPrepared releases the cross-batch held tx, " +
           s"RollbackPrepared drops its buffer: $out")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
+  }
+
+  test("pgoutput multi-relation TRUNCATE: one DDL row per relation survives assembly") {
+    // one Truncate frame names two relations, so decode emits two DDL
+    // rows at the SAME wal_start — within-tx dedup must not collapse them
+    implicit val sctx = spark.sqlContext
+    import graft.cdc.PgWire
+    val t0 = 1705314600123456L
+    val input = MemoryStream[(Long, Array[Byte])]
+    val q = CdcStream.pipelinePgOutput(spark,
+        input.toDF().toDF("wal_start", "data"), "testdb")
+      .writeStream.outputMode("append")
+      .format("memory").queryName("pgout_truncate").start()
+    try {
+      input.addData(
+        (10L, PgWire.relation(100, "public", "orders", Seq("id" -> 20))),
+        (20L, PgWire.relation(101, "public", "users", Seq("id" -> 20))),
+        (30L, PgWire.begin(1000, t0, 7)),
+        (40L, PgWire.truncate(Seq(100, 101))),
+        (50L, PgWire.commit(1000, 1001, t0)))
+      q.processAllAvailable()
+      val out = spark.table("pgout_truncate")
+        .select($"operation", $"table", $"lsn").as[(String, String, String)]
+        .collect().toList.sortBy(_._2)
+      assert(out == List(("DDL", "orders", "0/28"), ("DDL", "users", "0/28")),
+        s"one DDL row per truncated relation: $out")
+    } finally q.stop()
+  }
+
+  test("pgoutput replay suppression (E7): replay emits nothing, recycled xid emits") {
+    implicit val sctx = spark.sqlContext
+    import graft.cdc.PgWire
+    val t0 = 1705314600123456L
+    val input = MemoryStream[(Long, Array[Byte])]
+    val q = CdcStream.pipelinePgOutput(spark,
+        input.toDF().toDF("wal_start", "data"), "testdb")
+      .writeStream.outputMode("append")
+      .format("memory").queryName("pgout_replay").start()
+    def tx(at: Long, name: String): Seq[(Long, Array[Byte])] = Seq(
+      (at, PgWire.begin(at + 20, t0, 7)),
+      (at + 10, PgWire.insert(100, Seq(Some(s"$at"), Some(name)))),
+      (at + 20, PgWire.commit(at + 20, at + 21, t0)))
+    def names() = spark.table("pgout_replay")
+      .select($"after".getItem("name")).as[String].collect().toList.sorted
+    try {
+      input.addData((10L, PgWire.relation(100, "public", "users",
+        Seq("id" -> 20, "name" -> 25))) +: tx(100L, "first"): _*)
+      q.processAllAvailable()
+      assert(names() == List("first"))
+      // (a) the slot re-delivers the committed tx from its Begin
+      input.addData(tx(100L, "first"): _*)
+      q.processAllAvailable()
+      assert(names() == List("first"), s"a replayed tx must not re-emit: ${names()}")
+      // (b) a new tx reusing xid 7 at higher positions is not a replay
+      input.addData(tx(200L, "second"): _*)
+      q.processAllAvailable()
+      assert(names() == List("first", "second"),
+        s"a recycled xid at higher positions emits: ${names()}")
+    } finally q.stop()
   }
 
   test("pgoutput streaming: corrupt frame mid-stream — named error (crash) / dead-letter record (dlq)") {
@@ -273,9 +300,6 @@ class StreamingSpec extends SparkSpec {
     // (parser.go:33-38, config.go:101).
     implicit val sctx = spark.sqlContext
     import graft.cdc.PgWire
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val t0 = 1705314600123456L
     val truncated = PgWire.insert(100, Seq(Some("2"), Some("bob"))).dropRight(3)
     def frames(): Seq[(Long, Array[Byte])] = Seq(
@@ -287,75 +311,68 @@ class StreamingSpec extends SparkSpec {
       (40L, PgWire.commit(1000, 1001, t0)))
     def causes(t: Throwable): Seq[Throwable] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(20).toSeq
-    try {
-      // crash (default)
-      val in1 = MemoryStream[(Long, Array[Byte])]
-      val q1 = CdcStream.pipelinePgOutput(spark,
-          in1.toDF().toDF("wal_start", "data"), "testdb")
-        .writeStream.outputMode("append")
-        .format("memory").queryName("pgcorrupt_crash").start()
-      val e = try {
-        in1.addData(frames(): _*)
-        intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-          q1.processAllAvailable()
-        }
-      } finally q1.stop()
-      assert(causes(e).exists(c =>
-        c.isInstanceOf[graft.cdc.PgOutput.CorruptFrameException] &&
-          c.getMessage.contains("wal_start=35")),
-        s"named corrupt-frame error with WAL position, got: " +
-          causes(e).map(c => s"${c.getClass.getSimpleName}: ${c.getMessage}"))
-      assert(!causes(e).exists(_.isInstanceOf[java.nio.BufferUnderflowException]),
-        "the taxonomy must replace, not wrap-and-leak, BufferUnderflow")
-
-      // dlq
-      val in2 = MemoryStream[(Long, Array[Byte])]
-      val q2 = CdcStream.pipelinePgOutput(spark,
-          in2.toDF().toDF("wal_start", "data"), "testdb",
-          corruptPolicy = "dlq")
-        .writeStream.outputMode("append")
-        .format("memory").queryName("pgcorrupt_dlq").start()
-      try {
-        in2.addData(frames(): _*)
-        q2.processAllAvailable()
-        val rows = spark.table("pgcorrupt_dlq")
-          .select($"operation", $"subject", $"after", $"event_type").collect()
-        val good = rows.filter(_.getString(0) == "INSERT")
-        assert(good.length == 1 &&
-          good.head.getString(1) == "cdc.testdb.public.users",
-          "the surrounding transaction still commits and publishes")
-        val dlq = rows.filter(_.getString(0) == "CORRUPT")
-        assert(dlq.length == 1, s"one dead-letter record: ${rows.toSeq}")
-        assert(dlq.head.getString(1) == "dlq.testdb._._",
-          s"dlq-routed subject: ${dlq.head.getString(1)}")
-        assert(dlq.head.getString(3) == "cdc.corrupt_frame")
-        val after = dlq.head.getAs[Map[String, String]]("after")
-        assert(after("error").contains("wal_start=35"),
-          s"error carries the WAL position: ${after("error")}")
-        assert(after.contains("payload_prefix_hex") &&
-          after("payload_size").toInt == truncated.length)
-      } finally q2.stop()
-
-      // skip: frame dropped, stream healthy, nothing quarantined
-      val in3 = MemoryStream[(Long, Array[Byte])]
-      val q3 = CdcStream.pipelinePgOutput(spark,
-          in3.toDF().toDF("wal_start", "data"), "testdb",
-          corruptPolicy = "skip")
-        .writeStream.outputMode("append")
-        .format("memory").queryName("pgcorrupt_skip").start()
-      try {
-        in3.addData(frames(): _*)
-        q3.processAllAvailable()
-        val ops = spark.table("pgcorrupt_skip")
-          .select($"operation").collect().map(_.getString(0)).toSeq
-        assert(ops == Seq("INSERT"), s"skip drops the frame silently: $ops")
-      } finally q3.stop()
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    // crash (default)
+    val in1 = MemoryStream[(Long, Array[Byte])]
+    val q1 = CdcStream.pipelinePgOutput(spark,
+        in1.toDF().toDF("wal_start", "data"), "testdb")
+      .writeStream.outputMode("append")
+      .format("memory").queryName("pgcorrupt_crash").start()
+    val e = try {
+      in1.addData(frames(): _*)
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q1.processAllAvailable()
       }
-    }
+    } finally q1.stop()
+    assert(causes(e).exists(c =>
+      c.isInstanceOf[graft.cdc.PgOutput.CorruptFrameException] &&
+        c.getMessage.contains("wal_start=35")),
+      s"named corrupt-frame error with WAL position, got: " +
+        causes(e).map(c => s"${c.getClass.getSimpleName}: ${c.getMessage}"))
+    assert(!causes(e).exists(_.isInstanceOf[java.nio.BufferUnderflowException]),
+      "the taxonomy must replace, not wrap-and-leak, BufferUnderflow")
+
+    // dlq
+    val in2 = MemoryStream[(Long, Array[Byte])]
+    val q2 = CdcStream.pipelinePgOutput(spark,
+        in2.toDF().toDF("wal_start", "data"), "testdb",
+        corruptPolicy = "dlq")
+      .writeStream.outputMode("append")
+      .format("memory").queryName("pgcorrupt_dlq").start()
+    try {
+      in2.addData(frames(): _*)
+      q2.processAllAvailable()
+      val rows = spark.table("pgcorrupt_dlq")
+        .select($"operation", $"subject", $"after", $"event_type").collect()
+      val good = rows.filter(_.getString(0) == "INSERT")
+      assert(good.length == 1 &&
+        good.head.getString(1) == "cdc.testdb.public.users",
+        "the surrounding transaction still commits and publishes")
+      val dlq = rows.filter(_.getString(0) == "CORRUPT")
+      assert(dlq.length == 1, s"one dead-letter record: ${rows.toSeq}")
+      assert(dlq.head.getString(1) == "dlq.testdb._._",
+        s"dlq-routed subject: ${dlq.head.getString(1)}")
+      assert(dlq.head.getString(3) == "cdc.corrupt_frame")
+      val after = dlq.head.getAs[Map[String, String]]("after")
+      assert(after("error").contains("wal_start=35"),
+        s"error carries the WAL position: ${after("error")}")
+      assert(after.contains("payload_prefix_hex") &&
+        after("payload_size").toInt == truncated.length)
+    } finally q2.stop()
+
+    // skip: frame dropped, stream healthy, nothing quarantined
+    val in3 = MemoryStream[(Long, Array[Byte])]
+    val q3 = CdcStream.pipelinePgOutput(spark,
+        in3.toDF().toDF("wal_start", "data"), "testdb",
+        corruptPolicy = "skip")
+      .writeStream.outputMode("append")
+      .format("memory").queryName("pgcorrupt_skip").start()
+    try {
+      in3.addData(frames(): _*)
+      q3.processAllAvailable()
+      val ops = spark.table("pgcorrupt_skip")
+        .select($"operation").collect().map(_.getString(0)).toSeq
+      assert(ops == Seq("INSERT"), s"skip drops the frame silently: $ops")
+    } finally q3.stop()
   }
 
   test("replayed events dedup within the watermark (effectively-once, E7)") {
@@ -592,15 +609,17 @@ class StreamingSpec extends SparkSpec {
     assert(written.count() == 3, "batch rewrite is idempotent")
   }
 
-  test("durationMs parses the TTL surface's interval subset") {
-    import graft.streaming.StreamingTxAssembly.durationMs
-    assert(durationMs("") == 0L)
-    assert(durationMs("500 milliseconds") == 500L)
-    assert(durationMs("1 second") == 1000L)
-    assert(durationMs("2 minutes") == 120000L)
-    assert(durationMs("3 hours") == 10800000L)
-    assert(durationMs("3650 days") == 3650L * 86400000L)
-    intercept[IllegalArgumentException] { durationMs("2 fortnights") }
+  test("intervalMs parses the TTL and watermark interval grammar") {
+    import graft.streaming.CdcStream.intervalMs
+    assert(intervalMs("500 milliseconds") == 500L)
+    assert(intervalMs("1 second") == 1000L)
+    assert(intervalMs("2 minutes") == 120000L)
+    assert(intervalMs("3 hours") == 10800000L)
+    assert(intervalMs("3650 days") == 3650L * 86400000L)
+    // an absent TTL is None at the call sites, never an empty string
+    intercept[IllegalArgumentException] { intervalMs("") }
+    intercept[IllegalArgumentException] { intervalMs("2 fortnights") }
+    intercept[IllegalArgumentException] { intervalMs("1 month") }
   }
 
   test("pipeline plan shape: exactly ONE stateful operator (assembly+dedup fused), one exchange") {
@@ -622,10 +641,10 @@ class StreamingSpec extends SparkSpec {
     val plan = events.queryExecution.analyzed.toString
     // decode keeps the per-slot relation registry, assembly the per-txid
     // buffers — each is one keyed exchange; nothing else holds state
-    assert("TransformWithState".r.findAllIn(plan).size == 2,
+    assert("FlatMapGroupsWithState".r.findAllIn(plan).size == 2,
       s"registry + assembly, nothing more: $plan")
-    assert(!plan.contains("FlatMapGroupsWithState") && !plan.contains("Deduplicate"),
-      "no legacy stateful operator sneaks into the pgoutput path")
+    assert(!plan.contains("TransformWithState") && !plan.contains("Deduplicate"),
+      "no other stateful operator sneaks into the pgoutput path")
   }
 
   test("E3 unordered mode: same rows, zero shuffle; ordered mode shuffles by subject") {
@@ -694,45 +713,26 @@ class StreamingSpec extends SparkSpec {
       "CDC_DATABASE_NAME" -> "testdb")).toOption.get
     assert(cfg.plugin == "pgoutput")
     implicit val sctx = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      import graft.cdc.PgWire
-      val t0 = 1705314600123456L
-      val input = MemoryStream[(Long, Array[Byte])]
-      input.addData(
-        (10L, PgWire.relation(100, "public", "users", Seq("id" -> 20, "name" -> 25))),
-        (20L, PgWire.begin(1000, t0, 7)),
-        (30L, PgWire.insert(100, Seq(Some("1"), Some("alice")))),
-        (40L, PgWire.commit(1000, 1001, t0)),
-        (50L, PgWire.begin(2000, t0, 8)),   // uncommitted: must not emit
-        (60L, PgWire.insert(100, Seq(Some("2"), Some("bob")))))
-      val out = Files.createTempDirectory("graft_pgcfg_out").toString
-      val ckpt = Files.createTempDirectory("graft_pgcfg_ckpt").toString
-      val q = CdcStream.startFromConfig(spark, input.toDF()
-        .toDF("wal_start", "data"), cfg, out, ckpt)
-      // the abandoned-tx TTL arms PROCESSING-TIME timers, so the query
-      // never reports idle (shouldRunAnotherBatch stays true — a CDC
-      // stream never idles in production either) and processAllAvailable
-      // would block forever: poll the sink for the expected row instead
-      try {
-        val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-        def written() =
-          try spark.read.parquet(out).count() catch { case _: Exception => 0L }
-        while (written() < 1 && q.exception.isEmpty &&
-            System.nanoTime() < deadline) Thread.sleep(100)
-        q.exception.foreach(throw _)
-      } finally q.stop()
-      val written = spark.read.parquet(out)
-      assert(written.count() == 1, "only the committed pgoutput tx emits")
-      val row = written.select("txid", "subject", "operation").head()
-      assert(row.getLong(0) == 7L)
-      assert(row.getString(1) == "cdc.testdb.public.users")
-      assert(row.getString(2) == "INSERT")
-    } finally prevProvider match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    import graft.cdc.PgWire
+    val t0 = 1705314600123456L
+    val input = MemoryStream[(Long, Array[Byte])]
+    input.addData(
+      (10L, PgWire.relation(100, "public", "users", Seq("id" -> 20, "name" -> 25))),
+      (20L, PgWire.begin(1000, t0, 7)),
+      (30L, PgWire.insert(100, Seq(Some("1"), Some("alice")))),
+      (40L, PgWire.commit(1000, 1001, t0)),
+      (50L, PgWire.begin(2000, t0, 8)),   // uncommitted: must not emit
+      (60L, PgWire.insert(100, Seq(Some("2"), Some("bob")))))
+    val out = Files.createTempDirectory("graft_pgcfg_out").toString
+    val ckpt = Files.createTempDirectory("graft_pgcfg_ckpt").toString
+    val q = CdcStream.startFromConfig(spark, input.toDF()
+      .toDF("wal_start", "data"), cfg, out, ckpt)
+    try q.processAllAvailable() finally q.stop()
+    val written = spark.read.parquet(out)
+    assert(written.count() == 1, "only the committed pgoutput tx emits")
+    val row = written.select("txid", "subject", "operation").head()
+    assert(row.getLong(0) == 7L)
+    assert(row.getString(1) == "cdc.testdb.public.users")
+    assert(row.getString(2) == "INSERT")
   }
 }
