@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.ops.SessionConf
+
 /** Benchmark harness (driver contract): times every declared query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -379,6 +381,34 @@ object Bench {
       SectionResult(zeroFrag("cdc"), Seq("cdc_ops_sec"))
     }
 
+  /** Session confs every streaming section runs under.
+    *
+    * State-store partition count is fixed at the query's first
+    * checkpoint from spark.sql.shuffle.partitions; 32 partitions × 2
+    * stateful operators is pure per-batch task overhead at this state
+    * size. 8 is the production-shaped setting for a per-key-state
+    * stream this size (scale UP with key cardinality, not core count).
+    *
+    * AQE is off: the stateful streaming plan bypasses AQE regardless, so
+    * its only consumer is the foreachBatch sink job — where runtime
+    * coalescing would serialize the parquet encode into 1-2 tasks at
+    * this batch size (the one AQE rewrite that could fire here) and each
+    * exchange pays a materialize-and-replan round-trip to the driver.
+    * Per-batch sink topology is static (repartition(subject) → sort →
+    * write), so AQE buys nothing and costs per-batch driver latency.
+    */
+  private val StreamConfs = Seq(
+    "spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.adaptive.enabled" -> "false")
+
+  /** 8 slices at 4/trigger = 2 micro-batches: still multi-batch (state
+    * handoff across batches is exercised) without paying 4 batches of
+    * fixed per-trigger overhead. r2 ran 2/trigger; the per-batch
+    * machinery (state commits, offset/commit log, sink job) was ~45% of
+    * wall at this state size.
+    */
+  private val StreamFilesPerTrigger = 4L
+
   /** Stage the WAL as 8 mtime-ordered parquet slices under `inDir`.
     * The file source admits files in modification-time order — tied
     * mtimes (one parallel write) make admission order nondeterministic
@@ -422,39 +452,14 @@ object Bench {
     val outDir = s"$tmp/out"; val ckDir = s"$tmp/ck"
     stageWalSlices(spark, graft.queries.CdcQueries.walStream(spark, sfDir),
       tmp, inDir)
-    // State-store partition count is fixed at the query's first
-    // checkpoint from spark.sql.shuffle.partitions; 32 partitions × 2
-    // stateful operators is pure per-batch task overhead at this state
-    // size. 8 is the production-shaped setting for a per-key-state
-    // stream this size (scale UP with key cardinality, not core count).
     // Best-of-3 like the batch queries (same ±45% scheduler-noise
     // rationale); each rep gets fresh sink/checkpoint dirs.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    // 8 slices at 4/trigger = 2 micro-batches: still multi-batch (state
-    // handoff across batches is exercised) without paying 4 batches of
-    // fixed per-trigger overhead. r2 ran 2/trigger; the per-batch
-    // machinery (state commits, offset/commit log, sink job) was ~45%
-    // of wall at this state size.
-    val stateParts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8")
-    val mft = sys.env.getOrElse("SPARK_GRAFT_STREAM_MFT", "4")
-    val sinkParts = sys.env.getOrElse("SPARK_GRAFT_SINK_PARTS", "0").toInt
-    spark.conf.set("spark.sql.shuffle.partitions", stateParts)
     // AvailableNow appends a trailing no-data batch for watermark
     // bookkeeping; append-mode emission here does not depend on it
     // (rows emit in their arrival batch, the watermark only evicts
     // state), so it is pure per-run overhead.
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    // AQE off for the streaming section: the stateful streaming plan
-    // bypasses AQE regardless, so its only consumer is the foreachBatch
-    // sink job — where runtime coalescing would serialize the parquet
-    // encode into 1-2 tasks at this batch size (the one AQE rewrite that
-    // could fire here) and each exchange pays a materialize-and-replan
-    // round-trip to the driver. Per-batch sink topology is static
-    // (repartition(subject) → sort → write), so AQE buys nothing and
-    // costs per-batch driver latency. Restored after the section.
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val reps = try {
+    val reps = SessionConf.scoped(spark, StreamConfs :+
+        ("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"): _*) {
       // rep 0 is UNTIMED — the batch section's warmup philosophy applied
       // to streaming: the first run through IncrementalExecution, the
       // state-store provider, and the sink's codegen pays JIT that no
@@ -463,12 +468,12 @@ object Bench {
       // measure the pipeline, not first-run compilation.
       (0 to 3).map { rep =>
         val raw = spark.readStream.schema("wal_start LONG, data STRING")
-          .option("maxFilesPerTrigger", mft).parquet(inDir.toString)
+          .option("maxFilesPerTrigger", StreamFilesPerTrigger)
+          .parquet(inDir.toString)
         val t0 = System.nanoTime()
         val q = graft.streaming.CdcStream.start(spark, raw, "bench",
           s"$outDir-$rep", s"$ckDir-$rep",
-          trigger = Trigger.AvailableNow(), dedupWatermark = "3650 days",
-          sinkPartitions = sinkParts)
+          trigger = Trigger.AvailableNow(), dedupWatermark = "3650 days")
         q.awaitTermination()
         val wall = (System.nanoTime() - t0) / 1e9
         if (sys.env.get("SPARK_GRAFT_STREAM_DEBUG").contains("1"))
@@ -480,9 +485,6 @@ object Bench {
         unloadStateStores()
         (spark.read.parquet(s"$outDir-$rep").count(), wall)
       }.drop(1)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
     val badRows = reps.map(_._1).find(_ != nEvents)
     val perRep = reps.map(r => (nEvents / r._2).round)
@@ -526,13 +528,6 @@ object Bench {
     }.reduce(_ unionByName _)
     stageWalSlices(spark,
       graft.queries.CdcQueries.walStreamFrom(spark, e10), tmp, inDir)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     // This figure exists to measure the 100 TB shape (big triggers), so
     // it ALWAYS runs the at-scale state-store pairing: RocksDB with
     // changelog checkpointing, whose per-commit cost is O(delta). The
@@ -541,26 +536,30 @@ object Bench {
     // measured; see SCALE.md "Batch-size amortization"). The 1× figure
     // above keeps the default store: both sides of the comparison stay
     // in BENCH.
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    boundRocksDbMemory(spark)
-    val mft = sys.env.getOrElse("SPARK_GRAFT_STREAM_MFT", "4")
-    val sinkParts = sys.env.getOrElse("SPARK_GRAFT_SINK_PARTS", "0").toInt
+    // RocksDB's NATIVE allocation is capped (block cache + memtables
+    // share one bounded LRU cache): the pairing is unbounded by default
+    // and exhausted C++ `new` in-JVM in the r6 run. 2 GiB is ~60× this
+    // workload's state and far under the host budget; production
+    // deployments size it per executor the same way.
+    val rocksDb = Seq(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+      "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage" -> "true",
+      "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB" -> "2048")
     // rep 0 is an UNTIMED warmup at full size (this child JVM starts
     // cold: IncrementalExecution, sink codegen, RocksDB provider init
     // all land on it — r9's recorded [8746, 39863] rep pair shows
     // exactly that first-rep cliff); timed reps then best-of-2.
-    val reps = try {
+    val reps = SessionConf.scoped(spark, StreamConfs ++ rocksDb: _*) {
       (0 to 2).map { rep =>
         val raw = spark.readStream.schema("wal_start LONG, data STRING")
-          .option("maxFilesPerTrigger", mft).parquet(inDir.toString)
+          .option("maxFilesPerTrigger", StreamFilesPerTrigger)
+          .parquet(inDir.toString)
         val t0 = System.nanoTime()
         val q = graft.streaming.CdcStream.start(spark, raw, "bench",
           s"$outDir-$rep", s"$ckDir-$rep",
-          trigger = Trigger.AvailableNow(), dedupWatermark = "3650 days",
-          sinkPartitions = sinkParts)
+          trigger = Trigger.AvailableNow(), dedupWatermark = "3650 days")
         q.awaitTermination()
         val wall = (System.nanoTime() - t0) / 1e9
         // close the rep's RocksDB instances: native memtables/caches
@@ -569,15 +568,6 @@ object Bench {
         unloadStateStores()
         (spark.read.parquet(s"$outDir-$rep").count(), wall)
       }.drop(1)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
     val badRows = reps.map(_._1).find(_ != 10L * nEvents)
     val perRep = reps.map(r => ((10L * nEvents) / r._2).round)
@@ -613,12 +603,7 @@ object Bench {
       import org.apache.spark.sql.streaming.Trigger
       val nEvents = countEvents(spark, sfDir)
       val (srcDir, work) = graft.queries.CdcQueries.scd2StreamInput(spark, sfDir)
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"))
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val reps = try {
+      val reps = SessionConf.scoped(spark, StreamConfs: _*) {
         (0 to 3).map { rep =>
           System.gc()
           val state = s"$work/bench_scd2_$rep"
@@ -648,9 +633,6 @@ object Bench {
           unloadStateStores()
           (nEvents / wall).round
         }.drop(1) // rep 0 = warmup, untimed in the artifact
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       }
       SectionResult(s""""mv_ops_sec":${reps.max},"mv_ops_sec_reps":${
         reps.mkString("[", ",", "]")}""", Nil)
@@ -712,18 +694,4 @@ object Bench {
   }
 
   private def unloadStateStores(): Unit = stateStoreCall("unloadAll")
-
-  /** Cap RocksDB's NATIVE allocation (block cache + memtables share one
-    * bounded LRU cache): the at-scale pairing (RocksDB + changelog) is
-    * unbounded by default and exhausted C++ `new` in-JVM in the r6 run.
-    * 2 GiB is ~60× this workload's state and far under the host budget;
-    * production deployments size it per executor the same way.
-    */
-  private def boundRocksDbMemory(spark: SparkSession): Unit = {
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage", "true")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB",
-      sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_MB", "2048"))
-  }
 }

@@ -372,8 +372,8 @@ object Dedup {
     // maintenance loops pay this per batch). ~2M edges per partition
     // (~32 MB of long pairs); a corpus-scale edge set keeps the
     // session width. The count job is free — edges are already
-    // checkpoint-materialized. Restored in finally; the returned frame
-    // is materialized inside the loop by the convergence action.
+    // checkpoint-materialized. The returned frame is materialized inside
+    // the scope by the loop's convergence action.
     val nEdges = edges.count()
     // broadcast-class edge sets label on the driver in one collect —
     // see localComponents; the distributed loop below is the >cap path
@@ -381,19 +381,7 @@ object Dedup {
       case Some(lbl) => return lbl
       case None =>
     }
-    val shufKey = "spark.sql.shuffle.partitions"
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevShuf = spark.conf.get(shufKey)
-    val prevAqe = spark.conf.get(aqeKey)
-    val width = math.min(prevShuf.toLong, nEdges / 2000000L + 1L)
-    spark.conf.set(shufKey, width.toString)
-    // When the derived width is BELOW the session width the frames are
-    // known-small, and AQE's per-exchange materialization (one job +
-    // driver replan per shuffle stage) is pure fixed latency on a loop
-    // of tiny joins — skip it so each round is ONE job. A corpus-scale
-    // edge set keeps the session width AND keeps AQE (skew handling).
-    if (width < prevShuf.toLong) spark.conf.set(aqeKey, "false")
-    try {
+    SessionConf.narrowed(spark, nEdges, 2000000L) {
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
       .localCheckpoint(true)
@@ -422,9 +410,6 @@ object Dedup {
           s"diameter exceeds the label-propagation budget) — raise maxIter " +
           "or use componentsStar, whose round count is diameter-independent")
     labels.select(col("id"), col("label").as("cluster"))
-    } finally {
-      spark.conf.set(shufKey, prevShuf)
-      spark.conf.set(aqeKey, prevAqe)
     }
   }
 
@@ -496,16 +481,7 @@ object Dedup {
             coalesce(col("cluster"), col("id")).as("cluster"))
       case None =>
     }
-    val shufKey = "spark.sql.shuffle.partitions"
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevShuf = spark.conf.get(shufKey)
-    val prevAqe = spark.conf.get(aqeKey)
-    val width = math.min(prevShuf.toLong, nEdges / 2000000L + 1L)
-    spark.conf.set(shufKey, width.toString)
-    // see components(): below-session width ⇒ known-small rounds ⇒ AQE's
-    // per-exchange job is pure latency; at scale width = session, AQE on
-    if (width < prevShuf.toLong) spark.conf.set(aqeKey, "false")
-    try {
+    SessionConf.narrowed(spark, nEdges, 2000000L) {
     var prev: (Long, String) = (-1L, "")
     var iter = 0
     var converged = false
@@ -535,9 +511,6 @@ object Dedup {
     // no star edge at all and are their own cluster (components() parity)
     nodes.join(labels, Seq("id"), "left")
       .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
-    } finally {
-      spark.conf.set(shufKey, prevShuf)
-      spark.conf.set(aqeKey, prevAqe)
     }
   }
 

@@ -760,15 +760,8 @@ object DedupIndex {
     // known-small-state argument as maintainClusters (sizes are free:
     // cur, rm and pairs are materialized). At scale width = session
     // and nothing changes.
-    val shufKey = "spark.sql.shuffle.partitions"
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevShuf = spark.conf.get(shufKey)
-    val prevAqe = spark.conf.get(aqeKey)
-    val width = math.min(prevShuf.toLong,
-      (cur.count() + rm.count() + pairs.count()) / 2000000L + 1L)
-    spark.conf.set(shufKey, width.toString)
-    if (width < prevShuf.toLong) spark.conf.set(aqeKey, "false")
-    try {
+    SessionConf.narrowed(spark,
+        cur.count() + rm.count() + pairs.count(), 2000000L) {
     phase("recluster")
     val newAssign = {
       // no emptiness probe (it re-joined the whole bucketed index just
@@ -790,33 +783,31 @@ object DedupIndex {
     landBatch(spark, spark,
       changelog.withColumn("ingest_batch", lit(opId)), logT, opId,
       bucketed = false, buckets)
-    if (touched.isEmpty) return
-    phase("rewrite")
-    // bucket rewrite: everything in a touched cluster leaves its old
-    // bucket; remaining members re-land under their new labels
-    val assignB = newAssign
-      .withColumn("bucket", pmod(col("cluster"), lit(buckets.toLong)))
-    val affected = (assignB.select(col("bucket")) union
-        cur.join(touched, Seq("cluster"), "left_semi").select(col("bucket")))
-      .distinct().collect().map(_.getLong(0)).sorted
-    val keep = cur.filter(col("bucket").isin(affected: _*))
-      .join(touched, Seq("cluster"), "left_anti")
-      .select(col("id"), col("cluster"), col("bucket"))
-    val stage = clusterStagePath(spark, cl)
-    keep.union(assignB.select(col("id"), col("cluster"), col("bucket")))
-      .write.mode("overwrite").parquet(stage)
-    val last = tableProps(spark, cl)("graft.cluster.last_batch")
-    spark.sql(s"ALTER TABLE $cl SET TBLPROPERTIES ('graft.cluster.pending'=" +
-      s"'$last:${affected.mkString(",")}')")
-    affected.foreach(b =>
-      spark.sql(s"ALTER TABLE $cl DROP IF EXISTS PARTITION (bucket=$b)"))
-    spark.read.parquet(stage).select(col("id"), col("cluster"), col("bucket"))
-      .write.insertInto(cl)
-    spark.sql(s"ALTER TABLE $cl UNSET TBLPROPERTIES ('graft.cluster.pending')")
-    spark.catalog.refreshTable(cl)
-    } finally {
-      spark.conf.set(shufKey, prevShuf)
-      spark.conf.set(aqeKey, prevAqe)
+    if (!touched.isEmpty) {
+      phase("rewrite")
+      // bucket rewrite: everything in a touched cluster leaves its old
+      // bucket; remaining members re-land under their new labels
+      val assignB = newAssign
+        .withColumn("bucket", pmod(col("cluster"), lit(buckets.toLong)))
+      val affected = (assignB.select(col("bucket")) union
+          cur.join(touched, Seq("cluster"), "left_semi").select(col("bucket")))
+        .distinct().collect().map(_.getLong(0)).sorted
+      val keep = cur.filter(col("bucket").isin(affected: _*))
+        .join(touched, Seq("cluster"), "left_anti")
+        .select(col("id"), col("cluster"), col("bucket"))
+      val stage = clusterStagePath(spark, cl)
+      keep.union(assignB.select(col("id"), col("cluster"), col("bucket")))
+        .write.mode("overwrite").parquet(stage)
+      val last = tableProps(spark, cl)("graft.cluster.last_batch")
+      spark.sql(s"ALTER TABLE $cl SET TBLPROPERTIES ('graft.cluster.pending'=" +
+        s"'$last:${affected.mkString(",")}')")
+      affected.foreach(b =>
+        spark.sql(s"ALTER TABLE $cl DROP IF EXISTS PARTITION (bucket=$b)"))
+      spark.read.parquet(stage).select(col("id"), col("cluster"), col("bucket"))
+        .write.insertInto(cl)
+      spark.sql(s"ALTER TABLE $cl UNSET TBLPROPERTIES ('graft.cluster.pending')")
+      spark.catalog.refreshTable(cl)
+    }
     }
   }
 
@@ -947,15 +938,7 @@ object DedupIndex {
     // pre-aggregation fan-out (measured 3× worse under the narrow
     // scope). At corpus scale the derived width hits the session cap
     // and behavior (width AND AQE) is unchanged.
-    val shufKey = "spark.sql.shuffle.partitions"
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevShuf = s.conf.get(shufKey)
-    val prevAqe = s.conf.get(aqeKey)
-    val stateRows = pre.count() + newEdges.count()
-    val width = math.min(prevShuf.toLong, stateRows / 2000000L + 1L)
-    s.conf.set(shufKey, width.toString)
-    if (width < prevShuf.toLong) s.conf.set(aqeKey, "false")
-    try {
+    SessionConf.narrowed(s, pre.count() + newEdges.count(), 2000000L) {
     phase("cluster-delta:delta")
     val (changelog0, assign0) =
       Dedup.clusterDelta(clusterOf, newEdges, batchIds)
@@ -1014,9 +997,6 @@ object DedupIndex {
       s.sql(s"ALTER TABLE $cl UNSET TBLPROPERTIES ('graft.cluster.pending')")
     }
     s.catalog.refreshTable(cl); outer.catalog.refreshTable(cl)
-    } finally {
-      s.conf.set(shufKey, prevShuf)
-      s.conf.set(aqeKey, prevAqe)
     }
   }
 }

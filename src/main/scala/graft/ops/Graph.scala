@@ -47,29 +47,26 @@ object Graph {
     * from link centrality).
     */
   def pageRank(edges0: DataFrame, iters: Int = 6,
-      scale: Long = 1000000000L): DataFrame = {
-    val (edges, edgeDeg, nodes, restore) = prepEdges(edges0)
-    try {
-    val base = (15L * scale) / 100L
-    var r = nodes.withColumn("r", lit(scale))
-    for (i <- 1 to iters) {
-      // LAZY checkpoints truncate lineage without running a job each —
-      // with AQE off (prepEdges) nothing executes until the FINAL
-      // round's eager checkpoint, which materializes the whole loop as
-      // ONE multi-stage job instead of one driver round-trip per round
-      // (the eager form also rebuilt a broadcast per round). The final
-      // round is eager ON PURPOSE: it must run while the loop's width
-      // scope is still in force, not at the caller's session width.
-      r = nodes.join(inflowOf(edgeDeg, r), Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) +
-            expr("(85 * coalesce(inflow, 0L)) div 100")).as("r"))
-        .localCheckpoint(i == iters)
+      scale: Long = 1000000000L): DataFrame =
+    withEdges(edges0) { (edgeDeg, nodes) =>
+      val base = (15L * scale) / 100L
+      var r = nodes.withColumn("r", lit(scale))
+      for (i <- 1 to iters) {
+        // LAZY checkpoints truncate lineage without running a job each —
+        // with AQE off (withEdges) nothing executes until the FINAL
+        // round's eager checkpoint, which materializes the whole loop as
+        // ONE multi-stage job instead of one driver round-trip per round
+        // (the eager form also rebuilt a broadcast per round). The final
+        // round is eager ON PURPOSE: it must run while the loop's width
+        // scope is still in force, not at the caller's session width.
+        r = nodes.join(inflowOf(edgeDeg, r), Seq("node"), "left")
+          .select(col("node"),
+            (lit(base) +
+              expr("(85 * coalesce(inflow, 0L)) div 100")).as("r"))
+          .localCheckpoint(i == iters)
+      }
+      r
     }
-    edges.unpersist(); edgeDeg.unpersist(); nodes.unpersist()
-    r
-    } finally restore()
-  }
 
   /** Personalized (seed-teleport) PageRank, integer-exact like
     * [[pageRank]] but with BOTH the initial mass and the per-step
@@ -92,78 +89,66 @@ object Graph {
     * once — the iteration never touches it again.
     */
   def personalizedPageRank(edges0: DataFrame, seeds0: DataFrame,
-      iters: Int = 6, scale: Long = 1000000000L): DataFrame = {
-    val (edges, edgeDeg, nodes0, restore) = prepEdges(edges0)
-    try {
-    val seeds = broadcast(seeds0
-      .select(col("node").cast("long").as("node")).distinct()
-      .withColumn("is_seed", lit(true)))
-    val nodes = nodes0.join(seeds, Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("is_seed"), lit(false)).as("is_seed"))
-      .persist()
-    val base = (15L * scale) / 100L
-    var r = nodes.select(col("node"),
-      when(col("is_seed"), lit(scale)).otherwise(lit(0L)).as("r"))
-    for (i <- 1 to iters) {
-      // lazy rounds + eager final — see pageRank
-      r = nodes.join(inflowOf(edgeDeg, r), Seq("node"), "left")
+      iters: Int = 6, scale: Long = 1000000000L): DataFrame =
+    withEdges(edges0) { (edgeDeg, nodes0) =>
+      val seeds = broadcast(seeds0
+        .select(col("node").cast("long").as("node")).distinct()
+        .withColumn("is_seed", lit(true)))
+      val nodes = nodes0.join(seeds, Seq("node"), "left")
         .select(col("node"),
-          (when(col("is_seed"), lit(base)).otherwise(lit(0L)) +
-            expr("(85 * coalesce(inflow, 0L)) div 100")).as("r"))
-        .localCheckpoint(i == iters)
+          coalesce(col("is_seed"), lit(false)).as("is_seed"))
+        .persist()
+      val base = (15L * scale) / 100L
+      var r = nodes.select(col("node"),
+        when(col("is_seed"), lit(scale)).otherwise(lit(0L)).as("r"))
+      for (i <- 1 to iters) {
+        // lazy rounds + eager final — see pageRank
+        r = nodes.join(inflowOf(edgeDeg, r), Seq("node"), "left")
+          .select(col("node"),
+            (when(col("is_seed"), lit(base)).otherwise(lit(0L)) +
+              expr("(85 * coalesce(inflow, 0L)) div 100")).as("r"))
+          .localCheckpoint(i == iters)
+      }
+      nodes.unpersist()
+      r
     }
-    edges.unpersist(); edgeDeg.unpersist(); nodes0.unpersist()
-    nodes.unpersist()
-    r
-    } finally restore()
-  }
 
-  /** Shared iteration prep: deduped edges MATERIALIZED once (the
-    * derivation — fact-table joins + distinct — runs at session width
-    * with AQE on), then hash-partitioned by src at a width derived from
-    * the measured edge count (guide §2: scale-adaptive partitioning,
-    * same sizing as the components loops) and cached; the
-    * (edge, out-degree) pair frame rides that partitioning (deg joins
-    * shuffle-free on the edge side), plus the node set. All three
-    * persisted — callers unpersist after their loop. When the derived
-    * width is below the session width, AQE is switched off for the
-    * ITERATION's scope: a fixed-round loop of small joins gains nothing
-    * from per-exchange replanning and pays one job + driver round-trip
-    * per exchange for it; at corpus scale width = session and behavior
-    * is unchanged. Callers MUST invoke the returned restore() in a
-    * finally after materializing their result inside the scope.
+  /** Shared iteration scope: deduped edges MATERIALIZED and counted once
+    * (the derivation — fact-table joins + distinct — runs at session
+    * width with AQE on), then `body` runs under
+    * [[SessionConf.narrowed]] at ~250k edges (~4 MB of long pairs) per
+    * partition. An iteration stage is a CPU-bound join+aggregation over
+    * every edge, not a pure shuffle, so it wants far smaller partitions
+    * than the 100 MB-1 GB shuffle guidance — the previous 2M-row sizing
+    * ran a 700k-edge graph's whole 6-round loop in ONE task (measured:
+    * loop job 3.3 s serialized vs ~1.3 s at width 4). Below the session
+    * width AQE is off for the loop: a fixed-round loop of small joins
+    * gains nothing from per-exchange replanning. `body` gets the (edge,
+    * out-degree) pair frame over edges hash-partitioned by src at the
+    * scope's width (deg joins shuffle-free on the edge side), and the
+    * node set — all persisted, and unpersisted once `body` has
+    * materialized its result inside the scope.
     */
-  private def prepEdges(
-      edges0: DataFrame): (DataFrame, DataFrame, DataFrame, () => Unit) = {
+  private def withEdges[T](edges0: DataFrame)(
+      body: (DataFrame, DataFrame) => T): T = {
     val sp = edges0.sparkSession
-    val shufKey = "spark.sql.shuffle.partitions"
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevShuf = sp.conf.get(shufKey)
-    val prevAqe = sp.conf.get(aqeKey)
     val dedup = edges0.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
       .distinct()
       .localCheckpoint(true)
-    // ~250k edges (~4 MB of long pairs) per partition: an iteration stage
-    // is a CPU-bound join+aggregation over every edge, not a pure
-    // shuffle, so it wants far smaller partitions than the 100 MB-1 GB
-    // shuffle guidance — the previous 2M-row sizing ran a 700k-edge
-    // graph's whole 6-round loop in ONE task (measured: loop job 3.3 s
-    // serialized vs ~1.3 s at width 4). Still capped by the session
-    // width, so corpus-scale behavior is unchanged.
-    val width = math.min(prevShuf.toLong, dedup.count() / 250000L + 1L)
-    sp.conf.set(shufKey, width.toString)
-    if (width < prevShuf.toLong) sp.conf.set(aqeKey, "false")
-    val edges = dedup.repartition(width.toInt, col("src")).persist()
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val edgeDeg = edges.join(deg, "src").persist()
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node")))
-      .distinct()
-      .persist()
-    (edges, edgeDeg, nodes,
-      () => { sp.conf.set(shufKey, prevShuf); sp.conf.set(aqeKey, prevAqe) })
+    SessionConf.narrowed(sp, dedup.count(), 250000L) {
+      val width = sp.conf.get("spark.sql.shuffle.partitions").toInt
+      val edges = dedup.repartition(width, col("src")).persist()
+      val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
+      val edgeDeg = edges.join(deg, "src").persist()
+      val nodes = edges.select(col("src").as("node"))
+        .union(edges.select(col("dst").as("node")))
+        .distinct()
+        .persist()
+      val out = body(edgeDeg, nodes)
+      edges.unpersist(); edgeDeg.unpersist(); nodes.unpersist()
+      out
+    }
   }
 
   /** One rank-propagation step: each node's Σ over in-edges of the

@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.{CountMin, Curation, Dedup, Multimodal, Similarity, TextAnalysis => TA}
+import graft.ops.{CountMin, Curation, Dedup, Multimodal, SessionConf, Similarity,
+  TextAnalysis => TA}
 import Q.{Def, t}
 
 /** LLM-training-data pipeline operators over `documents` / `embeddings`:
@@ -20,6 +21,11 @@ object LlmQueries {
 
   import Dedup.{mhA, mhB}
   import TA.{P31, P9}
+
+  /** The state store the transformWithState streams (l114–l116) need. */
+  private val rocksDbProvider =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** The shared near-dup pipeline (l07's parameters are the single
     * source: k=32, 16 bands × 2 rows, maxBucket 10000): MinHash
@@ -4472,12 +4478,7 @@ object LlmQueries {
     "l114_stream_funnel" -> Def(
       (s, d) => {
         import org.apache.spark.sql.streaming.Trigger
-        val prev = s.conf.getOption(
-          "spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider")
-        try {
+        SessionConf.scoped(s, rocksDbProvider) {
           val ev = t(s, d, "events")
             .select(col("event_id"), col("user_id"), col("event_type"),
               col("ts"))
@@ -4512,11 +4513,6 @@ object LlmQueries {
               floor(col("n_entities").cast("decimal(20,0)") * 1000000 /
                 greatest(lit(n0), lit(1L))).cast("bigint"))
             .orderBy(col("stage"))
-        } finally prev match {
-          case Some(p) => s.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset(
-            "spark.sql.streaming.stateStore.providerClass")
         }
       },
       Some("""WITH r AS (SELECT user_id, ts, event_id, event_type,
@@ -4559,12 +4555,7 @@ object LlmQueries {
     "l115_stream_transitions" -> Def(
       (s, d) => {
         import org.apache.spark.sql.streaming.Trigger
-        val prev = s.conf.getOption(
-          "spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider")
-        try {
+        SessionConf.scoped(s, rocksDbProvider) {
           val ev = t(s, d, "events")
             .select(col("event_id"), col("user_id"), col("event_type"),
               col("ts"))
@@ -4601,11 +4592,6 @@ object LlmQueries {
             .select(col("from_type"), col("to_type"), col("n"),
               col("prob_ppm"))
             .orderBy(col("from_type"), col("to_type"))
-        } finally prev match {
-          case Some(p) => s.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset(
-            "spark.sql.streaming.stateStore.providerClass")
         }
       },
       Some("""WITH p AS (SELECT event_type AS from_type,
@@ -4628,12 +4614,7 @@ object LlmQueries {
     "l116_stream_cohort" -> Def(
       (s, d) => {
         import org.apache.spark.sql.streaming.Trigger
-        val prev = s.conf.getOption(
-          "spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider")
-        try {
+        SessionConf.scoped(s, rocksDbProvider) {
           val ev = t(s, d, "events")
             .select(col("event_id"), col("user_id"), col("ts"))
           val work = graft.queries.TempDirs.workDir("graft_l116")
@@ -4661,11 +4642,6 @@ object LlmQueries {
             .groupBy(col("cohort_week"), col("week_offset"))
             .agg(countDistinct(col("entity")).as("n_entities"))
             .orderBy(col("cohort_week"), col("week_offset"))
-        } finally prev match {
-          case Some(p) => s.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset(
-            "spark.sql.streaming.stateStore.providerClass")
         }
       },
       Some("""WITH c AS (SELECT user_id,

@@ -77,8 +77,8 @@ object Q {
   }
 
   /** Run a bounded streaming job with a state-partition count derived
-    * from its INPUT SIZE instead of the session width, restoring the
-    * session conf afterwards.
+    * from its INPUT SIZE instead of the session width, scoped to `body`
+    * by [[graft.ops.SessionConf.scoped]].
     *
     * Stateful streaming latches `spark.sql.shuffle.partitions` into the
     * checkpoint at the first batch, and every stateful operator then
@@ -99,10 +99,8 @@ object Q {
     */
   def withStreamParts[T](spark: SparkSession, inputBytes: Long)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    val target = math.min(prev.toLong,
+    val target = math.min(spark.conf.get(key).toLong,
       math.max(4L, (inputBytes + (64L << 20) - 1) / (64L << 20)))
-    spark.conf.set(key, target.toString)
-    try body finally spark.conf.set(key, prev)
+    graft.ops.SessionConf.scoped(spark, key -> target.toString)(body)
   }
 }

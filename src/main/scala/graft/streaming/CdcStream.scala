@@ -183,8 +183,7 @@ object CdcStream {
       metrics: Option[CdcMetrics.Registry] = None,
       sinkWriter: Option[() => SinkWriter] = None,
       sinkQuarantine: Option[(PublishItem, Throwable) => Unit] = None,
-      plugin: String = "wal2json",
-      sinkPartitions: Int = 0): StreamingQuery = {
+      plugin: String = "wal2json"): StreamingQuery = {
     val events = plugin match {
       case "pgoutput" =>
         pipelinePgOutput(spark, raw, database, tableAllowlist, dedupWatermark)
@@ -234,8 +233,7 @@ object CdcStream {
                 onRetry = () => metrics.foreach(_.publishRetries.inc()))(() =>
               if (unsafeUnorderedAsyncPublish)
                 UnorderedSink.writeBatch(observed(), batchId, outPath)
-              else OrderedSink.writeBatch(observed(), batchId, outPath,
-                numPartitions = sinkPartitions))
+              else OrderedSink.writeBatch(observed(), batchId, outPath))
         }
         for (m <- metrics; o <- published)
           m.published.add(o.get("rows").asInstanceOf[Long])

@@ -401,6 +401,10 @@ object Main {
     running
   }
 
+  /** Above Spark's composite hook (FileSystem.SHUTDOWN_HOOK_PRIORITY +
+    * 30 = 40); see [[graft.queries.TempDirs]] for the ordering. */
+  private val StopHookPriority = 50
+
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
@@ -411,10 +415,12 @@ object Main {
     spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions(
       spark.sparkContext.getConf, spark.sparkContext.defaultParallelism))
     val running = start(spark, sys.env)
-    sys.addShutdownHook {
-      running.stop()
-      spark.stop()
-    }
+    // The query stops from Hadoop's ShutdownHookManager, the registry
+    // Spark's own hook runs from, at a higher priority: it finishes
+    // before Spark's hook stops the SparkContext (a plain JVM hook would
+    // run concurrently with Spark's and could call a stopped context).
+    org.apache.hadoop.util.ShutdownHookManager.get()
+      .addShutdownHook(() => running.stop(), StopHookPriority)
     println(s"graft-cdc started: health on :${running.health.port} " +
       "(/health /ready /metrics /debug/threads /debug/heap)")
     running.await() // supervised: transient failures restart with backoff

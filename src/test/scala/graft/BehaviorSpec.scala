@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
-import graft.ops.Behavior
+import graft.ops.{Behavior, SessionConf}
 
 /** Funnel ordering semantics (a stage event BEFORE the prior stage must
   * not count) and cohort week arithmetic.
@@ -98,13 +98,8 @@ class BehaviorSpec extends SparkSpec {
   test("streaming funnel: state advances across micro-batches, monotone") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sctx = spark.sqlContext
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
     val ckpt = java.nio.file.Files.createTempDirectory("funnel_ckpt")
-    try {
+    withRocksDb {
       val input = MemoryStream[(Long, String, java.sql.Timestamp, Long)]
       val hits = graft.streaming.StreamingFunnel.stageHits(spark,
         input.toDF().toDF("u", "t", "tts", "id"),
@@ -131,24 +126,14 @@ class BehaviorSpec extends SparkSpec {
           .map(r => (r.getLong(0), r.getString(1))).sorted.toList
         assert(all == List((1L, "signup"), (2L, "view"), (3L, "purchase")))
       } finally q.stop()
-    } finally prev match {
-      case Some(p) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
   test("streaming transitions: the last event bridges micro-batches") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sctx = spark.sqlContext
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
     val ckpt = java.nio.file.Files.createTempDirectory("trans_ckpt")
-    try {
+    withRocksDb {
       val input = MemoryStream[(Long, String, java.sql.Timestamp, Long)]
       val edges = graft.streaming.StreamingTransitions.edges(spark,
         input.toDF().toDF("u", "t", "tts", "id"), "u", "t", "tts", "id")
@@ -167,11 +152,6 @@ class BehaviorSpec extends SparkSpec {
           .map(r => (r.getString(0), r.getString(1))).sorted.toList
         assert(out == List(("click", "purchase"), ("view", "click")))
       } finally q.stop()
-    } finally prev match {
-      case Some(p) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -207,16 +187,9 @@ class BehaviorSpec extends SparkSpec {
       ("2024-01-08", 1L, 1L)))
   }
 
-  private def withRocksDb(body: => Unit): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-      "RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def withRocksDb(body: => Unit): Unit =
+    SessionConf.scoped(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   /** Run one AvailableNow pass of `df` against a persistent checkpoint
     * + parquet sink (the file sink supports checkpoint recovery; the
@@ -234,18 +207,13 @@ class BehaviorSpec extends SparkSpec {
     // maintenance batches CONTINUOUSLY (AvailableNow never terminates);
     // TTL filtering itself is lazy-on-read, so turning the no-data
     // batches off changes nothing these passes assert
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try {
+    SessionConf.scoped(spark,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
       val q = df.writeStream.outputMode("append").format("parquet")
         .option("path", out).option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
       try q.awaitTermination() finally q.stop()
       spark.read.parquet(out).collect().toSeq
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
     }
   }
 

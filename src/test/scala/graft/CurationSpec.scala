@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.Curation
+import graft.ops.{Curation, SessionConf}
 
 /** Corpus-curation semantics: deterministic sampling/mixing, sequence
   * packing invariants, decontamination via the shingle index.
@@ -154,9 +154,7 @@ class CurationSpec extends SparkSpec {
   test("bigram LM plan: count join co-partitioned off the shared exchange") {
     // at toy size AQE rightly broadcasts c2; pin the at-scale shape (c2
     // above the broadcast threshold) by disabling auto-broadcast
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    SessionConf.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val d = (1L to 50L).map(i => (i, s"a b c d$i e")).toDF("doc_id", "text")
       val q = Curation.bigramLmScore(d, "doc_id", "text")
       q.collect()
@@ -174,7 +172,7 @@ class CurationSpec extends SparkSpec {
           .findAllMatchIn(plan).map(_.group(1)).toSet
       assert(repartitions.size == 1,
         s"occurrences must materialize once, got $repartitions:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("BPE pair counts: hand-computed adjacent-char pairs") {
@@ -222,9 +220,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("stripBoilerplate plan: df agg joined back without a second span scan") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    SessionConf.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val d = (1L to 50L).map(i => (i, s"x y doc $i body")).toDF("doc_id", "text")
       val q = Curation.stripBoilerplate(d, "doc_id", "text", spanTokens = 2)
       q.collect()
@@ -246,7 +242,7 @@ class CurationSpec extends SparkSpec {
       // spans); the only list aggregation is the per-doc rebuild
       assert(!plan.contains("collect_set"),
         "span df must be a counter aggregation, not a collected id set")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("stratifiedSample: exact per-stratum counts, hierarchical ≡ single window") {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, Similarity, TextAnalysis => TA}
+import graft.ops.{Dedup, SessionConf, Similarity, TextAnalysis => TA}
 
 /** Dedup/similarity operator semantics on hand-built fixtures. */
 class DedupSpec extends SparkSpec {
@@ -317,8 +317,7 @@ class DedupSpec extends SparkSpec {
         .map(r => r.getLong(0) -> r.getLong(1)).toSet
       val viaLocalStar = Dedup.componentsStar(pairs).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toSet
-      spark.conf.set("graft.components.localMax", "0")
-      try {
+      SessionConf.scoped(spark, "graft.components.localMax" -> "0") {
         val viaDist = Dedup.components(pairs).collect()
           .map(r => r.getLong(0) -> r.getLong(1)).toSet
         val viaDistStar = Dedup.componentsStar(pairs).collect()
@@ -326,7 +325,7 @@ class DedupSpec extends SparkSpec {
         assert(viaLocal == viaDist, s"components case $i")
         assert(viaLocalStar == viaDistStar, s"componentsStar case $i")
         assert(viaLocal == viaLocalStar, s"cross-form case $i")
-      } finally spark.conf.unset("graft.components.localMax")
+      }
     }
   }
 
@@ -549,9 +548,8 @@ class DedupSpec extends SparkSpec {
            .toSeq.sorted)
       }
       val viaLocal = run()
-      spark.conf.set("graft.delta.localMax", "0")
-      val viaDist = try run()
-        finally spark.conf.unset("graft.delta.localMax")
+      val viaDist =
+        SessionConf.scoped(spark, "graft.delta.localMax" -> "0")(run())
       (viaLocal, viaDist)
     }
     // 1. the documented event zoo: bridge, displace, absorb, novel,
