@@ -163,10 +163,11 @@ object Bench {
         }
         (name, (System.nanoTime() - t0) / 1e9, err)
       }
-      // the streaming-loop queries (c29/c30/c31) leave their checkpoints'
-      // state-store providers loaded; each is single-use (fresh tmp
-      // checkpoint per call), so unload between passes — loaded providers
-      // otherwise accumulate heap/native memory for the whole run
+      // the stream gates (c29–c32 and the l-family streams) leave their
+      // checkpoints' state-store providers loaded; each checkpoint is
+      // single-use (Q.streamGate gives every call a fresh one), so unload
+      // between passes — loaded providers otherwise accumulate heap/native
+      // memory for the whole run
       unloadStateStores()
       pass
     }
@@ -602,17 +603,16 @@ object Bench {
       import org.apache.spark.sql.functions.{coalesce, col, element_at}
       import org.apache.spark.sql.streaming.Trigger
       val nEvents = countEvents(spark, sfDir)
-      val (srcDir, work) = graft.queries.CdcQueries.scd2StreamInput(spark, sfDir)
+      val input = graft.queries.CdcQueries.scd2StreamInput(spark, sfDir)
+      val work = graft.queries.TempDirs.workDir("graft_bench_mv")
       val reps = SessionConf.scoped(spark, StreamConfs: _*) {
         (0 to 3).map { rep =>
           System.gc()
           val state = s"$work/bench_scd2_$rep"
           val ck = s"$work/bench_scd2_ck_$rep"
-          val raw = spark.readStream.schema("wal_start LONG, data STRING")
-            .option("maxFilesPerTrigger", 1).json(s"$srcDir/b*")
           val t0 = System.nanoTime()
           val q = graft.streaming.MaterializedView.startScd2(spark,
-            graft.streaming.CdcStream.pipeline(spark, raw, "bench"),
+            graft.streaming.CdcStream.pipeline(spark, input.stream(spark), "bench"),
             state, ck, keyCols = Seq("tbl", "uid"),
             seq = coalesce(element_at(col("after"), "seq"),
               element_at(col("before"), "seq")).cast("long"),

@@ -1,30 +1,12 @@
 package graft.model
 
 import java.sql.Timestamp
-import org.apache.spark.sql.types._
 
-/** Core event model, re-expressed from the reference's data model
-  * (reference: internal/model/events.go:14-43, 105-119).
-  *
-  * The envelope is a fixed StructType; the row payload (before/after) is a
-  * dynamic string->string map so that "column absent" (unchanged TOAST,
-  * reference internal/parser/pgoutput.go:613-614) stays distinguishable from
-  * "column null" (SURVEY.md §7.4.3).
-  */
-object Op {
-  val Insert = "INSERT"
-  val Update = "UPDATE"
-  val Delete = "DELETE"
-  val Ddl    = "DDL"
-
-  /** operation -> event_type (reference: internal/transformer/transformer.go:61-73). */
-  val eventType: Map[String, String] = Map(
-    Insert -> "cdc.insert",
-    Update -> "cdc.update",
-    Delete -> "cdc.delete",
-    Ddl    -> "cdc.ddl"
-  )
-}
+// Core event model, re-expressed from the reference's data model
+// (reference: internal/model/events.go:14-43, 105-119). The row payload
+// (before/after) is a dynamic string->string map so that "column absent"
+// (unchanged TOAST, reference internal/parser/pgoutput.go:613-614) stays
+// distinguishable from "column null" (SURVEY.md §7.4.3).
 
 /** Decoded WAL change event (reference: internal/model/events.go:24-43).
   * `oldValues`/`newValues` are nullable maps; absence of a key means the
@@ -80,25 +62,3 @@ case class DeadLetterRecord(
     payload_prefix: String,
     quarantined_at: Timestamp
 )
-
-object Schemas {
-  /** Payload map type: string->string, absence representable. */
-  val payload: DataType = MapType(StringType, StringType, valueContainsNull = true)
-
-  /** The normalized CDC envelope (FIXTURES.md §3). */
-  val cdcEnvelope: StructType = StructType(Seq(
-    StructField("event_id", StringType, nullable = false),
-    StructField("event_type", StringType, nullable = false),
-    StructField("source", StringType, nullable = false),
-    StructField("timestamp", TimestampType, nullable = true),
-    StructField("commit_time", TimestampType, nullable = true),
-    StructField("lsn", StringType, nullable = false),
-    StructField("txid", LongType, nullable = false),
-    StructField("schema", StringType, nullable = false),
-    StructField("table", StringType, nullable = false),
-    StructField("operation", StringType, nullable = false),
-    StructField("before", payload, nullable = true),
-    StructField("after", payload, nullable = true),
-    StructField("metadata", payload, nullable = true)
-  ))
-}

@@ -79,9 +79,6 @@ object HistogramCube {
             col("n"))).as("est")): _*)
   }
 
-  /** The same floor division as DuckDB SQL text (non-negative domain). */
-  def floorDivSql(a: String, b: String): String = s"(($a) // ($b))"
-
   // ---------- maintained lifecycle (count-addition folds) ----------
 
   /** STREAMING maintenance — the quantile twin of

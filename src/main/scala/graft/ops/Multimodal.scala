@@ -497,10 +497,4 @@ object Multimodal {
       .select(col("media_id"),
         explode(when(col("n_frames") > 0, sequence(lit(0), col("n_frames") - 1, lit(stride)))
           .otherwise(array().cast("array<int>"))).as("frame_idx"))
-
-  /** Resize plan (metadata-only selection of what [[resize]] would touch). */
-  def resizePlan(decoded: DataFrame, w: Int, h: Int): DataFrame =
-    decoded.select(col("media_id"), col("width"), col("height"),
-      lit(w).as("target_width"), lit(h).as("target_height"),
-      (col("width") * col("height") > w * h).as("downscale"))
 }

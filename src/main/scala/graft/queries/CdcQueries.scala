@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.cdc.{Apply, Dlq, PgOutput, PgWire, Transform, TxAssembly, Wal2Json}
 import graft.streaming.SnapshotBootstrap
 import Q.{Def, t}
@@ -30,6 +31,7 @@ object CdcQueries {
     * query. MEMORY_AND_DISK so an oversized input degrades to spill, never
     * OOM.
     */
+  // input memo: the synthesized WAL every CDC query reads
   private val rawCache =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
 
@@ -103,8 +105,10 @@ object CdcQueries {
     * explicitly, see its Def). c01/c02 keep the uncached pipeline —
     * decode and assembly are what they measure.
     */
+  // input memo: the normalized stream the downstream operators consume
   private val normCache =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  // the surface's one RESULT memo: c03's built frame (its Def says why)
   private val c03Cache =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
 
@@ -129,15 +133,16 @@ object CdcQueries {
     * IMAGE (tbl/uid/seq payload columns — the maintenance loops extract
     * keys from after/before by name), each event its own transaction so
     * no tx spans a batch seam, written as three contiguous WAL-slice
-    * files with forced-increasing mtimes so maxFilesPerTrigger=1 replays
-    * them in WAL order. Memoized per (session, sf dir) — the files are
-    * immutable input, each gate runs its own query/state/checkpoint.
-    * Returns (srcDir, workDir).
+    * files ([[Q.stage]]) so the gate's stream replays them in WAL order.
+    * Memoized per (session, sf dir): the files are immutable input; each
+    * call of a gate stages nothing and keeps its state and checkpoint in
+    * its own [[Q.streamGate]] dirs.
     */
+  // input memo: the staged WAL slices, never a gate's state
   private val streamInputCache =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
+    scala.collection.concurrent.TrieMap.empty[String, Q.Staged]
 
-  private[graft] def scd2StreamInput(s: SparkSession, d: String): (String, String) =
+  private[graft] def scd2StreamInput(s: SparkSession, d: String): Q.Staged =
     streamInputCache.getOrElseUpdate(s.sparkContext.applicationId + "|" + d, {
       val e = t(s, d, "events")
       val tsFmt = concat(
@@ -165,20 +170,27 @@ object CdcQueries {
             lit("C").as("action"), col("event_id").as("xid"),
             tsFmt.as("timestamp"))).as("data")))).as("f"))
         .select(col("event_id"), col("f.wal_start"), col("f.data"))
-      val work = graft.queries.TempDirs.workDir("graft_cstream")
-      val src = s"$work/in"
       val maxId = e.agg(max(col("event_id"))).head().getLong(0)
-      Seq((0L, maxId / 3), (maxId / 3 + 1, 2 * maxId / 3),
-          (2 * maxId / 3 + 1, maxId)).zipWithIndex.foreach {
-        case ((lo, hi), i) =>
-          framed.filter(col("event_id").between(lo, hi))
-            .select(col("wal_start"), col("data"))
-            .coalesce(1).write.json(s"$src/b$i")
-          new java.io.File(s"$src/b$i").listFiles()
-            .foreach(f => { f.setLastModified(1700000000000L + i * 60000L); () })
-      }
-      (src, work.toString)
+      Q.stage(Q.idSlices(framed, "event_id", 3, maxId)
+          .map(_.select(col("wal_start"), col("data"))),
+        TempDirs.workDir("graft_cstream").toString, "json")
     })
+
+  /** One call of a c29–c32 maintenance gate: the staged WAL through the
+    * real CDC pipeline into `start(changes, stateDir, checkpoint,
+    * trigger)`, on fresh state. Returns the state dir. */
+  private def scd2Gate(s: SparkSession, d: String, tag: String)(
+      start: (DataFrame, String, String, Trigger) => StreamingQuery): String =
+    Q.streamGate(tag) { g =>
+      val state = s"${g.dir}/state"
+      g.run(start(graft.streaming.CdcStream.pipeline(s,
+        scd2StreamInput(s, d).stream(s), Db), state, _, g.trigger))
+      state
+    }
+
+  /** The c29–c32 version column: the event id each row image carries. */
+  private val scd2Seq = coalesce(element_at(col("after"), "seq"),
+    element_at(col("before"), "seq")).cast("long")
 
   val defs: Map[String, Def] = Map(
 
@@ -1381,19 +1393,10 @@ object CdcQueries {
     // event is its own transaction so no tx spans a batch seam.
     "c29_scd2_streaming" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val (srcDir, work) = scd2StreamInput(s, d)
-        val state = s"$work/state_scd2"; val ckpt = s"$work/ckpt_scd2"
-        val raw = s.readStream.schema("wal_start LONG, data STRING")
-          .option("maxFilesPerTrigger", 1).json(s"$srcDir/b*")
-        val q = graft.streaming.MaterializedView.startScd2(s,
-          graft.streaming.CdcStream.pipeline(s, raw, Db), state, ckpt,
-          keyCols = Seq("tbl", "uid"),
-          seq = coalesce(element_at(col("after"), "seq"),
-            element_at(col("before"), "seq")).cast("long"),
-          trigger = Trigger.ProcessingTime("50 milliseconds"))
-        try { q.processAllAvailable() } finally q.stop()
-
+        val state = scd2Gate(s, d, "graft_c29") { (changes, state, ckpt, trigger) =>
+          graft.streaming.MaterializedView.startScd2(s, changes, state, ckpt,
+            keyCols = Seq("tbl", "uid"), seq = scd2Seq, trigger = trigger)
+        }
         graft.streaming.MaterializedView.currentState(s, state, Seq("tbl", "uid"))
           .select(col("tbl"), col("uid").cast("long").as("uid"),
             element_at(col("image"), "seq").cast("long").as("ver_src"),
@@ -1418,18 +1421,10 @@ object CdcQueries {
     // a last-change-wins window oracle.
     "c30_mv_streaming" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val (srcDir, work) = scd2StreamInput(s, d)
-        val state = s"$work/state_mv"; val ckpt = s"$work/ckpt_mv"
-        val raw = s.readStream.schema("wal_start LONG, data STRING")
-          .option("maxFilesPerTrigger", 1).json(s"$srcDir/b*")
-        val q = graft.streaming.MaterializedView.start(s,
-          graft.streaming.CdcStream.pipeline(s, raw, Db), state, ckpt,
-          keyCols = Seq("tbl", "uid"),
-          seq = coalesce(element_at(col("after"), "seq"),
-            element_at(col("before"), "seq")).cast("long"),
-          trigger = Trigger.ProcessingTime("50 milliseconds"))
-        try { q.processAllAvailable() } finally q.stop()
+        val state = scd2Gate(s, d, "graft_c30") { (changes, state, ckpt, trigger) =>
+          graft.streaming.MaterializedView.start(s, changes, state, ckpt,
+            keyCols = Seq("tbl", "uid"), seq = scd2Seq, trigger = trigger)
+        }
         graft.streaming.MaterializedView.currentState(s, state, Seq("tbl", "uid"))
           .select(col("tbl"), col("uid").cast("long").as("uid"),
             element_at(col("image"), "seq").cast("long").as("ver_src"))
@@ -1453,19 +1448,11 @@ object CdcQueries {
     // history: valid_from <= t AND (valid_to > t OR valid_to IS NULL).
     "c31_scd2_asof" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val (srcDir, work) = scd2StreamInput(s, d)
-        val state = s"$work/state_asof"; val ckpt = s"$work/ckpt_asof"
-        val raw = s.readStream.schema("wal_start LONG, data STRING")
-          .option("maxFilesPerTrigger", 1).json(s"$srcDir/b*")
-        val q = graft.streaming.MaterializedView.startScd2(s,
-          graft.streaming.CdcStream.pipeline(s, raw, Db), state, ckpt,
-          keyCols = Seq("tbl", "uid"),
-          seq = coalesce(element_at(col("after"), "seq"),
-            element_at(col("before"), "seq")).cast("long"),
-          compactClosedAfter = 2, compactEveryBatches = 1,
-          trigger = Trigger.ProcessingTime("50 milliseconds"))
-        try { q.processAllAvailable() } finally q.stop()
+        val state = scd2Gate(s, d, "graft_c31") { (changes, state, ckpt, trigger) =>
+          graft.streaming.MaterializedView.startScd2(s, changes, state, ckpt,
+            keyCols = Seq("tbl", "uid"), seq = scd2Seq,
+            compactClosedAfter = 2, compactEveryBatches = 1, trigger = trigger)
+        }
         val tPos = t(s, d, "events")
           .agg(expr("max(event_id) * 3 div 5")).head().getLong(0)
         graft.streaming.MaterializedView.scd2AsOf(s, state,
@@ -1499,19 +1486,11 @@ object CdcQueries {
     // cut than c31, so the two queries pin different validity frontiers).
     "c32_scd2_asof_outofband" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val (srcDir, work) = scd2StreamInput(s, d)
-        val state = s"$work/state_oob"; val ckpt = s"$work/ckpt_oob"
-        val raw = s.readStream.schema("wal_start LONG, data STRING")
-          .option("maxFilesPerTrigger", 1).json(s"$srcDir/b*")
-        val q = graft.streaming.MaterializedView.startScd2(s,
-          graft.streaming.CdcStream.pipeline(s, raw, Db), state, ckpt,
-          keyCols = Seq("tbl", "uid"),
-          seq = coalesce(element_at(col("after"), "seq"),
-            element_at(col("before"), "seq")).cast("long"),
-          compactClosedAfter = 2, compactEveryBatches = 1000,
-          trigger = Trigger.ProcessingTime("50 milliseconds"))
-        try { q.processAllAvailable() } finally q.stop()
+        val state = scd2Gate(s, d, "graft_c32") { (changes, state, ckpt, trigger) =>
+          graft.streaming.MaterializedView.startScd2(s, changes, state, ckpt,
+            keyCols = Seq("tbl", "uid"), seq = scd2Seq,
+            compactClosedAfter = 2, compactEveryBatches = 1000, trigger = trigger)
+        }
         graft.streaming.MaterializedView.maintainClosed(s, state,
           Seq("tbl", "uid"), compactClosedAfter = 2)
         val tPos = t(s, d, "events")

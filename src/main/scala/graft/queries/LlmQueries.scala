@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{CountMin, Curation, Dedup, Multimodal, SessionConf, Similarity,
   TextAnalysis => TA}
@@ -27,6 +27,22 @@ object LlmQueries {
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
+  /** One call of an l114–l116 gate: `slices` streamed through `build`
+    * into an append parquet sink, on state partitions sized from the
+    * staged input. Returns the sink's rows. */
+  private def streamToParquet(s: SparkSession, tag: String,
+      slices: Seq[DataFrame])(build: DataFrame => Dataset[_]): DataFrame =
+    Q.streamGate(tag) { g =>
+      val in = g.stage(slices)
+      val out = s"${g.dir}/out"
+      Q.withStreamParts(s, in.bytes) {
+        g.run(ckpt => build(in.stream(s)).writeStream.outputMode("append")
+          .option("checkpointLocation", ckpt).trigger(g.trigger)
+          .format("parquet").option("path", out).start())
+      }
+      s.read.parquet(out)
+    }
+
   /** The shared near-dup pipeline (l07's parameters are the single
     * source: k=32, 16 bands × 2 rows, maxBucket 10000): MinHash
     * signatures plus LSH-candidate pairs with exact-Jaccard stats.
@@ -49,10 +65,11 @@ object LlmQueries {
     * (digest expired through the two filler days → fresh owner), and a
     * copy 30 min after that (dup of the re-admitted owner).
     */
+  // input memo: the staged l78 timeline, never the gate's output
   private val l78Cache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    scala.collection.concurrent.TrieMap.empty[String, Q.Staged]
 
-  private def l78Input(s: SparkSession, d: String): String =
+  private def l78Input(s: SparkSession, d: String): Q.Staged =
     l78Cache.getOrElseUpdate(s.sparkContext.applicationId + "|" + d, {
       val E = 1704067200L // 2024-01-01 00:00:00 UTC, epoch seconds
       val Day = 86400L
@@ -74,32 +91,22 @@ object LlmQueries {
           timestamp_seconds(lit(E + day * Day)).as("ts"))
       val day3 = wave(2000000L, lit(E + 3 * Day) + col("off"), d7)
         .unionByName(wave(3000000L, lit(E + 3 * Day) + col("off") + 1800L, d7))
-      val waves = Seq(day0, filler(9000001L, 1L), filler(9000002L, 2L), day3)
-      val work = graft.queries.TempDirs.workDir("graft_l78_in")
-      val inDir = new java.io.File(s"$work/in"); inDir.mkdirs()
-      waves.zipWithIndex.foreach { case (w, i) =>
-        val sliceDir = s"$work/slice$i"
-        w.coalesce(1).write.parquet(sliceDir)
-        val part = new java.io.File(sliceDir).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(inDir, f"day-$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(1700000000000L + i * 60000L)
-      }
-      inDir.toString
+      Q.stage(Seq(day0, filler(9000001L, 1L), filler(9000002L, 2L), day3),
+        TempDirs.workDir("graft_l78_in").toString)
     })
 
   /** l109 staged input: the corpus split into thirds (doc_id % 3) as
     * three arrival waves, plus a fourth wave of spam-vocabulary docs —
-    * one parquet file per wave with forced-increasing mtimes so
-    * maxFilesPerTrigger=1 replays them as ordered micro-batches. The
+    * one parquet file per wave ([[Q.stage]]), replayed as ordered
+    * micro-batches. The
     * oracle does not depend on the file→batch mapping: drift is grouped
     * by the in-data `slice` column, so any batching yields the same rows.
     */
+  // input memo: the staged l109 waves, never the gate's output
   private val l109Cache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    scala.collection.concurrent.TrieMap.empty[String, Q.Staged]
 
-  private def l109Input(s: SparkSession, d: String): String =
+  private def l109Input(s: SparkSession, d: String): Q.Staged =
     l109Cache.getOrElseUpdate(s.sparkContext.applicationId + "|" + d, {
       val base = t(s, d, "documents")
       val waves = (0 to 2).map { i =>
@@ -112,18 +119,7 @@ object LlmQueries {
           concat(lit("spamA spamB spamC spam"),
             col("doc_id").cast("string")).as("text"),
           lit(3).as("slice"))
-      val work = graft.queries.TempDirs.workDir("graft_l109_in")
-      val inDir = new java.io.File(s"$work/in"); inDir.mkdirs()
-      waves.zipWithIndex.foreach { case (w, i) =>
-        val sliceDir = s"$work/slice$i"
-        w.coalesce(1).write.parquet(sliceDir)
-        val part = new java.io.File(sliceDir).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(inDir, f"wave-$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(1700000000000L + i * 60000L)
-      }
-      inDir.toString
+      Q.stage(waves, TempDirs.workDir("graft_l109_in").toString)
     })
 
   // ------------------------------------------------------- oracle helpers
@@ -1382,41 +1378,18 @@ object LlmQueries {
     // path (streaming loop + catalog partitions + bucketed join).
     "l79_streaming_index_neardup" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         val name = "graft_l79_idx"
-        // drop catalog entries AND any orphaned warehouse location (a
-        // killed prior run can leave the directory without the entry,
-        // which LOCATION_ALREADY_EXISTS-fails the re-create)
-        Seq(name, s"${name}_sizes").foreach { t =>
-          s.sql(s"DROP TABLE IF EXISTS $t")
-          val loc = new java.net.URI(
-            s.conf.get("spark.sql.warehouse.dir")).getPath + s"/$t"
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(); ()
-          }
-          rm(new java.io.File(loc))
-        }
+        Seq(name, s"${name}_sizes").foreach(freshTable(s, _))
         val docs = t(s, d, "documents")
         val corpus = docs.filter(col("doc_id") % 10 =!= 0)
           .select(col("doc_id"), col("text"))
-        // stage the corpus as three id-range slices with increasing
-        // mtimes; maxFilesPerTrigger=1 streams them in order
-        val work = graft.queries.TempDirs.workDir("graft_l79")
+        // the corpus streams in as three id-range slices
         val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-        Seq((0L, maxId / 3), (maxId / 3 + 1, 2 * maxId / 3),
-            (2 * maxId / 3 + 1, maxId)).zipWithIndex.foreach {
-          case ((lo, hi), i) =>
-            corpus.filter(col("doc_id").between(lo, hi))
-              .coalesce(1).write.parquet(s"$work/in/s$i")
-            new java.io.File(s"$work/in/s$i").listFiles()
-              .foreach(f => { f.setLastModified(1700000000000L + i * 60000L); () })
+        Q.streamGate("graft_l79") { g =>
+          val in = g.stage(Q.idSlices(corpus, "doc_id", 3, maxId))
+          g.run(graft.ops.DedupIndex.startMaintenance(s, in.stream(s),
+            "doc_id", "text", name, _, trigger = g.trigger))
         }
-        val stream = s.readStream.schema("doc_id LONG, text STRING")
-          .option("maxFilesPerTrigger", 1).parquet(s"$work/in/s*")
-        val q = graft.ops.DedupIndex.startMaintenance(s, stream, "doc_id",
-          "text", name, s"$work/ckpt",
-          trigger = Trigger.ProcessingTime("50 milliseconds"))
-        try { q.processAllAvailable() } finally q.stop()
         graft.ops.DedupIndex.incrementalNearDups(s,
             docs.filter(col("doc_id") % 10 === 0), "doc_id", "text", name,
             threshold = 0.8)
@@ -1449,44 +1422,23 @@ object LlmQueries {
     // be mistaken for replays.
     "l82_tiered_index_compaction" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         val name = "graft_l82_idx"
-        Seq(name, s"${name}_sizes").foreach { t =>
-          s.sql(s"DROP TABLE IF EXISTS $t")
-          val loc = new java.net.URI(
-            s.conf.get("spark.sql.warehouse.dir")).getPath + s"/$t"
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(); ()
-          }
-          rm(new java.io.File(loc))
-        }
+        Seq(name, s"${name}_sizes").foreach(freshTable(s, _))
         val docs = t(s, d, "documents")
-        val work = graft.queries.TempDirs.workDir("graft_l82")
         val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
         // era 1: doc_id % 10 in 1..4; era 2: % 10 in 5..9 — together the
-        // l79/l63 corpus (% 10 != 0); two id-range slices per era
-        def stage(era: Int, pred: org.apache.spark.sql.Column): Unit =
-          Seq((0L, maxId / 2), (maxId / 2 + 1, maxId)).zipWithIndex.foreach {
-            case ((lo, hi), i) =>
-              docs.filter(pred && col("doc_id").between(lo, hi))
-                .select(col("doc_id"), col("text"))
-                .coalesce(1).write.parquet(s"$work/era$era/s$i")
-              new java.io.File(s"$work/era$era/s$i").listFiles()
-                .foreach(f => { f.setLastModified(1700000000000L + i * 60000L); () })
+        // l79/l63 corpus (% 10 != 0); two id-range slices per era, each
+        // era through its own maintenance checkpoint
+        def era(pred: org.apache.spark.sql.Column): Unit =
+          Q.streamGate("graft_l82") { g =>
+            val in = g.stage(Q.idSlices(docs.filter(pred)
+              .select(col("doc_id"), col("text")), "doc_id", 2, maxId))
+            g.run(graft.ops.DedupIndex.startMaintenance(s, in.stream(s),
+              "doc_id", "text", name, _, trigger = g.trigger))
           }
-        stage(1, col("doc_id") % 10 >= 1 && col("doc_id") % 10 <= 4)
-        stage(2, col("doc_id") % 10 >= 5)
-        def drain(era: Int): Unit = {
-          val stream = s.readStream.schema("doc_id LONG, text STRING")
-            .option("maxFilesPerTrigger", 1).parquet(s"$work/era$era/s*")
-          val q = graft.ops.DedupIndex.startMaintenance(s, stream, "doc_id",
-            "text", name, s"$work/ckpt$era",
-            trigger = Trigger.ProcessingTime("50 milliseconds"))
-          try { q.processAllAvailable() } finally q.stop()
-        }
-        drain(1)
+        era(col("doc_id") % 10 >= 1 && col("doc_id") % 10 <= 4)
         graft.ops.DedupIndex.compact(s, name)            // -> fold -1
-        drain(2)                                         // horizon-guarded
+        era(col("doc_id") % 10 >= 5)                     // horizon-guarded
         graft.ops.DedupIndex.compact(s, name)            // -> fold -2, -1 untouched
         graft.ops.DedupIndex.compact(s, name, tierFanout = 2) // tier merge
         graft.ops.DedupIndex.incrementalNearDups(s,
@@ -1990,26 +1942,21 @@ object LlmQueries {
     // hash-gated rather than only spec-asserted.
     "l78_windowed_dedup_streaming" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val inDir = l78Input(s, d)
-        val work = graft.queries.TempDirs.workDir("graft_l78")
-        val out = s"$work/out"
-        Q.withStreamParts(s, Q.dirBytes(inDir.toString)) {
-          val raw = s.readStream
-            .schema("doc_id LONG, text STRING, source STRING, ts TIMESTAMP")
-            .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-          val q = graft.streaming.StreamingCuration.exactDedupStream(
-              s, raw, "doc_id", "text", "source",
-              eventTimeCol = Some("ts"), dedupWindowMs = Some(3600 * 1000L))
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", s"$work/ck")
-            .trigger(Trigger.ProcessingTime("50 milliseconds"))
-            .start(out)
-          try { q.processAllAvailable() } finally q.stop()
+        val in = l78Input(s, d)
+        Q.streamGate("graft_l78") { g =>
+          val out = s"${g.dir}/out"
+          Q.withStreamParts(s, in.bytes) {
+            g.run(ckpt => graft.streaming.StreamingCuration.exactDedupStream(
+                s, in.stream(s), "doc_id", "text", "source",
+                eventTimeCol = Some("ts"), dedupWindowMs = Some(3600 * 1000L))
+              .writeStream.outputMode("append")
+              .option("checkpointLocation", ckpt).trigger(g.trigger)
+              .start(out))
+          }
+          s.read.parquet(out)
+            .select(col("doc_id"), col("source"), col("dup_of"))
+            .orderBy(col("doc_id"))
         }
-        s.read.parquet(out)
-          .select(col("doc_id"), col("source"), col("dup_of"))
-          .orderBy(col("doc_id"))
       },
       Some("""WITH d7 AS (SELECT doc_id, source FROM documents
           WHERE doc_id % 7 = 0)
@@ -2982,40 +2929,20 @@ object LlmQueries {
     // build-once index is corrupt, and this gate would catch it.
     "l84_ann_index_lifecycle" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         val name = "graft_l84_idx"
-        Seq(name, s"${name}_cells", s"${name}_codebook").foreach { tb =>
-          s.sql(s"DROP TABLE IF EXISTS $tb")
-          val loc = new java.net.URI(
-            s.conf.get("spark.sql.warehouse.dir")).getPath + s"/$tb"
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(); ()
-          }
-          rm(new java.io.File(loc))
-        }
+        Seq(name, s"${name}_cells", s"${name}_codebook").foreach(freshTable(s, _))
         val emb = t(s, d, "embeddings")
         val prep = Similarity.prepare(
           emb.withColumnRenamed("vec_id", "id"), "embedding")
         Similarity.saveIvfPqQuantizer(s, prep, name, nCells = 16, m = 8,
           nCent = 256)
         // two id-range slices arrive as separate micro-batches
-        val work = graft.queries.TempDirs.workDir("graft_l84")
-        val maxId = emb.agg(max(col("vec_id"))).head().getLong(0)
-        Seq((0L, maxId / 2), (maxId / 2 + 1, maxId)).zipWithIndex.foreach {
-          case ((lo, hi), i) =>
-            emb.filter(col("vec_id").between(lo, hi))
-              .select(col("vec_id"), col("embedding"))
-              .coalesce(1).write.parquet(s"$work/in/s$i")
-            new java.io.File(s"$work/in/s$i").listFiles()
-              .foreach(f => { f.setLastModified(1700000000000L + i * 60000L); () })
+        Q.streamGate("graft_l84") { g =>
+          val in = g.stage(Q.idSlices(
+            emb.select(col("vec_id"), col("embedding")), "vec_id", 2))
+          g.run(Similarity.startIvfPqMaintenance(s, in.stream(s), "vec_id",
+            "embedding", name, _, trigger = g.trigger))
         }
-        val stream = s.readStream
-          .schema("vec_id LONG, embedding ARRAY<FLOAT>")
-          .option("maxFilesPerTrigger", 1).parquet(s"$work/in/s*")
-        val q = Similarity.startIvfPqMaintenance(s, stream, "vec_id",
-          "embedding", name, s"$work/ckpt",
-          trigger = Trigger.ProcessingTime("50 milliseconds"))
-        try { q.processAllAvailable() } finally q.stop()
         Similarity.compactIvfPqIndex(s, name)
         Similarity.ivfPqServe(s, name, prep.filter(col("id") < 8),
             nProbe = 4, k = 5)
@@ -3178,34 +3105,14 @@ object LlmQueries {
     // serve time, so the index is always current with the corpus.
     "l92_bm25_maintained" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         val name = "graft_l92_bm25"
-        Seq(name, s"${name}_stats").foreach { tb =>
-          s.sql(s"DROP TABLE IF EXISTS $tb")
-          val loc = new java.net.URI(
-            s.conf.get("spark.sql.warehouse.dir")).getPath + s"/$tb"
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(); ()
-          }
-          rm(new java.io.File(loc))
-        }
+        Seq(name, s"${name}_stats").foreach(freshTable(s, _))
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-        val work = graft.queries.TempDirs.workDir("graft_l92")
-        val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-        Seq((0L, maxId / 2), (maxId / 2 + 1, maxId)).zipWithIndex.foreach {
-          case ((lo, hi), i) =>
-            docs.filter(col("doc_id").between(lo, hi))
-              .coalesce(1).write.parquet(s"$work/in/s$i")
-            new java.io.File(s"$work/in/s$i").listFiles()
-              .foreach(f => { f.setLastModified(1700000000000L + i * 60000L); () })
+        Q.streamGate("graft_l92") { g =>
+          val in = g.stage(Q.idSlices(docs, "doc_id", 2))
+          g.run(graft.ops.Retrieval.startBm25Maintenance(s, in.stream(s),
+            "doc_id", "text", name, _, trigger = g.trigger))
         }
-        val stream = s.readStream
-          .schema("doc_id LONG, text STRING")
-          .option("maxFilesPerTrigger", 1).parquet(s"$work/in/s*")
-        val q = graft.ops.Retrieval.startBm25Maintenance(s, stream,
-          "doc_id", "text", name, s"$work/ckpt",
-          trigger = Trigger.ProcessingTime("50 milliseconds"))
-        try { q.processAllAvailable() } finally q.stop()
         graft.ops.Retrieval.compactBm25Index(s, name)
         graft.ops.Retrieval.bm25Serve(s, name, bm25Queries, k = 10)
           .withColumnRenamed("id", "doc_id")
@@ -3925,36 +3832,15 @@ object LlmQueries {
     // over the whole corpus — four incremental applications ≡ one shot.
     "l88_streaming_cluster_maintenance" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         val name = "graft_l88_idx"
         Seq(name, s"${name}_sizes", s"${name}_clusters",
-            s"${name}_changelog").foreach { tb =>
-          s.sql(s"DROP TABLE IF EXISTS $tb")
-          val loc = new java.net.URI(
-            s.conf.get("spark.sql.warehouse.dir")).getPath + s"/$tb"
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(); ()
-          }
-          rm(new java.io.File(loc))
-          rm(new java.io.File(s"${loc}__stage"))
-        }
+          s"${name}_changelog").foreach(freshTable(s, _))
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-        val work = graft.queries.TempDirs.workDir("graft_l88")
-        val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-        Seq((0L, maxId / 4), (maxId / 4 + 1, maxId / 2),
-            (maxId / 2 + 1, 3 * maxId / 4), (3 * maxId / 4 + 1, maxId))
-          .zipWithIndex.foreach { case ((lo, hi), i) =>
-            docs.filter(col("doc_id").between(lo, hi))
-              .coalesce(1).write.parquet(s"$work/in/s$i")
-            new java.io.File(s"$work/in/s$i").listFiles()
-              .foreach(f => { f.setLastModified(1700000000000L + i * 60000L); () })
-          }
-        val stream = s.readStream.schema("doc_id LONG, text STRING")
-          .option("maxFilesPerTrigger", 1).parquet(s"$work/in/s*")
-        val q = graft.ops.DedupIndex.startClusterMaintenance(s, stream,
-          "doc_id", "text", name, s"$work/ckpt", threshold = 0.8,
-          trigger = Trigger.ProcessingTime("50 milliseconds"))
-        try { q.processAllAvailable() } finally q.stop()
+        Q.streamGate("graft_l88") { g =>
+          val in = g.stage(Q.idSlices(docs, "doc_id", 4))
+          g.run(graft.ops.DedupIndex.startClusterMaintenance(s, in.stream(s),
+            "doc_id", "text", name, _, threshold = 0.8, trigger = g.trigger))
+        }
         s.table(s"${name}_clusters")
           .select(col("id").as("doc_id"), col("cluster"))
           .orderBy(col("doc_id"))
@@ -3980,35 +3866,15 @@ object LlmQueries {
     // cluster table ≡ a from-scratch clustering of the REMAINING docs.
     "l90_cluster_takedown" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         val name = "graft_l90_idx"
         Seq(name, s"${name}_sizes", s"${name}_clusters",
-            s"${name}_changelog", s"${name}_tombstones").foreach { tb =>
-          s.sql(s"DROP TABLE IF EXISTS $tb")
-          val loc = new java.net.URI(
-            s.conf.get("spark.sql.warehouse.dir")).getPath + s"/$tb"
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(); ()
-          }
-          rm(new java.io.File(loc))
-          rm(new java.io.File(s"${loc}__stage"))
-        }
+          s"${name}_changelog", s"${name}_tombstones").foreach(freshTable(s, _))
         val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-        val work = graft.queries.TempDirs.workDir("graft_l90")
-        val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-        Seq((0L, maxId / 2), (maxId / 2 + 1, maxId)).zipWithIndex.foreach {
-          case ((lo, hi), i) =>
-            docs.filter(col("doc_id").between(lo, hi))
-              .coalesce(1).write.parquet(s"$work/in/s$i")
-            new java.io.File(s"$work/in/s$i").listFiles()
-              .foreach(f => { f.setLastModified(1700000000000L + i * 60000L); () })
+        Q.streamGate("graft_l90") { g =>
+          val in = g.stage(Q.idSlices(docs, "doc_id", 2))
+          g.run(graft.ops.DedupIndex.startClusterMaintenance(s, in.stream(s),
+            "doc_id", "text", name, _, threshold = 0.8, trigger = g.trigger))
         }
-        val stream = s.readStream.schema("doc_id LONG, text STRING")
-          .option("maxFilesPerTrigger", 1).parquet(s"$work/in/s*")
-        val q = graft.ops.DedupIndex.startClusterMaintenance(s, stream,
-          "doc_id", "text", name, s"$work/ckpt", threshold = 0.8,
-          trigger = Trigger.ProcessingTime("50 milliseconds"))
-        try { q.processAllAvailable() } finally q.stop()
         graft.ops.DedupIndex.retractDocs(s, name,
           docs.filter(col("doc_id") % 9 === 4)
             .select(col("doc_id").as("id")),
@@ -4254,24 +4120,19 @@ object LlmQueries {
     // threshold 500000 ppm separates the two regimes with wide margin.
     "l109_streaming_drift" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         val refCounts = Curation.bucketCounts(t(s, d, "documents"),
             col("text")).collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSeq
-        val inDir = l109Input(s, d)
-        val work = graft.queries.TempDirs.workDir("graft_l109")
-        val out = s"$work/out"
-        val raw = s.readStream
-          .schema("doc_id LONG, source STRING, text STRING, slice INT")
-          .option("maxFilesPerTrigger", 1).parquet(inDir)
-        val q = graft.streaming.StreamingCuration.driftMonitorStream(
-            s, raw, Seq("slice", "source"), "text", refCounts, out,
-            s"$work/ck", thresholdPpm = 500000L)
-          .trigger(Trigger.ProcessingTime("50 milliseconds")).start()
-        try { q.processAllAvailable() } finally q.stop()
-        s.read.parquet(out)
-          .select(col("slice"), col("source"), col("tv_ppm"), col("alert"))
-          .orderBy(col("slice"), col("source"))
+        Q.streamGate("graft_l109") { g =>
+          val out = s"${g.dir}/out"
+          g.run(ckpt => graft.streaming.StreamingCuration.driftMonitorStream(
+              s, l109Input(s, d).stream(s), Seq("slice", "source"), "text",
+              refCounts, out, ckpt, thresholdPpm = 500000L)
+            .trigger(g.trigger).start())
+          s.read.parquet(out)
+            .select(col("slice"), col("source"), col("tv_ppm"), col("alert"))
+            .orderBy(col("slice"), col("source"))
+        }
       },
       Some(s"""WITH cand AS (
           SELECT doc_id, source, text, CAST(doc_id % 3 AS INT) AS slice
@@ -4352,34 +4213,15 @@ object LlmQueries {
     // the q58 gate (exact + within-5% flag) holds bit-for-bit.
     "l111_cube_maintained" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val name = "graft_l111_cube"
-        s.sql(s"DROP TABLE IF EXISTS $name")
-        val loc = new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath + s"/$name"
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(); ()
-        }
-        rm(new java.io.File(loc))
+        val name = freshTable(s, "graft_l111_cube")
         val dims = Seq("l_returnflag", "l_linestatus")
         val li = t(s, d, "lineitem")
           .select(col("l_orderkey"), col("l_returnflag"), col("l_linestatus"))
-        val work = graft.queries.TempDirs.workDir("graft_l111")
-        val maxId = li.agg(max(col("l_orderkey"))).head().getLong(0)
-        Seq((0L, maxId / 2), (maxId / 2 + 1, maxId)).zipWithIndex.foreach {
-          case ((lo, hi), i) =>
-            li.filter(col("l_orderkey").between(lo, hi))
-              .coalesce(1).write.parquet(s"$work/in/s$i")
-            new java.io.File(s"$work/in/s$i").listFiles()
-              .foreach(f => { f.setLastModified(1700000000000L + i * 60000L); () })
+        Q.streamGate("graft_l111") { g =>
+          val in = g.stage(Q.idSlices(li, "l_orderkey", 2))
+          g.run(graft.ops.SketchCube.startMaintenance(s, in.stream(s), dims,
+            "l_orderkey", name, _, trigger = g.trigger))
         }
-        val stream = s.readStream
-          .schema("l_orderkey LONG, l_returnflag STRING, l_linestatus STRING")
-          .option("maxFilesPerTrigger", 1).parquet(s"$work/in/s*")
-        val q = graft.ops.SketchCube.startMaintenance(s, stream, dims,
-          "l_orderkey", name, s"$work/ckpt",
-          trigger = Trigger.ProcessingTime("50 milliseconds"))
-        try { q.processAllAvailable() } finally q.stop()
         graft.ops.SketchCube.compactMaintained(s, name, dims)
         val flagEst = graft.ops.SketchCube.serve(s, name, Seq("l_returnflag"))
           .select(col("l_returnflag"), col("n_rows"), col("distinct_est"))
@@ -4477,35 +4319,15 @@ object LlmQueries {
     // output exactly, so the gate reuses q63's oracle program verbatim.
     "l114_stream_funnel" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         SessionConf.scoped(s, rocksDbProvider) {
           val ev = t(s, d, "events")
             .select(col("event_id"), col("user_id"), col("event_type"),
               col("ts"))
-          val work = graft.queries.TempDirs.workDir("graft_l114")
-          val maxId = ev.agg(max(col("event_id"))).head().getLong(0)
-          Seq((0L, maxId / 2), (maxId / 2 + 1, maxId)).zipWithIndex.foreach {
-            case ((lo, hi), i) =>
-              ev.filter(col("event_id").between(lo, hi))
-                .coalesce(1).write.parquet(s"$work/in/s$i")
-              new java.io.File(s"$work/in/s$i").listFiles()
-                .foreach(f => { f.setLastModified(1700000000000L + i * 60000L); () })
+          val out = streamToParquet(s, "graft_l114",
+              Q.idSlices(ev, "event_id", 2)) { in =>
+            graft.streaming.StreamingFunnel.stageHits(s, in, "user_id",
+              "event_type", "ts", "event_id", Seq("signup", "view", "purchase"))
           }
-          Q.withStreamParts(s, Q.dirBytes(s"$work/in")) {
-            val stream = s.readStream
-              .schema("event_id LONG, user_id LONG, event_type STRING, " +
-                "ts TIMESTAMP")
-              .option("maxFilesPerTrigger", 1).parquet(s"$work/in/s*")
-            val hits = graft.streaming.StreamingFunnel.stageHits(s, stream.toDF(),
-              "user_id", "event_type", "ts", "event_id",
-              Seq("signup", "view", "purchase"))
-            val q = hits.writeStream.outputMode("append")
-              .option("checkpointLocation", s"$work/ckpt")
-              .trigger(Trigger.ProcessingTime("50 milliseconds"))
-              .format("parquet").option("path", s"$work/out").start()
-            try { q.processAllAvailable() } finally q.stop()
-          }
-          val out = s.read.parquet(s"$work/out")
           val n0 = out.filter(col("stage") === 1L).count()
           out.groupBy(col("stage"), col("stage_name"))
             .agg(count(lit(1)).as("n_entities"))
@@ -4554,35 +4376,15 @@ object LlmQueries {
     // batch lead() program exactly, so the gate reuses q68's oracle.
     "l115_stream_transitions" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         SessionConf.scoped(s, rocksDbProvider) {
           val ev = t(s, d, "events")
             .select(col("event_id"), col("user_id"), col("event_type"),
               col("ts"))
-          val work = graft.queries.TempDirs.workDir("graft_l115")
-          val maxId = ev.agg(max(col("event_id"))).head().getLong(0)
-          Seq((0L, maxId / 2), (maxId / 2 + 1, maxId)).zipWithIndex.foreach {
-            case ((lo, hi), i) =>
-              ev.filter(col("event_id").between(lo, hi))
-                .coalesce(1).write.parquet(s"$work/in/s$i")
-              new java.io.File(s"$work/in/s$i").listFiles()
-                .foreach(f => { f.setLastModified(1700000000000L + i * 60000L); () })
-          }
-          Q.withStreamParts(s, Q.dirBytes(s"$work/in")) {
-            val stream = s.readStream
-              .schema("event_id LONG, user_id LONG, event_type STRING, " +
-                "ts TIMESTAMP")
-              .option("maxFilesPerTrigger", 1).parquet(s"$work/in/s*")
-            val edges = graft.streaming.StreamingTransitions.edges(s,
-              stream.toDF(), "user_id", "event_type", "ts", "event_id")
-            val q = edges.writeStream.outputMode("append")
-              .option("checkpointLocation", s"$work/ckpt")
-              .trigger(Trigger.ProcessingTime("50 milliseconds"))
-              .format("parquet").option("path", s"$work/out").start()
-            try { q.processAllAvailable() } finally q.stop()
-          }
-          val out = s.read.parquet(s"$work/out")
-            .groupBy(col("from_type"), col("to_type"))
+          val out = streamToParquet(s, "graft_l115",
+              Q.idSlices(ev, "event_id", 2)) { in =>
+            graft.streaming.StreamingTransitions.edges(s, in, "user_id",
+              "event_type", "ts", "event_id")
+          }.groupBy(col("from_type"), col("to_type"))
             .agg(count(lit(1)).as("n"))
           val byFrom = org.apache.spark.sql.expressions.Window
             .partitionBy(col("from_type"))
@@ -4613,33 +4415,12 @@ object LlmQueries {
     // reproduces the batch operator exactly → q64's oracle verbatim.
     "l116_stream_cohort" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         SessionConf.scoped(s, rocksDbProvider) {
           val ev = t(s, d, "events")
             .select(col("event_id"), col("user_id"), col("ts"))
-          val work = graft.queries.TempDirs.workDir("graft_l116")
-          val maxId = ev.agg(max(col("event_id"))).head().getLong(0)
-          Seq((0L, maxId / 2), (maxId / 2 + 1, maxId)).zipWithIndex.foreach {
-            case ((lo, hi), i) =>
-              ev.filter(col("event_id").between(lo, hi))
-                .coalesce(1).write.parquet(s"$work/in/s$i")
-              new java.io.File(s"$work/in/s$i").listFiles()
-                .foreach(f => { f.setLastModified(1700000000000L + i * 60000L); () })
-          }
-          Q.withStreamParts(s, Q.dirBytes(s"$work/in")) {
-            val stream = s.readStream
-              .schema("event_id LONG, user_id LONG, ts TIMESTAMP")
-              .option("maxFilesPerTrigger", 1).parquet(s"$work/in/s*")
-            val hits = graft.streaming.StreamingCohort.hits(s, stream.toDF(),
-              "user_id", "ts", "event_id")
-            val q = hits.writeStream.outputMode("append")
-              .option("checkpointLocation", s"$work/ckpt")
-              .trigger(Trigger.ProcessingTime("50 milliseconds"))
-              .format("parquet").option("path", s"$work/out").start()
-            try { q.processAllAvailable() } finally q.stop()
-          }
-          s.read.parquet(s"$work/out")
-            .groupBy(col("cohort_week"), col("week_offset"))
+          streamToParquet(s, "graft_l116", Q.idSlices(ev, "event_id", 2)) {
+            graft.streaming.StreamingCohort.hits(s, _, "user_id", "ts", "event_id")
+          }.groupBy(col("cohort_week"), col("week_offset"))
             .agg(countDistinct(col("entity")).as("n_entities"))
             .orderBy(col("cohort_week"), col("week_offset"))
         }
@@ -4669,45 +4450,26 @@ object LlmQueries {
     // full corpus, so the gate is q65's oracle verbatim.
     "l117_stream_metric_series" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val name = "graft_l117_series"
-        s.sql(s"DROP TABLE IF EXISTS $name")
-        val loc = new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath + s"/$name"
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(); ()
-        }
-        rm(new java.io.File(loc))
+        val name = freshTable(s, "graft_l117_series")
         val ev = t(s, d, "events")
           .select(col("event_id"), col("event_type"), col("ts"))
-        val work = graft.queries.TempDirs.workDir("graft_l117")
-        val maxId = ev.agg(max(col("event_id"))).head().getLong(0)
-        Seq((0L, maxId / 2), (maxId / 2 + 1, maxId)).zipWithIndex.foreach {
-          case ((lo, hi), i) =>
-            ev.filter(col("event_id").between(lo, hi))
-              .coalesce(1).write.parquet(s"$work/in/s$i")
-            new java.io.File(s"$work/in/s$i").listFiles()
-              .foreach(f => { f.setLastModified(1700000000000L + i * 60000L); () })
+        Q.streamGate("graft_l117") { g =>
+          val in = g.stage(Q.idSlices(ev, "event_id", 2))
+          g.run(ckpt => in.stream(s).writeStream.outputMode("append")
+            .option("checkpointLocation", ckpt).trigger(g.trigger)
+            .foreachBatch {
+              (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+               batchId: Long) =>
+                val bs = batch.sparkSession
+                val partial = batch.toDF()
+                  .groupBy(col("event_type"),
+                    date_trunc("minute", col("ts")).as("m"))
+                  .agg(count(lit(1)).as("v"))
+                  .withColumn("ingest_batch", lit(batchId))
+                graft.ops.DedupIndex.landBatch(bs, s, partial, name, batchId,
+                  bucketed = false, buckets = 8)
+            }.start())
         }
-        val stream = s.readStream
-          .schema("event_id LONG, event_type STRING, ts TIMESTAMP")
-          .option("maxFilesPerTrigger", 1).parquet(s"$work/in/s*")
-        val q = stream.writeStream.outputMode("append")
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(Trigger.ProcessingTime("50 milliseconds"))
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             batchId: Long) =>
-              val bs = batch.sparkSession
-              val partial = batch.toDF()
-                .groupBy(col("event_type"),
-                  date_trunc("minute", col("ts")).as("m"))
-                .agg(count(lit(1)).as("v"))
-                .withColumn("ingest_batch", lit(batchId))
-              graft.ops.DedupIndex.landBatch(bs, s, partial, name, batchId,
-                bucketed = false, buckets = 8)
-          }.start()
-        try { q.processAllAvailable() } finally q.stop()
         val series = s.table(name)
           .groupBy(col("event_type"), col("m"))
           .agg(sum(col("v")).as("v"))
@@ -4746,35 +4508,16 @@ object LlmQueries {
     // land/fold-state independent → q61's oracle verbatim.
     "l118_quantile_cube_maintained" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val name = "graft_l118_qcube"
-        s.sql(s"DROP TABLE IF EXISTS $name")
-        val loc = new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath + s"/$name"
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(); ()
-        }
-        rm(new java.io.File(loc))
+        val name = freshTable(s, "graft_l118_qcube")
         val f = t(s, d, "orders").select(col("o_orderkey"),
           col("o_orderpriority").as("prio"),
           expr("CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)")
             .as("cents"))
-        val work = graft.queries.TempDirs.workDir("graft_l118")
-        val maxId = f.agg(max(col("o_orderkey"))).head().getLong(0)
-        Seq((0L, maxId / 2), (maxId / 2 + 1, maxId)).zipWithIndex.foreach {
-          case ((lo, hi), i) =>
-            f.filter(col("o_orderkey").between(lo, hi))
-              .coalesce(1).write.parquet(s"$work/in/s$i")
-            new java.io.File(s"$work/in/s$i").listFiles()
-              .foreach(x => { x.setLastModified(1700000000000L + i * 60000L); () })
+        Q.streamGate("graft_l118") { g =>
+          val in = g.stage(Q.idSlices(f, "o_orderkey", 2))
+          g.run(graft.ops.HistogramCube.startMaintenance(s, in.stream(s),
+            Seq("prio"), "cents", 100000L, name, _, trigger = g.trigger))
         }
-        val stream = s.readStream
-          .schema("o_orderkey LONG, prio STRING, cents LONG")
-          .option("maxFilesPerTrigger", 1).parquet(s"$work/in/s*")
-        val q = graft.ops.HistogramCube.startMaintenance(s, stream.toDF(),
-          Seq("prio"), "cents", 100000L, name, s"$work/ckpt",
-          trigger = Trigger.ProcessingTime("50 milliseconds"))
-        try { q.processAllAvailable() } finally q.stop()
         graft.ops.HistogramCube.compactMaintained(s, name, Seq("prio"))
         val cube = graft.ops.HistogramCube.rollup(
           s.table(name).drop("ingest_batch"), Seq("prio"))
@@ -4926,7 +4669,6 @@ object LlmQueries {
     // same bounded-driver-artifact class as the quantizer seeds).
     "l141_streaming_tokenize" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         import org.apache.spark.sql.Encoders
         val docs = t(s, d, "documents")
         val (mt, words) = Curation.bpeTrain(docs, "text", merges = 6)
@@ -4935,42 +4677,31 @@ object LlmQueries {
           .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
         val vocabRows = Curation.bpeVocab(words)
           .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-        val work = graft.queries.TempDirs.workDir("graft_l141")
-        val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-        Seq((0L, maxId / 3), (maxId / 3 + 1, 2 * maxId / 3),
-            (2 * maxId / 3 + 1, maxId)).zipWithIndex.foreach {
-          case ((lo, hi), i) =>
-            docs.filter(col("doc_id").between(lo, hi))
-              .select(col("doc_id"), col("text"))
-              .coalesce(1).write.parquet(s"$work/in/s$i")
-            new java.io.File(s"$work/in/s$i").listFiles()
-              .foreach(f => { f.setLastModified(1700000000000L + i * 60000L); () })
+        Q.streamGate("graft_l141") { g =>
+          val in = g.stage(Q.idSlices(
+            docs.select(col("doc_id"), col("text")), "doc_id", 3))
+          g.run(ckpt => in.stream(s).writeStream
+            .option("checkpointLocation", ckpt).trigger(g.trigger)
+            .foreachBatch {
+              (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+               batchId: Long) =>
+                val s2 = batch.sparkSession
+                val mtDf = s2.createDataset(mergeRows)(Encoders.tuple(
+                    Encoders.scalaLong, Encoders.STRING, Encoders.STRING))
+                  .toDF("step", "m_left", "m_right")
+                val vbDf = s2.createDataset(vocabRows)(Encoders.tuple(
+                    Encoders.STRING, Encoders.scalaLong)).toDF("sym", "tid")
+                val (enc, _) = Curation.bpeEncode(batch.toDF(), "doc_id",
+                  "text", mtDf, frozenVocab = Some(vbDf))
+                // overwrite-per-batch-path: a crash-replayed batch id
+                // rewrites its own directory instead of appending twice —
+                // the foreachBatch analog of the partition land protocol
+                enc.select(col("doc_id"), col("n_tokens"), col("n_ids"),
+                    array_join(col("ids"), " ").as("ids_str"))
+                  .write.mode("overwrite").parquet(s"${g.dir}/out/b=$batchId")
+            }.start())
+          s.read.parquet(s"${g.dir}/out").drop("b").orderBy(col("doc_id"))
         }
-        val stream = s.readStream.schema("doc_id LONG, text STRING")
-          .option("maxFilesPerTrigger", 1).parquet(s"$work/in/s*")
-        val q = stream.writeStream
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(Trigger.ProcessingTime("50 milliseconds"))
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             batchId: Long) =>
-              val s2 = batch.sparkSession
-              val mtDf = s2.createDataset(mergeRows)(Encoders.tuple(
-                  Encoders.scalaLong, Encoders.STRING, Encoders.STRING))
-                .toDF("step", "m_left", "m_right")
-              val vbDf = s2.createDataset(vocabRows)(Encoders.tuple(
-                  Encoders.STRING, Encoders.scalaLong)).toDF("sym", "tid")
-              val (enc, _) = Curation.bpeEncode(batch.toDF(), "doc_id",
-                "text", mtDf, frozenVocab = Some(vbDf))
-              // overwrite-per-batch-path: a crash-replayed batch id
-              // rewrites its own directory instead of appending twice —
-              // the foreachBatch analog of the partition land protocol
-              enc.select(col("doc_id"), col("n_tokens"), col("n_ids"),
-                  array_join(col("ids"), " ").as("ids_str"))
-                .write.mode("overwrite").parquet(s"$work/out/b=$batchId")
-          }.start()
-        try { q.processAllAvailable() } finally q.stop()
-        s.read.parquet(s"$work/out").drop("b").orderBy(col("doc_id"))
       },
       Some(s"""WITH ${oBpeStages(6)},
         ${oBpeEncode(6)}
@@ -5370,26 +5101,22 @@ object LlmQueries {
     // one — the oracle is literally the batch a4 assignment.
     "l124_streaming_cluster_assign" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         val emb = t(s, d, "embeddings")
         val prep = Similarity.prepare(
           emb.withColumnRenamed("vec_id", "id"), "embedding")
         val cents = Similarity.kMeansCentroids(prep, "id", k = 8, iters = 3)
-        val work = stageEmbSlices(s, d, "graft_l124")
-        val stream = s.readStream
-          .schema("vec_id LONG, embedding ARRAY<FLOAT>")
-          .option("maxFilesPerTrigger", 1).parquet(s"$work/in/s*")
-        val routed = Similarity.routeToCentroids(
-          Similarity.prepare(stream, "embedding"), cents)
-          .select(col("vec_id"), col("cid"))
-        val q = routed.writeStream.format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(Trigger.ProcessingTime("50 milliseconds")).start()
-        try { q.processAllAvailable() } finally q.stop()
-        s.read.parquet(s"$work/out")
-          .select(col("vec_id"), col("cid").as("cluster_id"))
-          .orderBy(col("vec_id"))
+        Q.streamGate("graft_l124") { g =>
+          val in = g.stage(embSlices(s, d))
+          val out = s"${g.dir}/out"
+          g.run(ckpt => Similarity.routeToCentroids(
+              Similarity.prepare(in.stream(s), "embedding"), cents)
+            .select(col("vec_id"), col("cid"))
+            .writeStream.format("parquet").option("path", out)
+            .option("checkpointLocation", ckpt).trigger(g.trigger).start())
+          s.read.parquet(out)
+            .select(col("vec_id"), col("cid").as("cluster_id"))
+            .orderBy(col("vec_id"))
+        }
       },
       Some(s"""WITH $kmChain
         SELECT vec_id, cid AS cluster_id FROM a4 ORDER BY vec_id""")),
@@ -6098,18 +5825,8 @@ object LlmQueries {
     // df-cap evaluated against each batch's own pre-state.
     "l148_streaming_span_index" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         val name = "graft_l148_idx"
-        Seq(name, s"${name}_spans").foreach { tb =>
-          s.sql(s"DROP TABLE IF EXISTS $tb")
-          val loc = new java.net.URI(
-            s.conf.get("spark.sql.warehouse.dir")).getPath + s"/$tb"
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(); ()
-          }
-          rm(new java.io.File(loc))
-          rm(new java.io.File(s"${loc}__stage"))
-        }
+        Seq(name, s"${name}_spans").foreach(freshTable(s, _))
         val docs = t(s, d, "documents")
         val off = docs.agg(max(col("doc_id"))).head.getLong(0) + 1L
         val tks = split(col("text"), " ", -1)
@@ -6124,21 +5841,13 @@ object LlmQueries {
               array_join(slice(tks, 11, 50), " "), junk("jb")).as("text"))
           .withColumnRenamed("pid", "doc_id")
         val base = docs.select(col("doc_id"), col("text"))
-        val work = graft.queries.TempDirs.workDir("graft_l148")
         val maxId = off - 1L
-        Seq(base.filter(col("doc_id") <= maxId / 2),
-            base.filter(col("doc_id") > maxId / 2),
-            planted).zipWithIndex.foreach { case (sl, i) =>
-          sl.coalesce(1).write.parquet(s"$work/in/s$i")
-          new java.io.File(s"$work/in/s$i").listFiles()
-            .foreach(f => { f.setLastModified(1700000000000L + i * 60000L); () })
+        Q.streamGate("graft_l148") { g =>
+          val in = g.stage(Seq(base.filter(col("doc_id") <= maxId / 2),
+            base.filter(col("doc_id") > maxId / 2), planted))
+          g.run(graft.ops.DedupIndex.startSpanMaintenance(s, in.stream(s),
+            "doc_id", "text", name, _, minLen = 20, trigger = g.trigger))
         }
-        val stream = s.readStream.schema("doc_id LONG, text STRING")
-          .option("maxFilesPerTrigger", 1).parquet(s"$work/in/s*")
-        val q = graft.ops.DedupIndex.startSpanMaintenance(s, stream,
-          "doc_id", "text", name, s"$work/ckpt", minLen = 20,
-          trigger = Trigger.ProcessingTime("50 milliseconds"))
-        try { q.processAllAvailable() } finally q.stop()
         s.table(s"${name}_spans")
           .select(col("id_a"), col("id_b"), col("a_start"),
             col("b_start"), col("n_tokens"))
@@ -6249,20 +5958,16 @@ object LlmQueries {
     // by a fourth update round (c4).
     "l138_maintained_centroids" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         val emb = t(s, d, "embeddings")
         val prep = Similarity.prepare(
           emb.withColumnRenamed("vec_id", "id"), "embedding")
         val base = Similarity.kMeansCentroids(prep, "id", k = 8, iters = 3)
-        val work = stageEmbSlices(s, d, "graft_l138")
         val tbl = freshTable(s, "graft_l138_cents")
-        val stream = s.readStream
-          .schema("vec_id LONG, embedding ARRAY<FLOAT>")
-          .option("maxFilesPerTrigger", 1).parquet(s"$work/in/s*")
-        val q = Similarity.startCentroidMaintenance(s, stream, "vec_id",
-          "embedding", base, tbl, s"$work/ckpt",
-          Trigger.ProcessingTime("50 milliseconds"))
-        try { q.processAllAvailable() } finally q.stop()
+        Q.streamGate("graft_l138") { g =>
+          val in = g.stage(embSlices(s, d))
+          g.run(Similarity.startCentroidMaintenance(s, in.stream(s), "vec_id",
+            "embedding", base, tbl, _, g.trigger))
+        }
         val cents = Similarity.centroidsAt(s, tbl, base)
         import s.implicits._
         cents.toSeq.map { case (cid, n, sv, ss) =>
@@ -6287,22 +5992,18 @@ object LlmQueries {
     // chain extended to c5).
     "l140_maintained_epoch2" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         val emb = t(s, d, "embeddings")
         val prep = Similarity.prepare(
           emb.withColumnRenamed("vec_id", "id"), "embedding")
         var base = Similarity.kMeansCentroids(prep, "id", k = 8, iters = 3)
-        val work = stageEmbSlices(s, d, "graft_l140")
-        (1 to 2).foreach { epoch =>
-          val tbl = freshTable(s, s"graft_l140_cents_e$epoch")
-          val stream = s.readStream
-            .schema("vec_id LONG, embedding ARRAY<FLOAT>")
-            .option("maxFilesPerTrigger", 1).parquet(s"$work/in/s*")
-          val q = Similarity.startCentroidMaintenance(s, stream, "vec_id",
-            "embedding", base, tbl, s"$work/ckpt_e$epoch",
-            Trigger.ProcessingTime("50 milliseconds"))
-          try { q.processAllAvailable() } finally q.stop()
-          base = Similarity.centroidsAt(s, tbl, base) // the refreeze
+        Q.streamGate("graft_l140") { g =>
+          val in = g.stage(embSlices(s, d))
+          (1 to 2).foreach { epoch =>
+            val tbl = freshTable(s, s"graft_l140_cents_e$epoch")
+            g.run(Similarity.startCentroidMaintenance(s, in.stream(s),
+              "vec_id", "embedding", base, tbl, _, g.trigger))
+            base = Similarity.centroidsAt(s, tbl, base) // the refreeze
+          }
         }
         import s.implicits._
         base.toSeq.map { case (cid, n, sv, ss) =>
@@ -6328,20 +6029,16 @@ object LlmQueries {
     // versions relationally from the same assignment chain.
     "l139_centroid_drift" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         val emb = t(s, d, "embeddings")
         val prep = Similarity.prepare(
           emb.withColumnRenamed("vec_id", "id"), "embedding")
         val base = Similarity.kMeansCentroids(prep, "id", k = 8, iters = 3)
-        val work = stageEmbSlices(s, d, "graft_l139")
         val tbl = freshTable(s, "graft_l139_cents")
-        val stream = s.readStream
-          .schema("vec_id LONG, embedding ARRAY<FLOAT>")
-          .option("maxFilesPerTrigger", 1).parquet(s"$work/in/s*")
-        val q = Similarity.startCentroidMaintenance(s, stream, "vec_id",
-          "embedding", base, tbl, s"$work/ckpt",
-          Trigger.ProcessingTime("50 milliseconds"))
-        try { q.processAllAvailable() } finally q.stop()
+        Q.streamGate("graft_l139") { g =>
+          val in = g.stage(embSlices(s, d))
+          g.run(Similarity.startCentroidMaintenance(s, in.stream(s), "vec_id",
+            "embedding", base, tbl, _, g.trigger))
+        }
         Similarity.centroidDrift(s, tbl, base)
           .select(col("ingest_batch"), col("cid"), col("n_prev"),
             col("n_cur"), col("shift_l1_num"), col("denom"))
@@ -6386,31 +6083,19 @@ object LlmQueries {
     // — the oracle is literally the batch chain.
     "l134_streaming_url_admission" -> Def(
       (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
         val docs = t(s, d, "documents").select(col("doc_id"), col("source"))
-        val work = graft.queries.TempDirs.workDir("graft_l134")
-        val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-        Seq((0L, maxId / 3), (maxId / 3 + 1, 2 * maxId / 3),
-            (2 * maxId / 3 + 1, maxId)).zipWithIndex.foreach {
-          case ((lo, hi), i) =>
-            docs.filter(col("doc_id").between(lo, hi))
-              .coalesce(1).write.parquet(s"$work/in/s$i")
-            new java.io.File(s"$work/in/s$i").listFiles()
-              .foreach(f => { f.setLastModified(1700000000000L + i * 60000L); () })
+        Q.streamGate("graft_l134") { g =>
+          val in = g.stage(Q.idSlices(docs, "doc_id", 3))
+          val out = s"${g.dir}/out"
+          val canon = in.stream(s).withColumn("url", synthUrl)
+            .withColumn("url_canon", Curation.urlCanonicalize(col("url")))
+            .withColumn("host", Curation.urlHost(col("url_canon")))
+          g.run(ckpt => Curation.registrableDomain(canon, col("host"))
+            .select(col("doc_id"), col("url_canon"), col("domain"))
+            .writeStream.format("parquet").option("path", out)
+            .option("checkpointLocation", ckpt).trigger(g.trigger).start())
+          s.read.parquet(out).orderBy(col("doc_id"))
         }
-        val stream = s.readStream.schema("doc_id LONG, source STRING")
-          .option("maxFilesPerTrigger", 1).parquet(s"$work/in/s*")
-        val canon = stream.withColumn("url", synthUrl)
-          .withColumn("url_canon", Curation.urlCanonicalize(col("url")))
-          .withColumn("host", Curation.urlHost(col("url_canon")))
-        val out = Curation.registrableDomain(canon, col("host"))
-          .select(col("doc_id"), col("url_canon"), col("domain"))
-        val q = out.writeStream.format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(Trigger.ProcessingTime("50 milliseconds")).start()
-        try { q.processAllAvailable() } finally q.stop()
-        s.read.parquet(s"$work/out").orderBy(col("doc_id"))
       },
       Some(s"""WITH u0 AS (SELECT doc_id, source, $oSynthUrl AS url
           FROM documents),
@@ -6502,13 +6187,15 @@ object LlmQueries {
     * min-(hash48, id) row; round j computes every row's exact min-d² to
     * the chosen set (fm_j) and takes the max (fs_j), accumulating into
     * fsd_j with cid = selection ordinal. Seeds have n = 1, so d² =
-    * norm_sq − 2·(q·sv) + ss is exact BIGINT end to end.
+    * norm_sq − 2·(q·sv) + ss is exact BIGINT end to end. Each fsd_j is
+    * MATERIALIZED: round j+1 reads it twice (directly and through
+    * fm/fs), so an inlined chain would copy fsd1 2^(k−1) times.
     */
   private def fpSeedChain(k: Int): String = {
     val b = new StringBuilder
     b ++= s"""fs1 AS (SELECT q AS sv, norm_sq AS ss FROM qn
         ORDER BY ${oH48("CAST(vec_id AS VARCHAR)")}, vec_id LIMIT 1),
-      fsd1 AS (SELECT 0 AS cid, sv, ss FROM fs1)"""
+      fsd1 AS MATERIALIZED (SELECT 0 AS cid, sv, ss FROM fs1)"""
     for (j <- 2 to k) {
       b ++= s""",
       fm$j AS (SELECT v.vec_id,
@@ -6517,7 +6204,7 @@ object LlmQueries {
       fs$j AS (SELECT qn.q AS sv, qn.norm_sq AS ss FROM qn
         JOIN fm$j USING (vec_id)
         ORDER BY fm$j.md DESC, qn.vec_id ASC LIMIT 1),
-      fsd$j AS (SELECT * FROM fsd${j - 1}
+      fsd$j AS MATERIALIZED (SELECT * FROM fsd${j - 1}
         UNION ALL SELECT ${j - 1} AS cid, sv, ss FROM fs$j)"""
     }
     b.toString
@@ -6531,35 +6218,20 @@ object LlmQueries {
     */
   private def freshTable(s: SparkSession, name: String): String = {
     s.sql(s"DROP TABLE IF EXISTS $name")
-    val wh = new java.io.File(
-      s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), name)
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
     }
-    if (wh.exists) rm(wh)
+    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+    // DedupIndex also stages a table's batches under `<name>__stage`
+    Seq(name, s"${name}__stage").foreach(n => rm(new java.io.File(wh, n)))
     name
   }
 
-  /** Stage the embeddings as three vec_id-range slices with strictly
-    * increasing mtimes, for one-file-per-trigger ordered stream
-    * admission (the l124/l138/l139 harness). Returns the work dir.
-    */
-  private def stageEmbSlices(s: SparkSession, d: String,
-      tag: String): String = {
-    val emb = t(s, d, "embeddings")
-    val work = graft.queries.TempDirs.workDir(tag)
-    val maxId = emb.agg(max(col("vec_id"))).head().getLong(0)
-    Seq((0L, maxId / 3), (maxId / 3 + 1, 2 * maxId / 3),
-        (2 * maxId / 3 + 1, maxId)).zipWithIndex.foreach {
-      case ((lo, hi), i) =>
-        emb.filter(col("vec_id").between(lo, hi))
-          .select(col("vec_id"), col("embedding"))
-          .coalesce(1).write.parquet(s"$work/in/s$i")
-        new java.io.File(s"$work/in/s$i").listFiles()
-          .foreach(f => { f.setLastModified(1700000000000L + i * 60000L); () })
-    }
-    work.toString
-  }
+  /** The embeddings as three vec_id-range slices, the ordered stream
+    * input of the l124/l138/l139/l140 gates. */
+  private def embSlices(s: SparkSession, d: String): Seq[DataFrame] =
+    Q.idSlices(t(s, d, "embeddings").select(col("vec_id"), col("embedding")),
+      "vec_id", 3)
 
   /** The k=8 farthest-point-seeded k-means chain (l131). */
   private def kmChainFp: String = kmChainFrom(
@@ -6604,7 +6276,6 @@ object LlmQueries {
   private def runIntervalJoinStream(s: SparkSession, d: String,
       joinType: String, tag: String,
       extraCols: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val e = t(s, d, "events")
     val imps = e.select(col("event_id").as("imp_id"),
       col("user_id"), col("ts").as("imp_ts"))
@@ -6616,7 +6287,6 @@ object LlmQueries {
         .select((col("event_id") + 20000000L).as("click_id"),
           col("user_id").as("c_user"),
           (col("ts") + expr("INTERVAL 2 HOURS")).as("click_ts")))
-    val work = graft.queries.TempDirs.workDir(tag)
     // shared absolute cut points: admission is event-time-ordered on
     // BOTH sides, so a batch never carries a row older than a prior
     // batch's rows
@@ -6627,44 +6297,31 @@ object LlmQueries {
     }
     val cut1 = tMin + (tMax - tMin) / 3
     val cut2 = tMin + 2L * (tMax - tMin) / 3
-    def stage(df: DataFrame, tsCol: String, dir: String): String = {
+    def thirds(df: DataFrame, tsCol: String): Seq[DataFrame] = {
       val us = unix_micros(col(tsCol))
-      Seq(us < cut1, us >= cut1 && us < cut2, us >= cut2)
-        .zipWithIndex.foreach { case (pred, i) =>
-          df.filter(pred).coalesce(1)
-            .write.parquet(s"$work/$dir/s$i")
-          new java.io.File(s"$work/$dir/s$i").listFiles()
-            .foreach(x => {
-              x.setLastModified(1700000000000L + i * 60000L); ()
-            })
-        }
-      s"$work/$dir"
+      Seq(us < cut1, us >= cut1 && us < cut2, us >= cut2).map(df.filter)
     }
-    val impDir = stage(imps, "imp_ts", "imp")
-    val clkDir = stage(clicks, "click_ts", "clk")
-    val out = s"$work/out"
-    // state partitions sized from the staged input, not core count —
-    // the stream-stream join pays 4 state stores per partition per
-    // micro-batch (see Q.withStreamParts)
-    Q.withStreamParts(s, Q.dirBytes(impDir) + Q.dirBytes(clkDir)) {
-      def src(dir: String, schema: String) = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/s*")
-      val joined = graft.streaming.StreamingJoins.intervalJoin(
-        src(impDir, "imp_id LONG, user_id LONG, imp_ts TIMESTAMP")
-          .withColumnRenamed("user_id", "entity"),
-        src(clkDir, "click_id LONG, c_user LONG, click_ts TIMESTAMP")
-          .withColumnRenamed("c_user", "entity"),
-        keyCol = "entity", leftTs = "imp_ts", rightTs = "click_ts",
-        windowMinutes = 30L, watermarkDelay = "45 minutes",
-        joinType = joinType)
-      val q = joined
-        .select((Seq("click_id", "imp_id") ++ extraCols).map(col): _*)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", s"$work/ck")
-        .trigger(Trigger.ProcessingTime("50 milliseconds"))
-        .start(out)
-      try q.processAllAvailable() finally q.stop()
+    Q.streamGate(tag) { g =>
+      val imp = g.stage(thirds(imps, "imp_ts"))
+      val clk = g.stage(thirds(clicks, "click_ts"))
+      val out = s"${g.dir}/out"
+      // state partitions sized from the staged input, not core count —
+      // the stream-stream join pays 4 state stores per partition per
+      // micro-batch (see Q.withStreamParts)
+      Q.withStreamParts(s, imp.bytes + clk.bytes) {
+        val joined = graft.streaming.StreamingJoins.intervalJoin(
+          imp.stream(s).withColumnRenamed("user_id", "entity"),
+          clk.stream(s).withColumnRenamed("c_user", "entity"),
+          keyCol = "entity", leftTs = "imp_ts", rightTs = "click_ts",
+          windowMinutes = 30L, watermarkDelay = "45 minutes",
+          joinType = joinType)
+        g.run(ckpt => joined
+          .select((Seq("click_id", "imp_id") ++ extraCols).map(col): _*)
+          .writeStream.outputMode("append")
+          .option("checkpointLocation", ckpt).trigger(g.trigger)
+          .start(out))
+      }
+      s.read.parquet(out)
     }
-    s.read.parquet(out)
   }
 }

@@ -1,6 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, max}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Query-surface plumbing shared by the query groups.
   *
@@ -33,7 +36,7 @@ object Q {
       // UTC instant and every downstream query sees one stable type.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(s"$dir/$name.parquet")
-      import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+      import org.apache.spark.sql.functions.{expr, timestamp_micros}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType}
       raw.schema("ts").dataType match {
         case LongType => raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
@@ -102,5 +105,82 @@ object Q {
     val target = math.min(spark.conf.get(key).toLong,
       math.max(4L, (inputBytes + (64L << 20) - 1) / (64L << 20)))
     graft.ops.SessionConf.scoped(spark, key -> target.toString)(body)
+  }
+
+  /** `df` cut into `n` ordered slices on contiguous ranges of `idCol`
+    * that split [0, maxId] evenly: a gate's usual input slices. */
+  def idSlices(df: DataFrame, idCol: String, n: Int, maxId: Long): Seq[DataFrame] =
+    (0 until n).map { k =>
+      df.filter(col(idCol).between(if (k == 0) 0L else k * maxId / n + 1,
+        (k + 1) * maxId / n))
+    }
+
+  /** [[idSlices]] up to the largest `idCol` in `df`. */
+  def idSlices(df: DataFrame, idCol: String, n: Int): Seq[DataFrame] =
+    idSlices(df, idCol, n, df.agg(max(col(idCol))).head().getLong(0))
+
+  /** Ordered slices staged as files: slice i is the one file under
+    * `$dir/s$i`, with a forced mtime that strictly increases with i. */
+  final case class Staged(dir: String, schema: StructType, format: String) {
+
+    /** The slices as a file stream admitting one file per micro-batch,
+      * in mtime order: slice i is micro-batch i. */
+    def stream(spark: SparkSession): DataFrame =
+      spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+        .format(format).load(s"$dir/s*")
+
+    /** On-disk size: the input-size hint for [[withStreamParts]]. */
+    def bytes: Long = dirBytes(dir)
+  }
+
+  /** Write `slices` in order under `dir` as parquet or json, one
+    * `coalesce(1)` file each, for a gate's file stream to replay. */
+  def stage(slices: Seq[DataFrame], dir: String, format: String = "parquet"): Staged = {
+    slices.zipWithIndex.foreach { case (df, i) =>
+      df.coalesce(1).write.format(format).save(s"$dir/s$i")
+      new java.io.File(s"$dir/s$i").listFiles()
+        .foreach(f => { f.setLastModified(1700000000000L + i * 60000L); () })
+    }
+    Staged(dir, slices.head.schema, format)
+  }
+
+  /** One call of a stream gate: a bounded streaming query the surface
+    * runs to completion inside a query function, on state of its own.
+    *
+    * `dir` holds what the gate reads after its queries stop (sink
+    * output, state tables); it lives until the JVM exits, since the
+    * returned frame reads it lazily. Checkpoints and the slices staged
+    * through [[stage]] go to a scratch dir that [[streamGate]] releases
+    * when the gate returns. Every call gets fresh dirs: a checkpoint
+    * kept across calls would make a second call resume a finished query
+    * and run no micro-batch at all.
+    */
+  final class Gate private[Q] (tag: String) {
+    lazy val dir: String = TempDirs.workDir(tag).toString
+    private[Q] val scratch = TempDirs.workDir(tag + "_scratch")
+    private var fresh = 0
+    private def next(name: String): String = { fresh += 1; s"$scratch/$name$fresh" }
+
+    /** The one trigger every gate query runs on, and must: the query
+      * takes what is staged when it starts, still one file per
+      * micro-batch, runs any no-data batch its watermark needs, and
+      * stops itself, which is what [[run]] waits for. */
+    val trigger: Trigger = Trigger.AvailableNow()
+
+    /** Stage per-call parquet slices (see [[Q.stage]]) in the scratch dir. */
+    def stage(slices: Seq[DataFrame]): Staged = Q.stage(slices, next("in"))
+
+    /** Start a query on a fresh checkpoint (passed to `start`) and
+      * [[trigger]], wait until it has drained its input, and stop it. */
+    def run(start: String => StreamingQuery): Unit = {
+      val q = start(next("ckpt"))
+      try q.awaitTermination() finally q.stop()
+    }
+  }
+
+  /** Run `body` on a fresh [[Gate]], then release its scratch dir. */
+  def streamGate[T](tag: String)(body: Gate => T): T = {
+    val g = new Gate(tag)
+    try body(g) finally TempDirs.release(g.scratch)
   }
 }

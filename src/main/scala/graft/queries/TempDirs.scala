@@ -13,9 +13,9 @@ package graft.queries
   * composite hook (FileSystem.SHUTDOWN_HOOK_PRIORITY + 30 = 40), so it
   * runs strictly AFTER SparkContext stop / streaming-checkpoint flush —
   * a plain Runtime hook would race them concurrently and could delete a
-  * checkpoint dir mid-flush. Call sites whose output is fully consumed
-  * within the run can reclaim disk early via [[release]] instead of
-  * accumulating until exit.
+  * checkpoint dir mid-flush. What nothing reads after a query stops
+  * (a stream gate's checkpoints and per-call staged input) is reclaimed
+  * early via [[release]] by [[Q.streamGate]]; outputs stay until exit.
   */
 object TempDirs {
 
@@ -43,9 +43,9 @@ object TempDirs {
     p
   }
 
-  /** Eagerly delete a [[workDir]] whose output has been fully consumed
-    * (bounds within-JVM accumulation for long-lived sessions); safe to
-    * call at most once per path, idempotent against the exit hook. */
+  /** Eagerly delete a [[workDir]] that nothing reads any more (bounds
+    * within-JVM accumulation for long-lived sessions); idempotent, and
+    * against the exit hook. */
   def release(p: java.nio.file.Path): Unit =
     if (roots.remove(p)) rm(p.toFile)
 }

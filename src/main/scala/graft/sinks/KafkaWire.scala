@@ -530,13 +530,6 @@ object KafkaWire {
     frame(b)
   }
 
-  /** (error_code, offset) of a ListOffsets v2 response's first partition. */
-  def parseListOffsetsV2(body: Array[Byte]): (Short, Long) = {
-    val all = parseListOffsetsV2All(body)
-    require(all.nonEmpty, "list-offsets response without partitions")
-    all.valuesIterator.next()
-  }
-
   /** Every (topic, partition) → (error_code, offset) of a ListOffsets v2
     * response — the batched form's parse.
     */
@@ -914,16 +907,6 @@ object KafkaWire {
       TopicMeta(err, name, parts)
     }
     MetadataResponse(brokers, topics)
-  }
-
-  /** First partition's (error_code, base_offset) of a Produce v3+
-    * response body — the fields every version ≥3 lays out identically
-    * before its version-specific tail, which is all an ack-await needs.
-    */
-  def parseProduceResponse(body: Array[Byte]): (Short, Long) = {
-    val all = parseProduceResponseAll(body)
-    require(all.nonEmpty, "produce response without partitions")
-    all.head._2
   }
 
   /** Every (topic, partition) → (error, baseOffset) in a Produce v3

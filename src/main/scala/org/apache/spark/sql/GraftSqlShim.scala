@@ -20,10 +20,4 @@ object GraftSqlShim {
     ExpressionUtils.column(
       org.apache.spark.sql.catalyst.expressions.ScalarSubquery(
         df.asInstanceOf[classic.Dataset[_]].logicalPlan))
-
-  /** Register an expression builder as a SQL function on the session. */
-  def registerFunction(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "built-in")
 }
