@@ -24,7 +24,7 @@ import org.apache.spark.sql.expressions.Window
 object Apply {
 
   /** `base`: one row per key, row image under `baseImage`
-    * (map<string,string>). `changes`: CdcEvent-shaped rows carrying
+    * (map<string,string>). `changes`: normalized envelope rows carrying
     * `operation`, an image column (`after`; null for DELETEs) and a
     * numeric WAL-order column `seq`. Returns keys + `image`.
     */

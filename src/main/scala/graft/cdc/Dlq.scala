@@ -73,8 +73,10 @@ object Dlq {
   }
 
   /** Split normalized events into (publishable, quarantined) by the given
-    * error column; quarantined rows carry DeadLetterRecord fields
-    * (dlq.go:19-33): truncated payload prefix, dlq-routed subject.
+    * error column; quarantined rows carry the reference's dead-letter
+    * fields (dlq.go:19-33): event_id, dlq-routed subject, database,
+    * schema, table, operation, lsn, txid, error, payload_size, truncated,
+    * payload_prefix (truncated) and quarantined_at.
     */
   def quarantine(events: DataFrame, errorCol: Column, payloadCol: Column,
       database: String, dlqPrefix: String = "dlq"): (DataFrame, DataFrame) = {

@@ -38,7 +38,10 @@ import graft.streaming.DecodedWalEvent
   */
 object PgOutput {
 
-  /** Relation registry entry (reference relationInfo, pgoutput.go:20-26). */
+  /** Relation registry entry (reference relationInfo, pgoutput.go:20-26);
+    * streaming decode checkpoints it inside a serialized slot state.
+    */
+  @SerialVersionUID(1L)
   case class RelationInfo(id: Int, schema: String, table: String,
       columns: Array[String], columnTypes: Array[Int])
 

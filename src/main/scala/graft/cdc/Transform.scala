@@ -3,8 +3,9 @@ package graft.cdc
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Normalize/enrich stage: WalEvent -> CdcEvent envelope
-  * (reference: internal/transformer/transformer.go:33-106). All pure
+/** Normalize/enrich stage: decoded, sequenced WAL rows -> the published
+  * event envelope (reference: internal/transformer/transformer.go:33-106,
+  * columns in [[normalize]]'s doc). All pure
   * column expressions — codegen'd, no shuffle, scales linearly.
   */
 object Transform {
@@ -52,9 +53,11 @@ object Transform {
     concat(lower(hex(shiftrightunsigned(pos, 32))), lit("/"),
            lower(hex(pos.bitwiseAND(lit(0xffffffffL)))))
 
-  /** Full normalize: decoded+sequenced WAL rows -> CdcEvent envelope columns.
-    * Expects columns: operation, schema_name, table_name, old_values,
-    * new_values, txid, commit_time, wal_start, seq_in_tx.
+  /** Full normalize: decoded+sequenced WAL rows -> envelope columns
+    * event_id, event_type, source, timestamp, commit_time, lsn, txid,
+    * schema, table, operation, before, after (string maps), metadata,
+    * subject. Expects columns: operation, schema_name, table_name,
+    * old_values, new_values, txid, commit_time, wal_start, seq_in_tx.
     */
   def normalize(df: DataFrame, database: String, source: String = "postgres"): DataFrame = {
     val lsn = lsnString(col("wal_start"))
@@ -90,7 +93,7 @@ object Transform {
   /** [[envelopeJson]]'s inverse: the CONSUMER-side parse. A subscriber
     * receives the serialized envelope from the broker (the reference's
     * consumers bind exactly these JSON tags off JetStream,
-    * model/events.go:105-119) and gets back the typed CdcEvent columns
+    * model/events.go:105-119) and gets back the typed envelope columns
     * [[normalize]] produced — ready for the apply/SCD2/MV loops, whose
     * key extraction and `lsn` sequencing read the same names. One
     * codegen'd `from_json`, no UDF.

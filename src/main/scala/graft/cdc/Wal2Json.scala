@@ -74,7 +74,7 @@ object Wal2Json {
   private def colsToMap(c: Column): Column =
     when(c.isNotNull, map_from_entries(transform(c, x => struct(x("name"), x("value")))))
 
-  /** Decode a DataFrame of raw wal2json lines into WalEvent-shaped rows.
+  /** Decode a DataFrame of raw wal2json lines into one row per WAL event.
     *
     * @param raw         input with `walStartCol` (long carrier position,
     *                    reference internal/parser/parser.go:21-26) and

@@ -225,7 +225,7 @@ object CdcQueries {
         MAX(ts) OVER (PARTITION BY user_id) AS commit_time
         FROM events ORDER BY src_event_id""")),
 
-    // T1+T2+T3: normalize to the CdcEvent envelope with deterministic
+    // T1+T2+T3: normalize to the published envelope with deterministic
     // event_id (lsn:txid:op:schema.table:seq) and subject routing.
     //
     // Reads normalizedCached EXPLICITLY and memoizes the built frame:

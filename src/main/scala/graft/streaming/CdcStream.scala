@@ -240,21 +240,4 @@ object CdcStream {
       }
       .start()
   }
-
-  /** Start from a validated [[graft.config.GraftConfig]]: batch cadence,
-    * table filters, dedup window, publish mode and retry budget all come
-    * from the config surface instead of per-call-site constants.
-    */
-  def startFromConfig(spark: SparkSession, raw: DataFrame,
-      cfg: graft.config.GraftConfig, outPath: String,
-      checkpointPath: String): StreamingQuery = {
-    cfg.validate.foreach(err => throw new IllegalArgumentException(err))
-    start(spark, raw, cfg.database, outPath, checkpointPath,
-      tableAllowlist = cfg.tableFilters,
-      trigger = Trigger.ProcessingTime(cfg.batchTimeout.toMillis, java.util.concurrent.TimeUnit.MILLISECONDS),
-      unsafeUnorderedAsyncPublish = cfg.unsafeUnorderedAsyncPublish,
-      maxPublishRetries = cfg.maxPublishRetries,
-      dedupWatermark = s"${cfg.duplicateWindow.toSeconds} seconds",
-      plugin = cfg.plugin)
-  }
 }

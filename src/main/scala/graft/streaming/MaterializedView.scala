@@ -572,7 +572,7 @@ object MaterializedView {
   }
 
   /** Start maintaining the view. `events` is a streaming frame of
-    * normalized CdcEvents ([[graft.cdc.Transform.normalize]] columns);
+    * normalized events ([[graft.cdc.Transform.normalize]] columns);
     * keys are extracted from the row image (`after`, falling back to
     * `before` for DELETEs) by name. `seq` supplies the WAL order used to
     * pick each key's winner within a batch (e.g. a numeric wal position

@@ -20,8 +20,11 @@ case class PgOutputFrame(slot: String, wal_start: Long, data: Array[Byte])
   * can span a batch boundary like a v1 transaction can) and, per
   * in-flight streamed top-level tx, the (sub)xids whose changes were
   * observed, so a StreamCommit in a later batch still fans out to every
-  * member.
+  * member. Stored as one [[StateBlob]] (see [[TxState]] for why), so this
+  * class and those it holds keep explicit serial version UIDs: they are
+  * the checkpointed state layout.
   */
+@SerialVersionUID(1L)
 case class PgSlotState(
     relations: Map[Int, PgOutput.RelationInfo],
     xid: Long,
@@ -30,8 +33,10 @@ case class PgSlotState(
     streams: Map[Long, Seq[Long]])
 
 /** A decoded pgoutput data row: the payload transaction assembly buffers
-  * ([[StreamingTxAssembly]]), flattened again after it.
+  * ([[StreamingTxAssembly]]), flattened again after it. Buffered rows are
+  * stored in a [[StateBlob]], hence the explicit serial version UID.
   */
+@SerialVersionUID(1L)
 case class PgRow(
     operation: String,
     schema_name: String,
@@ -62,9 +67,9 @@ object PgOutputStream {
     */
   def decodeSlot(corruptPolicy: String)(slot: String,
       frames: Iterator[PgOutputFrame],
-      state: GroupState[PgSlotState]): Iterator[DecodedWalEvent] = {
+      state: GroupState[Array[Byte]]): Iterator[DecodedWalEvent] = {
     val session = new PgOutput.DecodeSession
-    state.getOption.foreach { st =>
+    state.getOption.map(StateBlob.read[PgSlotState]).foreach { st =>
       session.registry ++= st.relations
       session.currentXid = st.xid
       session.currentTs = st.ts
@@ -97,9 +102,9 @@ object PgOutputStream {
             session.currentXid, session.currentTs))
       }
     }
-    state.update(PgSlotState(session.registry.toMap, session.currentXid,
-      session.currentTs, session.streamTop,
-      session.streamXids.map { case (top, xids) => top -> xids.toSeq }.toMap))
+    state.update(StateBlob.write(PgSlotState(session.registry.toMap,
+      session.currentXid, session.currentTs, session.streamTop,
+      session.streamXids.map { case (top, xids) => top -> xids.toSeq }.toMap)))
     out.iterator
   }
 

@@ -28,7 +28,7 @@ import graft.cdc.Transform
   */
 object SnapshotBootstrap {
 
-  /** Normalize a batch table state into the CdcEvent envelope (same
+  /** Normalize a batch table state into the published event envelope (same
     * columns as [[graft.cdc.Transform.normalize]]): operation SNAPSHOT,
     * txid 0, lsn = the slot's consistent point, after = full row image as
     * a string map, before = null — mirroring an INSERT-shaped initial

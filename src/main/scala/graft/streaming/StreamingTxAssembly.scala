@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream,
+  ObjectOutputStream, ObjectStreamClass}
 import java.sql.Timestamp
 import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -43,8 +45,7 @@ case class TxLine[P](
   * likewise keys event identity on lsn:txid, never txid alone). The
   * tombstone is evicted when the WATERMARK passes commit_time + dedup
   * window — exactly dropDuplicatesWithinWatermark's retention rule, the
-  * DUPLICATE_WINDOW analog. Field names and types are the checkpointed
-  * state layout: keep them.
+  * DUPLICATE_WINDOW analog. Stored as a [[TxState]].
   */
 case class TxBuffer[P](lines: List[(Long, P)],
     committedAtMs: Option[Long] = None,
@@ -55,7 +56,51 @@ case class TxBuffer[P](lines: List[(Long, P)],
     // existed (first micro-batch, wm=0): that deadline fires the moment a
     // real watermark establishes, and the handler must then START the TTL
     // clock rather than evict a possibly-live buffer
-    provisionalTimeout: Boolean = false)
+    provisionalTimeout: Boolean = false) {
+  def stored: TxState = TxState(if (lines.isEmpty) null else StateBlob.write(lines),
+    committedAtMs, committedLsn, provisionalTimeout)
+}
+
+/** A [[TxBuffer]] as the assembly operator stores it: the flat fields as
+  * columns and the buffered lines as one [[StateBlob]], null when nothing
+  * is buffered (so the per-trigger timeout scan over tombstones decodes
+  * no blob). A state type without collection or map fields gets a codec
+  * whose generated source is the same on every trigger, so Spark compiles
+  * it once per JVM instead of once per trigger. Field names and types are
+  * the checkpointed state layout: keep them.
+  */
+case class TxState(lines: Array[Byte], committedAtMs: Option[Long],
+    committedLsn: Long, provisionalTimeout: Boolean) {
+  def buffer[P]: TxBuffer[P] = TxBuffer(
+    if (lines == null) Nil else StateBlob.read[List[(Long, P)]](lines),
+    committedAtMs, committedLsn, provisionalTimeout)
+}
+
+/** Java serialization of a keyed-state value into one binary column.
+  * Classes are resolved through the task's context class loader, where
+  * the application's classes live. Every project class stored this way
+  * (`PgRow`, `PgSlotState`, `PgOutput.RelationInfo`) carries an explicit
+  * `@SerialVersionUID`, so recompiling does not orphan a checkpoint.
+  */
+private[streaming] object StateBlob {
+  def write(v: AnyRef): Array[Byte] = {
+    val bytes = new ByteArrayOutputStream()
+    val out = new ObjectOutputStream(bytes)
+    out.writeObject(v)
+    out.close()
+    bytes.toByteArray
+  }
+
+  def read[T](b: Array[Byte]): T = {
+    val loader = Thread.currentThread().getContextClassLoader
+    val in = new ObjectInputStream(new ByteArrayInputStream(b)) {
+      override def resolveClass(d: ObjectStreamClass): Class[_] =
+        try Class.forName(d.getName, false, loader)
+        catch { case _: ClassNotFoundException => super.resolveClass(d) }
+    }
+    try in.readObject().asInstanceOf[T] finally in.close()
+  }
+}
 
 /** Assembled line with commit metadata + deterministic ordinal; the
   * payload is unpacked downstream (Wal2Json.decodePayload, or a flatten of
@@ -118,14 +163,14 @@ object StreamingTxAssembly {
     */
   def assembleRawTx[P](txTtlMs: Long, dedupTtlMs: Long)(
       txid: Long, it: Iterator[TxLine[P]],
-      state: GroupState[TxBuffer[P]]): Iterator[SequencedLine[P]] = {
+      state: GroupState[TxState]): Iterator[SequencedLine[P]] = {
     // setTimeoutTimestamp rejects timestamps at or behind the watermark —
     // clamp (a tombstone whose window already passed evicts next batch)
     def armAt(ms: Long): Unit =
       state.setTimeoutTimestamp(math.max(ms, state.getCurrentWatermarkMs() + 1))
     if (state.hasTimedOut) {
       val st = state.get
-      if (st.lines.nonEmpty && st.provisionalTimeout) {
+      if (st.lines != null && st.provisionalTimeout) {
         // the pre-watermark sentinel deadline (armed at wm+1 in the first
         // micro-batch) fired: a watermark now exists, so start the REAL
         // abandoned-tx clock — evicting here would drop a transaction
@@ -135,7 +180,7 @@ object StreamingTxAssembly {
       } else state.remove()
       Iterator.empty
     } else {
-      val st = state.getOption.getOrElse(TxBuffer[P](Nil))
+      val st = state.getOption.fold(TxBuffer[P](Nil))(_.buffer[P])
       // positional replay drop: anything at or below the last committed
       // position of this txid is a redelivery; higher positions are the
       // NEXT transaction under a recycled txid. Arrivals are processed in
@@ -192,7 +237,7 @@ object StreamingTxAssembly {
         val provisional =
           buf.nonEmpty && txTtlMs > 0 && state.getCurrentWatermarkMs() <= 0
         state.update(
-          TxBuffer(buf, if (tombstone) tombAtMs else None, tombLsn, provisional))
+          TxBuffer(buf, if (tombstone) tombAtMs else None, tombLsn, provisional).stored)
         if (buf.nonEmpty) {
           if (txTtlMs > 0) {
             if (provisional) armAt(1L) // clamps to wm+1

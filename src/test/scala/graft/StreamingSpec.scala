@@ -687,7 +687,57 @@ class StreamingSpec extends SparkSpec {
     batch.unpersist()
   }
 
-  test("startFromConfig wires the E3 flag + batch cadence from the env surface (config round trip)") {
+  test("keyed state codecs are codegen-stable: warm triggers compile nothing (both plugins)") {
+    // Spark caches generated classes by source text. A state type with
+    // collection or map fields gets a codec with fresh variable names on
+    // every trigger, and so a compile per trigger. Commit times are
+    // all equal, so after the first batch the watermark (and with it the
+    // late-row predicate) stays put; each batch commits the transaction
+    // the previous one left open, so buffers are written and read back.
+    import graft.cdc.PgWire
+    import org.apache.spark.metrics.source.CodegenMetrics
+    implicit val sctx = spark.sqlContext
+    val t0 = 1705314600123456L
+    def walBatch(i: Int): Seq[(Long, String)] = {
+      val ws = 100L * i + 10
+      (if (i > 0) Seq(walLine(ws, "C", 1999 + i)) else Nil) ++ Seq(
+        walLine(ws + 1, "B", 1000 + i), walLine(ws + 2, "I", 1000 + i, id = i),
+        walLine(ws + 3, "C", 1000 + i), walLine(ws + 4, "B", 2000 + i),
+        walLine(ws + 5, "I", 2000 + i, id = -i))
+    }
+    def pgBatch(i: Int): Seq[(Long, Array[Byte])] = {
+      val ws = 100L * i + 10
+      (if (i > 0) Seq((ws, PgWire.commit(ws, ws + 1, t0)))
+       else Seq((1L, PgWire.relation(100, "public", "users",
+         Seq("id" -> 20, "name" -> 25))))) ++ Seq(
+        (ws + 1, PgWire.begin(ws + 3, t0, 1000 + i)),
+        (ws + 2, PgWire.insert(100, Seq(Some(s"$i"), Some("a")))),
+        (ws + 3, PgWire.commit(ws + 3, ws + 4, t0)),
+        (ws + 4, PgWire.begin(ws + 100, t0, 2000 + i)),
+        (ws + 5, PgWire.insert(100, Seq(Some(s"-$i"), Some("b")))))
+    }
+    def compilesPerWarmBatches[T](plugin: String, input: MemoryStream[T],
+        batch: Int => Seq[T]): Long = {
+      val out = Files.createTempDirectory(s"graft_codegen_$plugin").toString
+      val q = CdcStream.start(spark, input.toDF().toDF("wal_start", "data"),
+        "testdb", s"$out/sink", s"$out/ckpt", plugin = plugin)
+      try {
+        def run(i: Int): Unit = { input.addData(batch(i): _*); q.processAllAvailable() }
+        (0 until 2).foreach(run)
+        val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        (2 until 7).foreach(run)
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+        // every batch's transactions arrived: 2 per batch after the first
+        assert(spark.read.parquet(s"$out/sink").count() == 13)
+        compiles
+      } finally q.stop()
+    }
+    val wal = compilesPerWarmBatches("wal2json", MemoryStream[(Long, String)], walBatch)
+    val pg = compilesPerWarmBatches("pgoutput", MemoryStream[(Long, Array[Byte])], pgBatch)
+    assert((wal, pg) == ((0L, 0L)), "(wal2json, pgoutput) compiles over 5 warm batches")
+  }
+
+  test("config round trip: E3 flag + batch cadence reach CdcStream.start") {
     val cfg = graft.config.GraftConfig.load(Map(
       "UNSAFE_UNORDERED_ASYNC_PUBLISH" -> "true",
       "BATCH_TIMEOUT" -> "50ms",
@@ -699,14 +749,17 @@ class StreamingSpec extends SparkSpec {
       (1 to 3).map(i => walLine(i * 10L, "I", 1, id = i)) :+ walLine(40, "C", 1): _*)
     val out = Files.createTempDirectory("graft_cfg_out").toString
     val ckpt = Files.createTempDirectory("graft_cfg_ckpt").toString
-    val q = CdcStream.startFromConfig(spark, input.toDF()
-      .toDF("wal_start", "data"), cfg, out, ckpt)
+    val q = CdcStream.start(spark, input.toDF().toDF("wal_start", "data"),
+      cfg.database, out, ckpt,
+      trigger = Trigger.ProcessingTime(cfg.batchTimeout.toMillis,
+        java.util.concurrent.TimeUnit.MILLISECONDS),
+      unsafeUnorderedAsyncPublish = cfg.unsafeUnorderedAsyncPublish)
     try q.processAllAvailable() finally q.stop()
     val written = spark.read.parquet(out)
     assert(written.count() == 3, "commit-gated events land through the unordered sink")
   }
 
-  test("startFromConfig selects the pgoutput pipeline from CDC_PLUGIN (reference default plugin)") {
+  test("config round trip: CDC_PLUGIN=pgoutput selects the pgoutput pipeline") {
     val cfg = graft.config.GraftConfig.load(Map(
       "CDC_PLUGIN" -> "pgoutput",
       "BATCH_TIMEOUT" -> "50ms",
@@ -725,8 +778,8 @@ class StreamingSpec extends SparkSpec {
       (60L, PgWire.insert(100, Seq(Some("2"), Some("bob")))))
     val out = Files.createTempDirectory("graft_pgcfg_out").toString
     val ckpt = Files.createTempDirectory("graft_pgcfg_ckpt").toString
-    val q = CdcStream.startFromConfig(spark, input.toDF()
-      .toDF("wal_start", "data"), cfg, out, ckpt)
+    val q = CdcStream.start(spark, input.toDF().toDF("wal_start", "data"),
+      cfg.database, out, ckpt, plugin = cfg.plugin)
     try q.processAllAvailable() finally q.stop()
     val written = spark.read.parquet(out)
     assert(written.count() == 1, "only the committed pgoutput tx emits")
