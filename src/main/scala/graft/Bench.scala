@@ -408,33 +408,24 @@ object Bench {
     * machinery (state commits, offset/commit log, sink job) was ~45% of
     * wall at this state size.
     */
-  private val StreamFilesPerTrigger = 4L
+  private val StreamFilesPerTrigger = 4
 
-  /** Stage the WAL as 8 mtime-ordered parquet slices under `inDir`.
-    * The file source admits files in modification-time order — tied
-    * mtimes (one parallel write) make admission order nondeterministic
-    * and a commit marker admitted before its events strands that tx in
-    * state (a real WAL can never deliver post-commit events, so the
-    * operator rightly assumes order). Strictly increasing mtimes make
-    * admission order WAL order, like segment files of an archived WAL.
+  /** The WAL cut into 8 slices of consecutive positions, each sorted by
+    * position, for [[graft.queries.Q.stage]]. The file source admits
+    * files in modification-time order — tied mtimes (one parallel write)
+    * make admission order nondeterministic and a commit marker admitted
+    * before its events strands that tx in state (a real WAL can never
+    * deliver post-commit events, so the operator rightly assumes order).
+    * `Q.stage`'s strictly increasing mtimes make admission order WAL
+    * order, like segment files of an archived WAL.
     */
-  private def stageWalSlices(spark: SparkSession,
-      filed0: org.apache.spark.sql.DataFrame, tmp: java.nio.file.Path,
-      inDir: java.io.File): Unit = {
+  private def walSlices(wal: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.DataFrame] = {
     import org.apache.spark.sql.functions.{col, ntile}
     val win = org.apache.spark.sql.expressions.Window.orderBy(col("wal_start"))
-    val filed = filed0.withColumn("_f", ntile(8).over(win))
-    for (f <- 1 to 8) {
-      val sliceDir = s"$tmp/slice$f"
-      filed.filter(col("_f") === f).drop("_f")
-        .coalesce(1).sortWithinPartitions("wal_start")
-        .write.mode("overwrite").parquet(sliceDir)
-      val part = new java.io.File(sliceDir).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dest = new java.io.File(inDir, f"wal-$f%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dest.toPath)
-      dest.setLastModified(1700000000000L + f * 60000L)
-    }
+    val filed = wal.withColumn("_f", ntile(8).over(win))
+    (1 to 8).map(f => filed.filter(col("_f") === f).drop("_f")
+      .coalesce(1).sortWithinPartitions("wal_start"))
   }
 
   /** Streaming throughput — the reference's actual operating mode: a real
@@ -449,10 +440,9 @@ object Bench {
     import org.apache.spark.sql.streaming.Trigger
     val nEvents = countEvents(spark, sfDir)
     val tmp = graft.queries.TempDirs.workDir("graft_bench_stream")
-    val inDir = new java.io.File(s"$tmp/in"); inDir.mkdirs()
     val outDir = s"$tmp/out"; val ckDir = s"$tmp/ck"
-    stageWalSlices(spark, graft.queries.CdcQueries.walStream(spark, sfDir),
-      tmp, inDir)
+    val staged = graft.queries.Q.stage(
+      walSlices(graft.queries.CdcQueries.walStream(spark, sfDir)), s"$tmp/in")
     // Best-of-3 like the batch queries (same ±45% scheduler-noise
     // rationale); each rep gets fresh sink/checkpoint dirs.
     // AvailableNow appends a trailing no-data batch for watermark
@@ -468,9 +458,7 @@ object Bench {
       // 1354 ms cold → 866 ms warm on identical input). Timed reps then
       // measure the pipeline, not first-run compilation.
       (0 to 3).map { rep =>
-        val raw = spark.readStream.schema("wal_start LONG, data STRING")
-          .option("maxFilesPerTrigger", StreamFilesPerTrigger)
-          .parquet(inDir.toString)
+        val raw = staged.stream(spark, StreamFilesPerTrigger)
         val t0 = System.nanoTime()
         val q = graft.streaming.CdcStream.start(spark, raw, "bench",
           s"$outDir-$rep", s"$ckDir-$rep",
@@ -519,7 +507,6 @@ object Bench {
     import org.apache.spark.sql.streaming.Trigger
     val nEvents = countEvents(spark, sfDir)
     val tmp = graft.queries.TempDirs.workDir("graft_bench_stream10x")
-    val inDir = new java.io.File(s"$tmp/in"); inDir.mkdirs()
     val outDir = s"$tmp/out"; val ckDir = s"$tmp/ck"
     val e = graft.queries.Q.t(spark, sfDir, "events")
     val e10 = (0 until 10).map { k =>
@@ -527,8 +514,8 @@ object Bench {
         col("ts"), (col("user_id") + lit(k * 1000000000L)).as("user_id"),
         col("event_type"), col("value"), col("props"))
     }.reduce(_ unionByName _)
-    stageWalSlices(spark,
-      graft.queries.CdcQueries.walStreamFrom(spark, e10), tmp, inDir)
+    val staged = graft.queries.Q.stage(
+      walSlices(graft.queries.CdcQueries.walStreamFrom(spark, e10)), s"$tmp/in")
     // This figure exists to measure the 100 TB shape (big triggers), so
     // it ALWAYS runs the at-scale state-store pairing: RocksDB with
     // changelog checkpointing, whose per-commit cost is O(delta). The
@@ -554,9 +541,7 @@ object Bench {
     // exactly that first-rep cliff); timed reps then best-of-2.
     val reps = SessionConf.scoped(spark, StreamConfs ++ rocksDb: _*) {
       (0 to 2).map { rep =>
-        val raw = spark.readStream.schema("wal_start LONG, data STRING")
-          .option("maxFilesPerTrigger", StreamFilesPerTrigger)
-          .parquet(inDir.toString)
+        val raw = staged.stream(spark, StreamFilesPerTrigger)
         val t0 = System.nanoTime()
         val q = graft.streaming.CdcStream.start(spark, raw, "bench",
           s"$outDir-$rep", s"$ckDir-$rep",

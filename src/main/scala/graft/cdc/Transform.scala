@@ -12,9 +12,16 @@ object Transform {
 
   /** operation -> cdc.* event type (transformer.go:61-73). Unknown ops fall
     * back to `cdc.<lower(op)>`, mirroring the reference's default arm.
+    * The ops the decoders emit are ASCII, so lower-casing is an ASCII
+    * `translate`: Spark 4's `lower` maps case through ICU, whose one-time
+    * initialisation stalled the first batch with rows.
     */
   def eventType(op: Column): Column =
-    concat(lit("cdc."), lower(op))
+    concat(lit("cdc."), asciiLower(op))
+
+  /** Lower-case the ASCII letters of `c`, without ICU. */
+  private def asciiLower(c: Column): Column =
+    translate(c, "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz")
 
   /** Deterministic idempotency key:
     * `event_id = lsn:txid:op:schema.table:seqInTx`
@@ -50,8 +57,8 @@ object Transform {
     * upper-case there, lower-case here; the format is internal to our engine).
     */
   def lsnString(pos: Column): Column =
-    concat(lower(hex(shiftrightunsigned(pos, 32))), lit("/"),
-           lower(hex(pos.bitwiseAND(lit(0xffffffffL)))))
+    concat(asciiLower(hex(shiftrightunsigned(pos, 32))), lit("/"),
+           asciiLower(hex(pos.bitwiseAND(lit(0xffffffffL)))))
 
   /** Full normalize: decoded+sequenced WAL rows -> envelope columns
     * event_id, event_type, source, timestamp, commit_time, lsn, txid,

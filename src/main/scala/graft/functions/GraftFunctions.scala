@@ -11,10 +11,12 @@ import org.apache.spark.sql.SparkSession
 object GraftFunctions {
 
   def register(spark: SparkSession): Unit = {
-    // canonical X/Y LSN rendering (Transform.lsnString)
+    // canonical X/Y LSN rendering (Transform.lsnString). Case is mapped
+    // with ASCII translate, not ICU-backed lower(), like the Column API
     spark.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_lsn(pos BIGINT)
       RETURNS STRING
-      RETURN lower(hex(shiftrightunsigned(pos, 32))) || '/' || lower(hex(pos & 4294967295))""")
+      RETURN translate(hex(shiftrightunsigned(pos, 32)), 'ABCDEF', 'abcdef') || '/' ||
+        translate(hex(pos & 4294967295), 'ABCDEF', 'abcdef')""")
 
     // deterministic idempotency key (Transform.eventId; transformer.go:85-106)
     spark.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_event_id(
@@ -37,7 +39,8 @@ object GraftFunctions {
     // operation -> event type (Transform.eventType; transformer.go:61-73)
     spark.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_event_type(op STRING)
       RETURNS STRING
-      RETURN 'cdc.' || lower(op)""")
+      RETURN 'cdc.' || translate(op, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ',
+        'abcdefghijklmnopqrstuvwxyz')""")
 
     // NATS-token sanitization (dlq.go:56-63)
     spark.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_sanitize_token(s STRING)

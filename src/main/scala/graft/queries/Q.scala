@@ -123,10 +123,12 @@ object Q {
     * `$dir/s$i`, with a forced mtime that strictly increases with i. */
   final case class Staged(dir: String, schema: StructType, format: String) {
 
-    /** The slices as a file stream admitting one file per micro-batch,
-      * in mtime order: slice i is micro-batch i. */
-    def stream(spark: SparkSession): DataFrame =
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+    /** The slices as a file stream admitting `filesPerTrigger` files per
+      * micro-batch, in mtime order: with the default 1, slice i is
+      * micro-batch i. */
+    def stream(spark: SparkSession, filesPerTrigger: Int = 1): DataFrame =
+      spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", filesPerTrigger.toLong)
         .format(format).load(s"$dir/s*")
 
     /** On-disk size: the input-size hint for [[withStreamParts]]. */

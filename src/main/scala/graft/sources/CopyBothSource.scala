@@ -218,7 +218,14 @@ final case class LsnRangePartition(rows: Seq[(Long, Array[Byte])],
   *    and drops acked frames from the buffer;
   *  - keepalives never produce rows but advance the server head; a
   *    keepalive with replyRequested answers immediately with the current
-  *    confirmed position (reader.go:470-489).
+  *    confirmed position (reader.go:470-489);
+  *  - no offset before the first positioned frame: from the initial
+  *    offset, `latestOffset` answers null (no data yet) until an XLogData
+  *    frame with a non-zero walStart is admitted — keepalives and held
+  *    walStart-0 frames offer none — so the engine runs no empty first
+  *    micro-batch and the backlog's batch is the one cold trigger. A
+  *    resumed instance answers with its checkpointed start; a null start
+  *    reads as the initial offset.
   *
   * Driver-side and single-threaded like the reference's reader goroutine:
   * one slot is one serial stream. This class is the protocol skeleton the
@@ -289,11 +296,14 @@ final class CopyBothWalStream(connect: () => ReplicationConnection,
     maxMessages.map(n => ReadLimit.maxRows(n.toLong))
       .getOrElse(ReadLimit.allAvailable())
 
+  private def lsnOf(o: Offset): Long =
+    if (o == null) 0L else o.asInstanceOf[LsnOffset].lsn
+
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     drainConnection()
     // the head never regresses below the engine's start offset — a fresh
     // instance resuming from a checkpoint starts AT the checkpoint
-    head = math.max(head, start.asInstanceOf[LsnOffset].lsn)
+    head = math.max(head, lsnOf(start))
     val cap = limit match {
       case f: ReadMaxFiles => f.maxFiles()
       case r: ReadMaxRows => r.maxRows().toInt
@@ -306,13 +316,13 @@ final class CopyBothWalStream(connect: () => ReplicationConnection,
       head = math.max(head, msg._1)
       admitted += 1
     }
-    LsnOffset(head)
+    if (head == 0L) null else LsnOffset(head)
   }
 
   override def deserializeOffset(json: String): Offset = LsnOffset(json.toLong)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val lo = start.asInstanceOf[LsnOffset].lsn
+    val lo = lsnOf(start)
     val hi = end.asInstanceOf[LsnOffset].lsn
     // a replayed range may be planned by a fresh instance (task retry /
     // restart): drain so the connection's slot redelivery is visible.

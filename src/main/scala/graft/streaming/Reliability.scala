@@ -28,9 +28,17 @@ object Reliability {
     */
   private val SqlStateSuffix = """.*\(([0-9A-Z]{5})\)\s*$""".r
 
+  /** Spark's refusal to resume a checkpoint whose state schema differs
+    * from the query's: every restart from that checkpoint fails alike. */
+  private val FatalConditions = Set(
+    "STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE",
+    "STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE")
+
   def isFatal(e: Throwable): Boolean = e match {
     case s: java.sql.SQLException => isFatalSqlState(s.getSQLState)
     case _: SecurityException => true
+    case s: org.apache.spark.SparkThrowable
+        if FatalConditions.contains(s.getCondition) => true
     case io: java.io.IOException
         if io.getMessage != null &&
           SqlStateSuffix.pattern.matcher(io.getMessage).matches() =>

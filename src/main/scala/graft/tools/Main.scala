@@ -72,7 +72,8 @@ object Main {
 
     /** Block until clean stop or fatal error — the reference engine's
       * supervision loop (transient → reconnect backoff → restart from the
-      * checkpoint; fatal (auth/config SQLSTATEs) → propagate). During the
+      * checkpoint; fatal (auth/config SQLSTATEs, a checkpoint whose state
+      * schema this build cannot read) → propagate). During the
       * backoff window /ready reports 503 via the failed query's state.
       * Returns the number of restarts performed.
       */

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.connector.read.streaming.ReadLimit
+import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{CopyBothFraming, CopyBothWalStream,
@@ -69,6 +69,58 @@ class CopyBothStreamingSpec extends SparkSpec {
         assert(fb.last >= 50L, s"tail position confirmed: $fb")
       } finally q.stop()
     } finally graft.sources.CopyBothSource.unregister("e2e")
+  }
+
+  test("CdcStream.start runs no micro-batch before the first frame; its first batch has rows") {
+    import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+    import StreamingQueryListener._
+    val server = new InMemoryReplicationServer
+    graft.sources.CopyBothSource.register("e2e_cold", server)
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = {
+        progress.add(e.progress); ()
+      }
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      val out = java.nio.file.Files.createTempDirectory("cb_cold_out").toString
+      val ckpt = java.nio.file.Files.createTempDirectory("cb_cold_ckpt").toString
+      val raw = spark.readStream.format("graft.sources.CopyBothSource")
+        .option("server", "e2e_cold").load()
+      val q = graft.streaming.CdcStream.start(spark, raw, "testdb", out, ckpt,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("50 milliseconds"))
+      try {
+        // the engine has polled the source and found nothing to run. An
+        // idle trigger still reports progress (no input, no addBatch), so
+        // a micro-batch that ran is one whose progress times addBatch
+        def ran(p: StreamingQueryProgress) = p.durationMs.containsKey("addBatch")
+        val idle = "Waiting for data to arrive"
+        val deadline = System.currentTimeMillis() + 60000
+        while (q.status.message != idle && System.currentTimeMillis() < deadline)
+          Thread.sleep(20)
+        assert(q.status.message == idle, q.status)
+        assert(!q.recentProgress.exists(ran),
+          s"micro-batches before any frame: ${q.recentProgress.filter(ran)
+            .map(_.numInputRows).toSeq}")
+        server.deliver(10L, walLine("B", 7))
+        server.deliver(20L, walLine("I", 7, id = 1))
+        server.deliver(30L, walLine("C", 7))
+        q.processAllAvailable()
+        def mine = progress.toArray(Array.empty[StreamingQueryProgress])
+          .filter(p => p.id == q.id && ran(p)).toSeq
+        while (mine.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(20)
+        assert(mine.nonEmpty, "no micro-batch progress reached the listener")
+        assert(mine.head.batchId == 0L && mine.head.numInputRows > 0,
+          s"first progress: batch ${mine.head.batchId}, ${mine.head.numInputRows} rows")
+      } finally q.stop()
+      assert(spark.read.parquet(out).count() == 1)
+    } finally {
+      spark.streams.removeListener(listener)
+      graft.sources.CopyBothSource.unregister("e2e_cold")
+    }
   }
 
   test("full CDC pipeline over CopyBoth: decode -> assembly -> normalize -> ordered sink") {
@@ -214,6 +266,49 @@ class CopyBothFramingSpec extends AnyFunSuite {
     assert(dials == 1)
     s.stop() // must be a no-op: nothing was ever opened
     assert(dials == 1, s"stop() dialed a fresh connection mid-shutdown ($dials)")
+  }
+
+  test("a fresh stream offers no offset before its first positioned frame") {
+    def firstOffset(frames: Array[Byte]*): (Offset, InMemoryReplicationConnection) = {
+      val conn = new InMemoryReplicationConnection
+      frames.foreach(conn.deliver)
+      val s = new CopyBothWalStream(() => conn)
+      (s.latestOffset(s.initialOffset(), ReadLimit.allAvailable()), conn)
+    }
+    assert(firstOffset()._1 == null, "nothing delivered")
+    val (afterKeepalives, conn) = firstOffset(
+      CopyBothFraming.keepalive(50L, 0L, replyRequested = false),
+      CopyBothFraming.keepalive(60L, 0L, replyRequested = true))
+    assert(afterKeepalives == null, "keepalives alone")
+    assert(conn.confirmedPositions == Seq(0L), "the reply is still sent")
+    assert(firstOffset(
+      CopyBothFraming.xlogData(0L, 0L, 0L, "relation-a".getBytes("UTF-8")),
+      CopyBothFraming.xlogData(0L, 0L, 0L, "relation-b".getBytes("UTF-8")))._1
+      == null, "walStart-0 frames alone")
+  }
+
+  test("the first positioned frame offers its lsn and carries the held walStart-0 frames") {
+    val conn = new InMemoryReplicationConnection
+    val s = new CopyBothWalStream(() => conn)
+    conn.deliver(CopyBothFraming.xlogData(0L, 0L, 0L, "relation".getBytes("UTF-8")))
+    assert(s.latestOffset(s.initialOffset(), ReadLimit.allAvailable()) == null)
+    conn.deliver(CopyBothFraming.xlogData(30L, 30L, 0L, "insert".getBytes("UTF-8")))
+    // a null start reads as the initial offset
+    val end = s.latestOffset(null, ReadLimit.allAvailable())
+    assert(end == LsnOffset(30L))
+    val rows = s.planInputPartitions(null, end)
+      .flatMap(_.asInstanceOf[graft.sources.LsnRangePartition].rows)
+      .map { case (lsn, b) => (lsn, new String(b, "UTF-8")) }.toSeq
+    assert(rows == Seq((30L, "relation"), (30L, "insert")))
+  }
+
+  test("a resumed instance offers its checkpointed start with nothing new") {
+    val conn = new InMemoryReplicationConnection
+    val s = new CopyBothWalStream(() => conn)
+    conn.deliver(CopyBothFraming.keepalive(90L, 0L, replyRequested = false))
+    assert(s.latestOffset(LsnOffset(40L), ReadLimit.allAvailable()) == LsnOffset(40L))
+    assert(s.planInputPartitions(LsnOffset(40L), LsnOffset(40L))
+      .forall(_.asInstanceOf[graft.sources.LsnRangePartition].rows.isEmpty))
   }
 
   test("stop() closes the one opened connection") {

@@ -225,6 +225,20 @@ class SocketReplicationContractSpec extends WalSourceContract {
 /** Wire-level behaviors of the socket transport beyond the seam contract. */
 class SocketReplicationWireSpec extends AnyFunSuite {
 
+  /** Frames cross a real socket after the query dials, so its first
+    * triggers can find none yet, and `processAllAvailable` covers only
+    * what has arrived: drive the query until the sink holds `n` rows. */
+  private def drainUntil(q: org.apache.spark.sql.streaming.StreamingQuery,
+      out: String, n: Long): Unit = {
+    def rows() = try TestSession.spark.read.parquet(out).count()
+      catch { case _: Exception => 0L }
+    val deadline = System.nanoTime() + 60_000_000_000L
+    q.processAllAvailable()
+    while (rows() < n && System.nanoTime() < deadline) {
+      Thread.sleep(50); q.processAllAvailable()
+    }
+  }
+
   test("handshake + frames + feedback round-trip over a real TCP socket") {
     val srv = new InProcessPgReplicationServer
     try {
@@ -511,7 +525,7 @@ class SocketReplicationWireSpec extends AnyFunSuite {
       val q = graft.streaming.CdcStream.start(spark, raw, "testdb", out, ckpt,
         trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("50 milliseconds"),
         plugin = "pgoutput")
-      try q.processAllAvailable() finally q.stop()
+      try drainUntil(q, out, 2L) finally q.stop()
       val events = spark.read.parquet(out)
       assert(events.count() == 2, "only the committed pgoutput tx emits")
       assert(events.select("txid").as[Long].collect().toSet == Set(7L))
@@ -542,7 +556,7 @@ class SocketReplicationWireSpec extends AnyFunSuite {
         .option("slot", "graft_slot").load()
       val q = graft.streaming.CdcStream.start(spark, raw, "testdb", out, ckpt,
         trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("50 milliseconds"))
-      try q.processAllAvailable() finally q.stop()
+      try drainUntil(q, out, 2L) finally q.stop()
       val events = spark.read.parquet(out)
       assert(events.count() == 2, "tx 7's committed events emit over TCP")
       assert(events.select("txid").as[Long].collect().toSet == Set(7L))

@@ -460,6 +460,45 @@ class ToolsMainSpec extends SparkSpec {
     } finally srv.close()
   }
 
+  test("Running.await exits on a checkpoint of another state schema: fatal, no restart") {
+    import org.apache.spark.sql.streaming.{GroupState, StreamingQuery,
+      StreamingQueryException}
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft_main_schema").toString
+    val in = Paths.get(tmp, "in"); Files.createDirectories(in)
+    def write(name: String, keys: String*): Unit = {
+      Files.write(in.resolve(name), keys.mkString("\n").getBytes(UTF_8)); ()
+    }
+    def run(counted: org.apache.spark.sql.Dataset[String]): StreamingQuery =
+      counted.writeStream.outputMode("update")
+        .option("checkpointLocation", s"$tmp/ck")
+        .trigger(Trigger.ProcessingTime("50 milliseconds"))
+        .format("noop").start()
+    def keys = spark.readStream.text(in.toString).as[String].groupByKey(identity)
+    // the checkpoint's state: a count per key, kept as a Long
+    write("a.txt", "k1", "k2", "k1")
+    val first = run(keys.mapGroupsWithState(
+      (k: String, vs: Iterator[String], st: GroupState[Long]) => {
+        st.update(st.getOption.getOrElse(0L) + vs.size); k
+      }))
+    try first.processAllAvailable() finally first.stop()
+    // the same checkpoint resumed by a build that keeps the count as a String
+    write("b.txt", "k2")
+    var starts = 0
+    val running = new Main.Running(() => {
+      starts += 1
+      run(keys.mapGroupsWithState(
+        (k: String, vs: Iterator[String], st: GroupState[String]) => {
+          st.update((st.getOption.fold(0L)(_.toLong) + vs.size).toString); k
+        }))
+    }, new CdcMetrics.Registry, maxRestarts = 3)
+    val e = intercept[StreamingQueryException](running.await())
+    running.stop()
+    assert(graft.streaming.Reliability.isFatal(e), e.getMessage)
+    assert(e.getMessage.contains("SCHEMA_NOT_COMPATIBLE"), e.getMessage)
+    assert(starts == 1, s"restarted a checkpoint that cannot resume: $starts starts")
+  }
+
   test("GRAFT_MODE=mv maintains queryable bucketed state instead of publishing") {
     val tmp = Files.createTempDirectory("graft_main_mv").toString
     val walDir = s"$tmp/wal"; Files.createDirectories(Paths.get(walDir))

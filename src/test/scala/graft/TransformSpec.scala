@@ -94,4 +94,71 @@ class TransformSpec extends SparkSpec {
     assert(df.as[String].collect().toList ==
       List("cdc.insert", "cdc.update", "cdc.delete", "cdc.ddl"))
   }
+
+  /** Every operation value the wal2json and pgoutput decoders emit. */
+  private val decoderOps = Seq("B", "C", "INSERT", "UPDATE", "DELETE", "DDL",
+    "MESSAGE", "ABORT", "CORRUPT")
+
+  private val lsnPositions: Seq[Long] = {
+    val rnd = new scala.util.Random(20261019L)
+    Seq(0L, 1L, 0xffffffffL, 0x100000000L, Long.MaxValue) ++
+      Seq.fill(10000)(rnd.nextLong() & Long.MaxValue)
+  }
+
+  test("lsnString is the JDK's X/Y hex rendering: fixed edges + 10k seeded positions") {
+    val got = lsnPositions.toDF("pos")
+      .select($"pos", Transform.lsnString($"pos").as("lsn"))
+      .as[(Long, String)].collect().toMap
+    lsnPositions.foreach { p =>
+      val want = java.lang.Long.toHexString(p >>> 32) + "/" +
+        java.lang.Long.toHexString(p & 0xffffffffL)
+      assert(got(p) == want, s"position $p")
+    }
+  }
+
+  test("eventType is cdc.<op lower-cased in the root locale> for every decoder op") {
+    val got = decoderOps.toDF("op")
+      .select($"op", Transform.eventType($"op").as("t"))
+      .as[(String, String)].collect().toMap
+    decoderOps.foreach { op =>
+      assert(got(op) == "cdc." + op.toLowerCase(java.util.Locale.ROOT), op)
+    }
+  }
+
+  test("SQL graft_lsn / graft_event_type render exactly like the Column API") {
+    graft.functions.GraftFunctions.register(spark)
+    val lsns = lsnPositions.toDF("pos")
+      .select(Transform.lsnString($"pos").as("col"),
+        expr("graft_lsn(pos)").as("sql"))
+    assert(lsns.filter(!($"col" <=> $"sql")).count() == 0)
+    val types = decoderOps.toDF("op")
+      .select(Transform.eventType($"op").as("col"),
+        expr("graft_event_type(op)").as("sql"))
+    assert(types.filter(!($"col" <=> $"sql")).count() == 0)
+  }
+
+  test("no ICU case mapping on the row path: no Lower/Upper/InitCap in either pipeline") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, InitCap, Lower, Upper}
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.streaming.CdcStream
+    implicit val sctx = spark.sqlContext
+    def caseMaps(plan: LogicalPlan): Seq[Expression] =
+      plan.flatMap(_.expressions).flatMap(_.collect {
+        case e @ (_: Lower | _: Upper | _: InitCap) => e
+      })
+    val text = MemoryStream[(Long, String)].toDF().toDF("wal_start", "data")
+    val binary = MemoryStream[(Long, Array[Byte])].toDF().toDF("wal_start", "data")
+    // the detector sees a case mapping when there is one
+    assert(caseMaps(text.select(lower($"data")).queryExecution.analyzed).nonEmpty)
+    val plans = Seq(
+      "wal2json" -> CdcStream.pipeline(spark, text, "testdb"),
+      "pgoutput" -> CdcStream.pipelinePgOutput(spark, binary, "testdb"),
+      "pgoutput dlq" -> CdcStream.pipelinePgOutput(spark, binary, "testdb",
+        corruptPolicy = "dlq"))
+    plans.foreach { case (name, df) =>
+      val found = caseMaps(df.queryExecution.analyzed)
+      assert(found.isEmpty, s"$name: $found")
+    }
+  }
 }
