@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.cdc.{Transform, Wal2Json}
@@ -192,11 +192,9 @@ object CdcStream {
       case other => throw new IllegalArgumentException(
         s"unknown CDC plugin '$other' (wal2json | pgoutput)")
     }
-    // broker-path retry counting: the publish loops run on executors and
-    // the metrics registry does not serialize — retries flow through an
-    // accumulator, drained into the registry after each batch
-    val retryAcc = spark.sparkContext.longAccumulator("graft_publish_retries")
-    val drained = new java.util.concurrent.atomic.AtomicLong(0L)
+    // one per query: it prepares and broadcasts its Hadoop conf at the
+    // first batch, so the conf ships once, not inside every write task
+    val parquet = new ParquetBatchWriter(outPath)
     events.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointPath)
@@ -205,38 +203,28 @@ object CdcStream {
         // E4: transient sink failures retried with capped backoff; fatal
         // errors propagate and fail the batch (at-least-once redelivery +
         // the sink's batch_id idempotence / broker Msg-Id dedup make the
-        // retry safe).
+        // retry safe). Both sinks return what they published, counted by
+        // the write's own tasks (no extra job).
         val df = batch.toDF()
-        // the published count rides the write (no extra job); a fresh
-        // Observation per attempt, since withRetry re-runs the write
-        var published = Option.empty[Observation]
-        def observed(): DataFrame = metrics.fold(df) { _ =>
-          published = Some(Observation())
-          df.observe(published.get, count(lit(1)).as("rows"))
-        }
-        sinkWriter match {
+        val published = sinkWriter match {
           // broker-backed deployment (E6 seam): the per-item ordered /
           // unordered publish loops own their retry policy; the
           // quarantine handler carries the dlq/skip/crash policy
           // (SinkPublisher.quarantineFor)
           case Some(factory) =>
-            SinkPublisher.writeBatchVia(observed(), factory,
+            val p = SinkPublisher.writeBatchVia(df, factory,
               maxPublishRetries, ordered = !unsafeUnorderedAsyncPublish,
-              quarantine = sinkQuarantine,
-              onRetry = () => retryAcc.add(1L))
-            metrics.foreach { m =>
-              val total = retryAcc.value
-              m.publishRetries.add(total - drained.getAndSet(total))
-            }
+              quarantine = sinkQuarantine)
+            metrics.foreach(_.publishRetries.add(p.retries))
+            p.items
           case None =>
             Reliability.withRetry(maxPublishRetries,
                 onRetry = () => metrics.foreach(_.publishRetries.inc()))(() =>
-              if (unsafeUnorderedAsyncPublish)
-                UnorderedSink.writeBatch(observed(), batchId, outPath)
-              else OrderedSink.writeBatch(observed(), batchId, outPath))
+              parquet.write(
+                if (unsafeUnorderedAsyncPublish) df else OrderedSink.inCommitOrder(df),
+                batchId))
         }
-        for (m <- metrics; o <- published)
-          m.published.add(o.get("rows").asInstanceOf[Long])
+        metrics.foreach(_.published.add(published))
       }
       .start()
   }

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** One message bound for the broker (reference `publisher.PublishItem`,
@@ -258,42 +259,46 @@ object SinkPublisher {
       firstError = firstError)
   }
 
+  /** What one batch published: the items acked or quarantined, and the
+    * publish loops' retries. Summed over partitions on the driver.
+    */
+  final case class Published(items: Long, retries: Long)
+
   /** foreachBatch adapter: repartition by subject, sort each partition in
     * commit order (numeric LSN + seq — the OrderedSink ordering), serialize
     * the envelope, and run the ordered publish loop per partition on the
     * executors. `writerFactory` runs ON the executor (broker clients do
     * not serialize). A partition whose result carries an error throws —
     * Spark retries the task, and at-least-once redelivery is safe because
-    * the broker dedups on eventId (Nats-Msg-Id, reference E7).
+    * the broker dedups on eventId (Nats-Msg-Id, reference E7). Each
+    * partition returns what it published, so the counts add no job.
     */
   def writeBatchVia(batch: DataFrame, writerFactory: () => SinkWriter,
       maxRetries: Int = 3, numPartitions: Int = 0, ordered: Boolean = true,
       quarantine: Option[(PublishItem, Throwable) => Unit] = None,
-      sleep: Long => Unit = Thread.sleep,
-      onRetry: () => Unit = () => ()): Unit = {
-    val parts = if (numPartitions > 0) numPartitions
-      else batch.sparkSession.sessionState.conf.numShufflePartitions
-    val envelope = batch
-      .repartition(parts, col("subject"))
-      .sortWithinPartitions(col("subject"), col("commit_time"),
-        OrderedSink.lsnNumeric(col("lsn")), OrderedSink.seqNumeric(col("event_id")))
+      sleep: Long => Unit = Thread.sleep): Published = {
+    val envelope = OrderedSink.inCommitOrder(batch, numPartitions)
       .select(col("subject"), col("event_id"),
         graft.cdc.Transform.envelopeJson(batch).as("payload"),
         OrderedSink.lsnNumeric(col("lsn")).as("position"))
-    envelope.foreachPartition { (rows: Iterator[Row]) =>
+    val perPartition = OrderedSink.eachPartition(envelope, "graft publish") { (_, rows) =>
+      def str(r: InternalRow, i: Int) =
+        if (r.isNullAt(i)) null else r.getUTF8String(i).toString
       val writer = writerFactory()
+      var retries = 0L
       try {
-        val items = rows.map(r => PublishItem(
-          r.getString(0), r.getString(1), r.getString(2), r.getLong(3)))
+        val items = rows.map(r => PublishItem(str(r, 0), str(r, 1), str(r, 2), r.getLong(3)))
         val res =
-          if (ordered) publishOrdered(items, writer, maxRetries, sleep, onRetry, quarantine)
-          else publishUnordered(items, writer, maxRetries, sleep, onRetry, quarantine)
+          if (ordered) publishOrdered(items, writer, maxRetries, sleep, () => retries += 1, quarantine)
+          else publishUnordered(items, writer, maxRetries, sleep, () => retries += 1, quarantine)
         res.firstError.foreach(e => throw new RuntimeException(
           s"publish failed at ${res.succeeded}/${res.total} " +
             s"(lastSuccessPosition=${res.lastSuccessPosition})", e))
         writer.commit() // transactional writers flip the partition atomically
+        Published(res.succeeded.toLong, retries)
       } finally writer.close()
     }
+    Published(perPartition.map(_.items).sum, perPartition.map(_.retries).sum)
   }
 }
 
@@ -302,7 +307,7 @@ object SinkPublisher {
   * future broker deployment drive the SAME publish loop — it appends each
   * acked payload to a per-partition buffer and "acks" unconditionally.
   * Used by contract tests; production parquet writes go through
-  * [[OrderedSink.writeBatch]] (a single distributed write beats per-row
+  * [[ParquetBatchWriter]] (a single distributed write beats per-row
   * appends).
   */
 final class CollectingSinkWriter extends SinkWriter {

@@ -170,6 +170,20 @@ object Main {
       defaultParallelism: Int): String =
     conf.get("spark.sql.shuffle.partitions", defaultParallelism.toString)
 
+  /** Spark settings Main sets unless the operator's conf (`--conf`)
+    * already does: the fork-free `file:` binding, and 256 KB broadcast
+    * pieces. Spark broadcasts each stage's task binary and each stateful
+    * operator's Hadoop conf on every trigger, one
+    * `spark.broadcast.blockSize` array per broadcast. At the 4 MB default
+    * each array is a humongous object for G1 (half a region or more; a
+    * 2 GiB heap has 1 MB regions), and they pile up between young GCs.
+    * 256 KB stays under that threshold at every region size; Main runs no
+    * broadcast join, so more pieces per large broadcast cost nothing.
+    */
+  private[graft] def sessionDefaults(conf: SparkConf): Map[String, String] =
+    LocalFs.sessionConfs(conf) ++ Map("spark.broadcast.blockSize" -> "256k")
+      .filter { case (k, _) => !conf.contains(k) }
+
   /** Build the raw frame stream for the configured source kind. */
   private def rawStream(spark: SparkSession, cfg: GraftConfig,
       env: Map[String, String]): DataFrame =
@@ -411,7 +425,7 @@ object Main {
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("graft-cdc")
       .config("spark.sql.session.timeZone", "UTC")
-      .config(LocalFs.sessionConfs())
+      .config(sessionDefaults(new SparkConf()))
       .getOrCreate()
     spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions(
       spark.sparkContext.getConf, spark.sparkContext.defaultParallelism))

@@ -261,6 +261,7 @@ class SinkWriterSpec extends SparkSpec {
         SinkPublisher.writeBatchVia(batch.toDF(),
           () => new MockBrokerSinkWriter(brokerId), numPartitions = 2,
           sleep = _ => ())
+        () // writeBatchVia returns what it published; foreachBatch wants Unit
       }.start()
     try {
       input.addData(walLine(1, "B", 1), walLine(2, "I", 1, id = 1),

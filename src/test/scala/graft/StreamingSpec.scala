@@ -609,6 +609,109 @@ class StreamingSpec extends SparkSpec {
     assert(written.count() == 3, "batch rewrite is idempotent")
   }
 
+  /** The parquet files under `dir`, recursively (staging included). */
+  private def parquetFiles(dir: java.io.File): Seq[java.io.File] =
+    Option(dir.listFiles()).toSeq.flatten.flatMap(f =>
+      if (f.isDirectory) parquetFiles(f)
+      else if (f.getName.endsWith(".parquet")) Seq(f) else Nil)
+
+  test("parquet sink: an attempt that fails part-way leaves batch_id=N untouched; the retry holds each row once") {
+    import graft.streaming.{ParquetBatchWriter, Reliability}
+    val dir = Files.createTempDirectory("graft_sink_fail").toString
+    // id 99 is the last row of the last of four partitions: its task has
+    // opened its file and written 24 rows when the row fails to produce
+    val poison = udf { (id: Long) =>
+      if (id == 99 && SinkFault.armed.getAndSet(false))
+        throw new IllegalStateException("unwritable row")
+      id
+    }
+    val batch = spark.range(0, 100, 1, 4)
+      .select(poison($"id").as("id"), ($"id" % 3).cast("string").as("subject"))
+    val target = new java.io.File(dir, "batch_id=5")
+    var failedAttempts = 0
+    SinkFault.armed.set(true)
+    val rows = Reliability.withRetry(maxRetries = 1, sleep = _ => (),
+      onRetry = () => {
+        failedAttempts += 1
+        assert(!new java.io.File(target, "_SUCCESS").exists(), "no _SUCCESS after a failed attempt")
+        assert(parquetFiles(target).isEmpty, "no part file after a failed attempt")
+      })(() => new ParquetBatchWriter(dir).write(batch, 5))
+    assert(failedAttempts == 1 && !SinkFault.armed.get, "the first attempt failed in the writer")
+    assert(rows == 100)
+    assert(new java.io.File(target, "_SUCCESS").exists())
+    val back = spark.read.parquet(target.getPath).select($"id").as[Long].collect()
+    assert(back.sorted.toSeq == (0L until 100L), "each row exactly once")
+  }
+
+  test("parquet sink: an empty batch commits a bare _SUCCESS, the sink still reads") {
+    val dir = Files.createTempDirectory("graft_sink_empty").toString
+    val batch = Seq(
+      ("a:1", "cdc.db.public.a", "0/3", java.sql.Timestamp.valueOf("2024-01-15 10:30:00")))
+      .toDF("event_id", "subject", "lsn", "commit_time")
+    assert(OrderedSink.writeBatch(batch, 1, dir, numPartitions = 2) == 1)
+    assert(OrderedSink.writeBatch(batch.filter(lit(false)), 2, dir, numPartitions = 2) == 0)
+    val empty = new java.io.File(dir, "batch_id=2")
+    assert(new java.io.File(empty, "_SUCCESS").exists())
+    assert(parquetFiles(empty).isEmpty, "an empty batch writes no part file")
+    assert(spark.read.parquet(dir).count() == 1, "the other batches still read")
+    assert(parquetFiles(new java.io.File(dir, "_staging")).isEmpty, "staging is cleaned up")
+  }
+
+  test("parquet sink: the batch writer's files match DataFrameWriter's, file for file") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val dir = Files.createTempDirectory("graft_sink_same").toString
+    val t0 = java.sql.Timestamp.valueOf("2024-01-15 10:30:00")
+    val input = (1 to 60).map { i =>
+      (s"0/${i.toHexString}:$i:INSERT:public.t:${i % 3}", s"cdc.db.public.t${i % 5}",
+        s"0/${i.toHexString}", new java.sql.Timestamp(t0.getTime + (i % 7) * 1000L),
+        if (i % 4 == 0) null else Map("id" -> i.toString, "v" -> (if (i % 3 == 0) null else "x")),
+        i.toLong)
+    }.toDF("event_id", "subject", "lsn", "commit_time", "after", "txid") // txid non-nullable
+    val ordered = OrderedSink.inCommitOrder(input, 3)
+    ordered.write.parquet(s"$dir/spark/batch_id=1") // the DataFrameWriter sink
+    OrderedSink.writeBatch(input, 1, s"$dir/graft", numPartitions = 3)
+
+    val conf = spark.sessionState.newHadoopConf()
+    def files(side: String) = parquetFiles(new java.io.File(s"$dir/$side/batch_id=1"))
+      .map(f => f.getName.take(10) -> f.getPath).toMap // part-NNNNN
+    def footer(f: String) = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+      try (r.getFooter.getFileMetaData.getSchema, r.getFooter.getFileMetaData.getKeyValueMetaData,
+        r.getRecordCount) finally r.close()
+    }
+    def rows(f: String) = spark.read.parquet(f).select($"subject", $"event_id")
+      .as[(String, String)].collect().toSeq
+    val (a, b) = (files("spark").filter(kv => footer(kv._2)._3 > 0), files("graft"))
+    assert(a.keySet == b.keySet && b.nonEmpty, s"one file per non-empty partition: $a vs $b")
+    for (k <- b.keySet) {
+      val (fa, fb) = (footer(a(k)), footer(b(k)))
+      assert(fa._1 == fb._1, s"$k parquet schema")
+      assert(fa._2 == fb._2, s"$k Spark metadata")
+      assert(rows(a(k)) == rows(b(k)), s"$k rows in the same order")
+    }
+    val (ra, rb) = (spark.read.parquet(s"$dir/spark"), spark.read.parquet(s"$dir/graft"))
+    assert(ra.schema == rb.schema)
+    assert(ra.collect().toSet == rb.collect().toSet && rb.count() == 60)
+  }
+
+  test("parquet sink: the write task ships a broadcast handle, not the Hadoop conf") {
+    import org.apache.spark.serializer.JavaSerializer
+    import org.apache.spark.util.SerializableConfiguration
+    import graft.streaming.ParquetBatchWriter
+    val dir = Files.createTempDirectory("graft_sink_task").toString
+    val batch = Seq(("a:1", "cdc.db.public.a")).toDF("event_id", "subject")
+    val ser = new JavaSerializer(spark.sparkContext.getConf).newInstance()
+    val task = new ParquetBatchWriter(dir).shippedFor(batch).writer(s"$dir/x", "attempt")
+    val taskBytes = ser.serialize(task).limit()
+    // the positive control: what DataFrameWriter puts into every task
+    val confBytes = ser.serialize(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf())).limit()
+    assert(confBytes > 100 * 1024, s"session conf is $confBytes bytes")
+    assert(taskBytes < 16 * 1024, s"write function is $taskBytes bytes")
+  }
+
   test("intervalMs parses the TTL and watermark interval grammar") {
     import graft.streaming.CdcStream.intervalMs
     assert(intervalMs("500 milliseconds") == 500L)
@@ -788,4 +891,9 @@ class StreamingSpec extends SparkSpec {
     assert(row.getString(1) == "cdc.testdb.public.users")
     assert(row.getString(2) == "INSERT")
   }
+}
+
+/** Arms one failure of the sink test's poison row; read inside tasks. */
+object SinkFault {
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
 }

@@ -168,6 +168,16 @@ class ToolsMainSpec extends SparkSpec {
     assert(Main.shufflePartitions(sc.getConf, 99) == sc.getConf.get(key))
   }
 
+  test("sessionDefaults: 256k broadcast pieces and the fork-free file system, --conf wins") {
+    val key = "spark.broadcast.blockSize"
+    val unset = Main.sessionDefaults(new SparkConf(false))
+    assert(unset(key) == "256k")
+    assert(unset.keySet.contains("spark.hadoop.fs.file.impl"))
+    // 256 KB is below G1's humongous threshold (half a region, 1 MB minimum)
+    assert(org.apache.spark.network.util.JavaUtils.byteStringAsBytes(unset(key)) < 512L * 1024)
+    assert(!Main.sessionDefaults(new SparkConf(false).set(key, "4m")).contains(key))
+  }
+
   test("a checkpoint started at 32 partitions keeps its width under the new default") {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
