@@ -4,8 +4,9 @@ import java.nio.charset.StandardCharsets
 import java.nio.ByteBuffer
 import java.sql.Timestamp
 import scala.collection.mutable
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.streaming.DecodedWalEvent
+import graft.streaming.{DecodedWalEvent, PgSlotState}
 
 /** pgoutput binary decoder (reference P1/P2:
   * internal/parser/pgoutput.go:156-347, 594-642), implemented against the
@@ -34,12 +35,14 @@ import graft.streaming.DecodedWalEvent
   * that is partition-ordered — which a replication slot's output inherently
   * is (a WAL stream is serial; parallelism comes from downstream stages,
   * not the decode of one slot). Multiple slots/sources parallelize as
-  * multiple partitions.
+  * multiple partitions. The streaming path runs the same
+  * [[DecodeSession]] inside the replication source's reader.
   */
 object PgOutput {
 
   /** Relation registry entry (reference relationInfo, pgoutput.go:20-26);
-    * streaming decode checkpoints it inside a serialized slot state.
+    * the replication source ships it to its readers inside a
+    * [[PgSlotState]] snapshot.
     */
   @SerialVersionUID(1L)
   case class RelationInfo(id: Int, schema: String, table: String,
@@ -117,14 +120,23 @@ object PgOutput {
     m.result()
   }
 
+  /** What a corrupt frame does mid-stream (the reference's parser-fatal
+    * failure policy, parser.go:33-38 + config.go:101): "crash" fails with
+    * the named [[CorruptFrameException]] taxonomy, "dlq" emits an
+    * operation=CORRUPT marker row (error + payload forensics in
+    * `new_values`) and decodes on, "skip" drops the frame.
+    */
+  val CorruptPolicies: Set[String] = Set("crash", "dlq", "skip")
+
   /** Stateful decode core, shared by the batch `mapPartitions` path
-    * ([[decodePartition]]: one archive partition) and the streaming
-    * per-slot decoder (graft.streaming.PgOutputStream: the session's
-    * fields are restored from and saved to one state value per slot, so
-    * they persist across micro-batches — the reference keeps its registry
-    * for the stream's lifetime and replaces entries on Relation messages
-    * at any point, pgoutput.go:216-230). The transaction cursor (current
-    * xid + commit ts from the last Begin) is plain mutable fields.
+    * ([[decodePartition]]: one archive partition) and the replication
+    * source (graft.sources.CopyBothSource), which keeps one session per
+    * slot on the driver, advanced with [[track]], and ships a
+    * [[snapshot]] with every planned range for its reader to [[restore]]
+    * and decode from — the reference keeps its registry for the stream's
+    * lifetime and replaces entries on Relation messages at any point,
+    * pgoutput.go:216-230. The transaction cursor (current xid + commit ts
+    * from the last Begin) is plain mutable fields.
     */
   final class DecodeSession {
     val registry: mutable.Map[Int, RelationInfo] = mutable.Map.empty
@@ -144,6 +156,24 @@ object PgOutput {
     val streamXids: mutable.Map[Long, mutable.LinkedHashSet[Long]] =
       mutable.Map.empty
 
+    /** The session's state as an immutable value. */
+    def snapshot: PgSlotState = PgSlotState(registry.toMap, currentXid,
+      currentTs, streamTop,
+      streamXids.map { case (top, xids) => top -> xids.toSeq }.toMap)
+
+    /** Replace this session's state with `st`. */
+    def restore(st: PgSlotState): this.type = {
+      registry.clear(); registry ++= st.relations
+      currentXid = st.xid
+      currentTs = st.ts
+      streamTop = st.streamTop
+      streamXids.clear()
+      st.streams.foreach { case (top, xids) =>
+        streamXids(top) = mutable.LinkedHashSet(xids: _*)
+      }
+      this
+    }
+
     private def relation(b: ByteBuffer, walStart: Long): RelationInfo = {
       val id = b.getInt()
       registry.getOrElse(id, throw new IllegalStateException(
@@ -152,7 +182,7 @@ object PgOutput {
     }
 
     def decode(walStart: Long, data: Array[Byte]): Seq[DecodedWalEvent] =
-      try decodeFrame(walStart, data)
+      try decodeFrame(walStart, data, rows = true)
       catch {
         // any read past the end of the frame is a truncation — surface
         // the WAL position and size, never a bare BufferUnderflow
@@ -164,7 +194,41 @@ object PgOutput {
             e.getMessage)
       }
 
-    private def decodeFrame(walStart: Long, data: Array[Byte]): Seq[DecodedWalEvent] = {
+    /** [[decode]] under a corrupt-frame policy ([[CorruptPolicies]]). */
+    def decode(walStart: Long, data: Array[Byte],
+        corruptPolicy: String): Seq[DecodedWalEvent] =
+      try decode(walStart, data)
+      catch {
+        case e @ (_: CorruptFrameException | _: IllegalStateException)
+            if corruptPolicy != "crash" =>
+          if (corruptPolicy == "skip") Nil
+          else Seq(DecodedWalEvent(walStart, "CORRUPT",
+            is_begin = false, is_commit = false, null, null, null,
+            Map("error" -> e.getMessage,
+              "payload_size" -> data.length.toString,
+              // forensic prefix, hex — 256 bytes covers any frame header
+              "payload_prefix_hex" ->
+                data.take(256).map("%02x".format(_)).mkString),
+            currentXid, currentTs))
+      }
+
+    /** Advance the session over one frame exactly as [[decode]] does —
+      * registry, xid/ts cursor, `streamTop`, `streamXids` — without
+      * reading tuples or building rows. A frame [[decode]] rejects leaves
+      * the state where [[decode]] leaves it (both stop at the same read),
+      * and nothing is thrown: the caller is the driver, which must not
+      * fail where a dlq/skip reader decodes on.
+      */
+    def track(walStart: Long, data: Array[Byte]): Unit =
+      try { decodeFrame(walStart, data, rows = false); () }
+      catch { case NonFatal(_) => () }
+
+    // `rows = false` is [[track]]: every state change and every read that
+    // precedes one happens; tuple data, which follows them all, is not read
+    private def decodeFrame(walStart: Long, data: Array[Byte],
+        rows: Boolean): Seq[DecodedWalEvent] = {
+      def emit(evs: => Seq[DecodedWalEvent]): Seq[DecodedWalEvent] =
+        if (rows) evs else Nil
       val b = ByteBuffer.wrap(data)
       if (!b.hasRemaining) corrupt("empty frame")
       val msgType = b.get().toChar
@@ -189,6 +253,7 @@ object PgOutput {
           val table = readCString(b)
           b.get() // replica identity
           val ncols = b.getShort().toInt
+          if (ncols < 0) corrupt(s"negative relation column count $ncols")
           val names = new Array[String](ncols)
           val oids = new Array[Int](ncols)
           var i = 0
@@ -205,43 +270,49 @@ object PgOutput {
           b.getLong() // final LSN
           currentTs = pgTimestamp(b.getLong())
           currentXid = b.getInt().toLong & 0xffffffffL
-          Seq(DecodedWalEvent(walStart, "B", is_begin = true, is_commit = false,
-            null, null, null, null, currentXid, currentTs))
+          emit(Seq(DecodedWalEvent(walStart, "B", is_begin = true,
+            is_commit = false, null, null, null, null, currentXid, currentTs)))
         case 'C' =>
           b.get() // flags
           b.getLong() // commit LSN
           b.getLong() // end LSN
           val ts = pgTimestamp(b.getLong())
-          Seq(DecodedWalEvent(walStart, "C", is_begin = false, is_commit = true,
-            null, null, null, null, currentXid, ts))
+          emit(Seq(DecodedWalEvent(walStart, "C", is_begin = false,
+            is_commit = true, null, null, null, null, currentXid, ts)))
         case 'I' =>
           val rel = relation(b, walStart)
-          val ik = b.get().toChar
-          if (ik != 'N') corrupt(s"INSERT expects new tuple 'N', got '$ik'")
-          val nv = readTuple(b, rel)
-          Seq(DecodedWalEvent(walStart, "INSERT", is_begin = false, is_commit = false,
-            rel.schema, rel.table, null, nv, evXid, evTs))
+          emit {
+            val ik = b.get().toChar
+            if (ik != 'N') corrupt(s"INSERT expects new tuple 'N', got '$ik'")
+            val nv = readTuple(b, rel)
+            Seq(DecodedWalEvent(walStart, "INSERT", is_begin = false,
+              is_commit = false, rel.schema, rel.table, null, nv, evXid, evTs))
+          }
         case 'U' =>
           val rel = relation(b, walStart)
-          var old: Map[String, String] = null
-          var kind = b.get().toChar
-          if (kind == 'K' || kind == 'O') {
-            old = readTuple(b, rel)
-            kind = b.get().toChar
+          emit {
+            var old: Map[String, String] = null
+            var kind = b.get().toChar
+            if (kind == 'K' || kind == 'O') {
+              old = readTuple(b, rel)
+              kind = b.get().toChar
+            }
+            if (kind != 'N') corrupt(s"UPDATE expects new tuple 'N', got '$kind'")
+            val nv = readTuple(b, rel)
+            Seq(DecodedWalEvent(walStart, "UPDATE", is_begin = false,
+              is_commit = false, rel.schema, rel.table, old, nv, evXid, evTs))
           }
-          if (kind != 'N') corrupt(s"UPDATE expects new tuple 'N', got '$kind'")
-          val nv = readTuple(b, rel)
-          Seq(DecodedWalEvent(walStart, "UPDATE", is_begin = false, is_commit = false,
-            rel.schema, rel.table, old, nv, evXid, evTs))
         case 'D' =>
           val rel = relation(b, walStart)
-          val kind = b.get().toChar
-          if (kind != 'K' && kind != 'O')
-            corrupt(s"DELETE expects key/old tuple 'K'/'O', got '$kind'")
-          val ov = readTuple(b, rel)
-          Seq(DecodedWalEvent(walStart, "DELETE", is_begin = false, is_commit = false,
-            rel.schema, rel.table, ov, null, evXid, evTs))
-        case 'T' =>
+          emit {
+            val kind = b.get().toChar
+            if (kind != 'K' && kind != 'O')
+              corrupt(s"DELETE expects key/old tuple 'K'/'O', got '$kind'")
+            val ov = readTuple(b, rel)
+            Seq(DecodedWalEvent(walStart, "DELETE", is_begin = false,
+              is_commit = false, rel.schema, rel.table, ov, null, evXid, evTs))
+          }
+        case 'T' => emit {
           val nrels = b.getInt()
           b.get() // options (cascade/restart identity)
           (0 until nrels).flatMap { _ =>
@@ -251,6 +322,7 @@ object PgOutput {
                 rel.schema, rel.table, Map.empty, Map.empty, evXid, evTs)
             }
           }
+        }
         // Logical decoding message (pg_logical_emit_message) — the
         // transactional-OUTBOX frame. The reference's dispatch has no arm
         // for it (pgoutput.go:214-330 switch); here it decodes into a
@@ -259,7 +331,7 @@ object PgOutput {
         // transactional message rides its surrounding transaction's
         // xid/ts through assembly, a non-transactional one stands alone
         // (xid 0, no tx timestamp — it can arrive outside any B..C span).
-        case 'M' =>
+        case 'M' => emit {
           val transactional = (b.get() & 1) == 1
           b.getLong() // message LSN
           val prefix = readCString(b)
@@ -283,6 +355,7 @@ object PgOutput {
               "transactional" -> transactional.toString),
             if (transactional) evXid else 0L,
             if (transactional) evTs else null))
+        }
         // parseable-but-unhandled message types are ignored like the
         // reference's switch without a default arm (origin 'O', type
         // metadata 'Y')
@@ -320,8 +393,8 @@ object PgOutput {
           val members = streamXids.remove(xid)
             .map(_.toSeq)
             .getOrElse(Seq(xid))
-          members.map(x => DecodedWalEvent(walStart, "C", is_begin = false,
-            is_commit = true, null, null, null, null, x, ts))
+          emit(members.map(x => DecodedWalEvent(walStart, "C", is_begin = false,
+            is_commit = true, null, null, null, null, x, ts)))
         case 'A' =>
           val xid = b.getInt().toLong & 0xffffffffL
           val subXid = b.getInt().toLong & 0xffffffffL
@@ -344,13 +417,13 @@ object PgOutput {
             val members = streamXids.remove(xid)
               .map(_.toSeq)
               .getOrElse(Seq(xid))
-            members.map(x => DecodedWalEvent(walStart, "ABORT",
+            emit(members.map(x => DecodedWalEvent(walStart, "ABORT",
               is_begin = false, is_commit = false,
-              null, null, null, null, x, abortTs))
+              null, null, null, null, x, abortTs)))
           } else {
             streamXids.get(xid).foreach(_ -= subXid)
-            Seq(DecodedWalEvent(walStart, "ABORT", is_begin = false,
-              is_commit = false, null, null, null, null, subXid, abortTs))
+            emit(Seq(DecodedWalEvent(walStart, "ABORT", is_begin = false,
+              is_commit = false, null, null, null, null, subXid, abortTs)))
           }
         // ---- two-phase commit (two_phase slots, PG 15+): a PREPARE
         // TRANSACTION delivers BeginPrepare..changes..Prepare, then —
@@ -371,8 +444,8 @@ object PgOutput {
           currentTs = pgTimestamp(b.getLong())
           currentXid = b.getInt().toLong & 0xffffffffL
           readCString(b) // gid
-          Seq(DecodedWalEvent(walStart, "B", is_begin = true,
-            is_commit = false, null, null, null, null, currentXid, currentTs))
+          emit(Seq(DecodedWalEvent(walStart, "B", is_begin = true,
+            is_commit = false, null, null, null, null, currentXid, currentTs)))
         case 'P' =>
           b.get() // flags
           b.getLong(); b.getLong(); b.getLong() // LSNs + prepare ts
@@ -400,17 +473,17 @@ object PgOutput {
           val xid = b.getInt().toLong & 0xffffffffL
           readCString(b)
           val members = streamXids.remove(xid).map(_.toSeq).getOrElse(Seq(xid))
-          members.map(x => DecodedWalEvent(walStart, "C", is_begin = false,
-            is_commit = true, null, null, null, null, x, ts))
+          emit(members.map(x => DecodedWalEvent(walStart, "C", is_begin = false,
+            is_commit = true, null, null, null, null, x, ts)))
         case 'r' =>
           b.get() // flags
           b.getLong(); b.getLong(); b.getLong(); b.getLong() // LSNs + both ts
           val xid = b.getInt().toLong & 0xffffffffL
           readCString(b)
           val members = streamXids.remove(xid).map(_.toSeq).getOrElse(Seq(xid))
-          members.map(x => DecodedWalEvent(walStart, "ABORT",
+          emit(members.map(x => DecodedWalEvent(walStart, "ABORT",
             is_begin = false, is_commit = false, null, null, null, null,
-            x, null))
+            x, null)))
         // anything else is an unparseable frame — the reference's
         // pglogrepl.Parse would error and the stream would classify it
         // fatal (parser.go:33-38); CorruptFrameException keeps it under

@@ -1,13 +1,14 @@
 package graft.sources
 
 import java.nio.ByteBuffer
-import java.util.concurrent.ConcurrentLinkedQueue
 import scala.collection.mutable
 
 import java.util.{Map => JMap}
 
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.streaming.StreamingRelationV2
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table,
   TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -18,6 +19,9 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset,
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.cdc.PgOutput
+import graft.streaming.{DecodedWalEvent, PgSlotState, StateBlob}
 
 /** CopyBoth replication framing (reference internal/wal/reader.go:408-489),
   * implemented against the PUBLIC PostgreSQL streaming-replication protocol
@@ -97,96 +101,13 @@ trait ReplicationConnection {
   def send(copyData: Array[Byte]): Unit
 }
 
-/** In-memory [[ReplicationConnection]]: a bare frame queue plus a log of
-  * the standby feedback sent back — the single-connection stub for codec
-  * and keepalive tests.
+/** An in-process replication slot that the `server` option of
+  * [[CopyBothSource]] resolves by name: it opens one
+  * [[ReplicationConnection]] per stream instance (the in-memory slot the
+  * tests serve, or an embedding host's own).
   */
-final class InMemoryReplicationConnection extends ReplicationConnection
-    with AutoCloseable {
-  private val inbox = new ConcurrentLinkedQueue[Array[Byte]]()
-  private val feedback = new ConcurrentLinkedQueue[Array[Byte]]()
-  @volatile var closed = false
-
-  override def close(): Unit = closed = true
-  def deliver(frame: Array[Byte]): Unit = inbox.add(frame)
-  override def receive(): Option[Array[Byte]] = Option(inbox.poll())
-  override def send(copyData: Array[Byte]): Unit = feedback.add(copyData)
-
-  /** Confirmed positions from received StandbyStatusUpdate frames. */
-  def confirmedPositions: Seq[Long] = {
-    import scala.jdk.CollectionConverters._
-    feedback.iterator().asScala.map { bytes =>
-      val b = ByteBuffer.wrap(bytes)
-      require(b.get().toChar == 'r', "standby feedback must be 'r'")
-      b.getLong() // written (= flushed = applied here)
-    }.toSeq
-  }
-}
-
-/** In-memory replication SERVER stub with the slot-retention semantics a
-  * real primary provides (and which the live source's replay guarantee
-  * leans on): XLogData frames are RETAINED until standby feedback confirms
-  * them — `confirmed_flush_lsn` only advances on feedback, and every new
-  * connection re-delivers everything after the confirmed position (what
-  * `START_REPLICATION slot ... <confirmed_lsn>` does on reconnect,
-  * reader.go:311-357). This is what makes a restarted stream instance
-  * stateless: its state is the server's slot + the engine's checkpointed
-  * offset, never reader memory.
-  */
-final class InMemoryReplicationServer {
-  private val retained = mutable.ArrayBuffer[(Long, Array[Byte])]()
-  private var confirmed = 0L
-  private val feedbackLog = mutable.ArrayBuffer[Long]()
-
-  def deliver(lsn: Long, line: String, serverClock: Long = 0L): Unit =
-    deliverBytes(lsn, line.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      serverClock)
-
-  /** Binary payload delivery — pgoutput frames ride XLogData as raw bytes
-    * (the reference's default plugin produces binary messages, not text).
-    */
-  def deliverBytes(lsn: Long, payload: Array[Byte],
-      serverClock: Long = 0L): Unit = synchronized {
-    retained += ((lsn, CopyBothFraming.xlogData(lsn, lsn, serverClock,
-      payload)))
-  }
-
-  /** Standby feedback positions received, in arrival order. */
-  def feedbackPositions: Seq[Long] = synchronized(feedbackLog.toSeq)
-
-  def connect(): ReplicationConnection = new ReplicationConnection {
-    // session cursor: next retained frame index not yet sent on THIS
-    // connection; starts at the first frame past the confirmed position,
-    // including any zero-lsn METADATA frames immediately before it —
-    // real pgoutput sends Relation/Type messages with walStart = 0/0 and
-    // re-sends them to each new session that will need them
-    private var cursor =
-      InMemoryReplicationServer.this.synchronized(
-        retained.indexWhere(_._1 > confirmed) match {
-          case -1 => retained.size
-          case i =>
-            var j = i
-            while (j > 0 && retained(j - 1)._1 == 0L) j -= 1
-            j
-        })
-    override def receive(): Option[Array[Byte]] =
-      InMemoryReplicationServer.this.synchronized {
-        if (cursor < retained.size) {
-          val f = retained(cursor)._2; cursor += 1; Some(f)
-        } else None
-      }
-    override def send(copyData: Array[Byte]): Unit =
-      InMemoryReplicationServer.this.synchronized {
-        val b = ByteBuffer.wrap(copyData)
-        require(b.get().toChar == 'r', "client sends only StandbyStatusUpdate")
-        val pos = b.getLong()
-        feedbackLog += pos
-        if (pos > confirmed) confirmed = pos
-        // slot retention: confirmed WAL is releasable. (Frames are kept
-        // here so open sessions' cursors stay valid; a real slot frees
-        // the segments.)
-      }
-  }
+trait ReplicationServer {
+  def connect(): ReplicationConnection
 }
 
 /** LSN offset of the CopyBoth stream: the position of the last admitted
@@ -195,8 +116,47 @@ final case class LsnOffset(lsn: Long) extends Offset {
   override def json(): String = lsn.toString
 }
 
+/** One planned (start, end] range of admitted messages. In pgoutput mode
+  * `context` is the slot's decode context as of the range start (a
+  * [[StateBlob]] of [[PgSlotState]]) and the reader decodes the frames
+  * from it under `corruptPolicy`; in text mode it is null and each
+  * message is a line.
+  */
 final case class LsnRangePartition(rows: Seq[(Long, Array[Byte])],
-    binaryPayload: Boolean) extends InputPartition
+    context: Array[Byte], corruptPolicy: String) extends InputPartition
+
+/** Reads an [[LsnRangePartition]]: `(wal_start, data)` lines, or the
+  * range's pgoutput frames decoded into [[DecodedWalEvent]] rows, in
+  * admission order, by one [[PgOutput.DecodeSession]] restored from the
+  * range's context — the same decoder the batch path runs. Rows are
+  * converted without an encoder, so the scan adds no typed operator and
+  * no generated code.
+  */
+private object LsnRangeReaderFactory extends PartitionReaderFactory {
+  private val toRow =
+    CatalystTypeConverters.createToCatalystConverter(CopyBothSource.decodedSchema)
+
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    val part = p.asInstanceOf[LsnRangePartition]
+    val rows: Iterator[InternalRow] =
+      if (part.context == null) part.rows.iterator.map { case (ws, line) =>
+        new GenericInternalRow(Array[Any](ws, UTF8String.fromBytes(line)))
+      } else {
+        val session = new PgOutput.DecodeSession()
+          .restore(StateBlob.read[PgSlotState](part.context))
+        part.rows.iterator.flatMap { case (ws, frame) =>
+          session.decode(ws, frame, part.corruptPolicy)
+        }.map(e => toRow(Row.fromTuple(e)).asInstanceOf[InternalRow])
+      }
+    new PartitionReader[InternalRow] {
+      private var current: InternalRow = _
+      override def next(): Boolean =
+        rows.hasNext && { current = rows.next(); true }
+      override def get(): InternalRow = current
+      override def close(): Unit = ()
+    }
+  }
+}
 
 /** A live-shaped replication source over the [[ReplicationConnection]]
   * seam: CopyBoth frames in, (wal_start, data) rows out, standby feedback
@@ -211,14 +171,23 @@ final case class LsnRangePartition(rows: Seq[(Long, Array[Byte])],
   *    admitted-but-unacked window, the slot-retention analog);
   *  - admission control caps messages per micro-batch (ReadMaxFiles /
   *    ReadMaxRows both read as a message cap — the bounded-channel
-  *    backpressure analog, reader.go:361-366); the remainder stays
-  *    buffered (contract 3);
+  *    backpressure analog, reader.go:361-366) past the start offset;
+  *    the remainder stays buffered (contract 3);
   *  - `commit(end)` sends StandbyStatusUpdate(end) — monotonically: a
   *    re-ack at or below the confirmed position is ignored (contract 4) —
   *    and drops acked frames from the buffer;
   *  - keepalives never produce rows but advance the server head; a
   *    keepalive with replyRequested answers immediately with the current
   *    confirmed position (reader.go:470-489);
+  *  - pgoutput mode decodes in the source, where the reference decodes
+  *    (its parser reads the reader's channel, pgoutput.go:156-197): one
+  *    [[PgOutput.DecodeSession]] follows every frame commit releases, in
+  *    admission order, and each planned range carries that context
+  *    advanced over the buffered frames at or below its start (held
+  *    walStart-0 Relations and a resumed session's re-sends included),
+  *    for its reader to decode from. The context is not checkpointed: a
+  *    new session re-sends each open transaction from its Begin and each
+  *    Relation before its first use, which rebuilds it;
   *  - no offset before the first positioned frame: from the initial
   *    offset, `latestOffset` answers null (no data yet) until an XLogData
   *    frame with a non-zero walStart is admitted — keepalives and held
@@ -234,7 +203,7 @@ final case class LsnRangePartition(rows: Seq[(Long, Array[Byte])],
   */
 final class CopyBothWalStream(connect: () => ReplicationConnection,
     clock: () => Long = () => 0L, maxMessages: Option[Int] = None,
-    binaryPayload: Boolean = false)
+    pgoutput: Option[String] = None)
     extends MicroBatchStream with SupportsAdmissionControl {
 
   // one serial connection per stream instance — a restart builds a new
@@ -257,6 +226,19 @@ final class CopyBothWalStream(connect: () => ReplicationConnection,
   private val zeroHold = mutable.ArrayBuffer[Array[Byte]]()
   private var head = 0L // last admitted lsn
   private var confirmed = 0L // last acked lsn (standby feedback)
+  // pgoutput mode: the decode context after every frame commit released
+  private val released = pgoutput.map(_ => new PgOutput.DecodeSession)
+
+  /** pgoutput mode: the decode context as of `lo` — the released frames'
+    * context advanced over the buffered frames at or below `lo`. A
+    * function of the buffer alone, so a range planned twice carries the
+    * same context.
+    */
+  private def contextAt(lo: Long): Array[Byte] = released.map { s =>
+    val at = new PgOutput.DecodeSession().restore(s.snapshot)
+    buffer.foreach { case (lsn, frame) => if (lsn <= lo) at.track(lsn, frame) }
+    StateBlob.write(at.snapshot)
+  }.orNull
 
   private def drainConnection(): Unit = {
     var frame = conn.receive()
@@ -269,10 +251,9 @@ final class CopyBothWalStream(connect: () => ReplicationConnection,
           // every later data message failed "no prior Relation"). Attach
           // them to the NEXT positioned frame's lsn, ahead of it in
           // admission order, so they ride the same offset range as the
-          // first data message that needs them; the decoder's
-          // within-batch sort is stable, preserving this order for
-          // equal positions. A reconnect re-sends Relations, so frames
-          // still held at stop() are never owed to anyone.
+          // first data message that needs them and decode ahead of it.
+          // A reconnect re-sends Relations, so frames still held at
+          // stop() are never owed to anyone.
           if (walStart == 0L) { zeroHold.append(payload); () }
           else {
             zeroHold.foreach(p => pending.append((walStart, p)))
@@ -309,12 +290,15 @@ final class CopyBothWalStream(connect: () => ReplicationConnection,
       case r: ReadMaxRows => r.maxRows().toInt
       case _ => Int.MaxValue
     }
+    // frames at or below the start (a resumed session re-sends them) are
+    // no part of the next batch, so they do not count against the cap
+    val lo = lsnOf(start)
     var admitted = 0
-    while (admitted < cap && pending.nonEmpty) {
+    while (pending.nonEmpty && (admitted < cap || pending.head._1 <= lo)) {
       val msg = pending.removeHead()
       buffer.append(msg)
       head = math.max(head, msg._1)
-      admitted += 1
+      if (msg._1 > lo) admitted += 1
     }
     if (head == 0L) null else LsnOffset(head)
   }
@@ -343,25 +327,11 @@ final class CopyBothWalStream(connect: () => ReplicationConnection,
     }
     Array(LsnRangePartition(
       buffer.filter { case (lsn, _) => lsn > lo && lsn <= hi }.toSeq,
-      binaryPayload))
+      contextAt(lo), pgoutput.getOrElse("crash")))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new PartitionReader[InternalRow] {
-          private val part = p.asInstanceOf[LsnRangePartition]
-          private val it = part.rows.iterator
-          private var current: (Long, Array[Byte]) = _
-          override def next(): Boolean =
-            if (it.hasNext) { current = it.next(); true } else false
-          override def get(): InternalRow = new GenericInternalRow(
-            Array[Any](current._1,
-              if (part.binaryPayload) current._2
-              else UTF8String.fromBytes(current._2)))
-          override def close(): Unit = ()
-        }
-    }
+    LsnRangeReaderFactory
 
   override def commit(end: Offset): Unit = {
     val pos = end.asInstanceOf[LsnOffset].lsn
@@ -370,7 +340,10 @@ final class CopyBothWalStream(connect: () => ReplicationConnection,
     if (pos > confirmed) {
       confirmed = pos
       conn.send(CopyBothFraming.standbyStatusUpdate(pos, clock()))
-      buffer.removeHeadWhile { case (lsn, _) => lsn <= pos }
+      while (buffer.nonEmpty && buffer.head._1 <= pos) {
+        val (lsn, frame) = buffer.removeHead()
+        released.foreach(_.track(lsn, frame))
+      }
     }
   }
 
@@ -390,20 +363,25 @@ final class CopyBothWalStream(connect: () => ReplicationConnection,
   *     .option("password", pw)                // enables SCRAM-SHA-256
   *     .option("maxMessagesPerTrigger", n)    // optional admission cap
   *     .option("payload", "text"|"binary")    // wal2json lines vs pgoutput
+  *     .option("corruptPolicy", "crash"|"dlq"|"skip") // pgoutput only
   *     .load()
   *
   * `payload=text` (default) emits `(wal_start LONG, data STRING)` — the
   * archived-WAL file source's schema, for wal2json lines. `payload=binary`
-  * emits `(wal_start LONG, data BINARY)` — raw pgoutput frames for
-  * [[graft.streaming.CdcStream.pipelinePgOutput]], the reference's DEFAULT
-  * deployment shape (pgoutput over the replication socket). Either way the
+  * reads pgoutput frames and emits them decoded, as
+  * [[CopyBothSource.decodedSchema]] rows, for
+  * [[graft.streaming.CdcStream.pipelinePgOutput]] — the reference's DEFAULT
+  * deployment shape (pgoutput over the replication socket). A corrupt
+  * frame follows `corruptPolicy` ([[PgOutput.CorruptPolicies]]; the
+  * pipeline reads it from here, [[CopyBothSource.corruptPolicyOf]]).
+  * Multiple slots are one source each. Either way the
   * full CDC pipeline runs over a replication connection unchanged — the engine drives
   * latestOffset/plan/commit on ONE [[CopyBothWalStream]] instance per run,
   * exactly the single-instance usage the admission-cap and feedback
   * semantics are specified for.
   *
   * Two transports behind the same seam: `server` resolves a live
-  * in-process [[InMemoryReplicationServer]] from a process-local registry
+  * in-process [[ReplicationServer]] from a process-local registry
   * (the embedded/test shape), while `host`/`port`/`slot` dial a
   * [[SocketReplicationConnection]] speaking the public replication
   * protocol over TCP (StartupMessage with replication=database →
@@ -415,12 +393,16 @@ final class CopyBothWalStream(connect: () => ReplicationConnection,
 class CopyBothSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     if ("binary".equalsIgnoreCase(options.getOrDefault("payload", "text")))
-      CopyBothSource.binarySchema
+      CopyBothSource.decodedSchema
     else WalDirectorySource.schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: JMap[String, String]): Table = {
     val opt = (k: String) => Option(properties.get(k))
-    val binary = opt("payload").exists(_.equalsIgnoreCase("binary"))
+    val pgoutput =
+      if (!opt("payload").exists(_.equalsIgnoreCase("binary"))) None
+      else Some(opt("corruptPolicy").getOrElse("crash"))
+    pgoutput.foreach(p => require(PgOutput.CorruptPolicies(p),
+      s"corruptPolicy must be crash|dlq|skip, got '$p'"))
     val connect: () => ReplicationConnection = opt("host") match {
       case Some(host) =>
         val port = opt("port").map(_.toInt).getOrElse(5432)
@@ -448,22 +430,28 @@ class CopyBothSource extends TableProvider {
     }
     new CopyBothTable(connect,
       opt("host").orElse(opt("server")).getOrElse("?"),
-      opt("maxMessagesPerTrigger").map(_.toInt), binary)
+      opt("maxMessagesPerTrigger").map(_.toInt), pgoutput)
   }
 }
 
 object CopyBothSource {
-  /** pgoutput-mode schema: frames are bytes, not lines. */
-  val binarySchema: StructType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("wal_start",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("data",
-      org.apache.spark.sql.types.BinaryType)))
+  /** pgoutput-mode schema: frames arrive decoded, one row per event. */
+  val decodedSchema: StructType = Encoders.product[DecodedWalEvent].schema
+
+  /** The corrupt-frame policy of the pgoutput source `df` reads, "crash"
+    * when it reads none: the one setting, read where the pipeline needs
+    * it.
+    */
+  def corruptPolicyOf(df: DataFrame): String =
+    df.queryExecution.analyzed.collectFirst {
+      case r: StreamingRelationV2 if r.table.isInstanceOf[CopyBothTable] =>
+        r.table.asInstanceOf[CopyBothTable].pgoutput
+    }.flatten.getOrElse("crash")
 
   private val servers =
-    scala.collection.concurrent.TrieMap.empty[String, InMemoryReplicationServer]
+    scala.collection.concurrent.TrieMap.empty[String, ReplicationServer]
 
-  def register(name: String, server: InMemoryReplicationServer): Unit =
+  def register(name: String, server: ReplicationServer): Unit =
     servers(name) = server
   def unregister(name: String): Unit = { servers.remove(name); () }
   private[sources] def connect(name: String): ReplicationConnection =
@@ -472,11 +460,14 @@ object CopyBothSource {
         "CopyBothSource.register(name, server) first")).connect()
 }
 
+/** `pgoutput` is the corrupt-frame policy in pgoutput mode, None for
+  * text lines. */
 final class CopyBothTable(connect: () => ReplicationConnection, label: String,
-    maxMessages: Option[Int], binaryPayload: Boolean = false)
+    maxMessages: Option[Int], val pgoutput: Option[String] = None)
     extends Table with SupportsRead {
   private def tableSchema: StructType =
-    if (binaryPayload) CopyBothSource.binarySchema else WalDirectorySource.schema
+    if (pgoutput.isDefined) CopyBothSource.decodedSchema
+    else WalDirectorySource.schema
   override def name(): String = s"copyboth:$label"
   override def schema(): StructType = tableSchema
   override def capabilities(): java.util.Set[TableCapability] =
@@ -487,7 +478,7 @@ final class CopyBothTable(connect: () => ReplicationConnection, label: String,
         override def readSchema(): StructType = tableSchema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
           new CopyBothWalStream(connect, maxMessages = maxMessages,
-            binaryPayload = binaryPayload)
+            pgoutput = pgoutput)
       }
     }
 }

@@ -11,10 +11,10 @@ import graft.cdc.{Transform, Wal2Json}
   * StreamingTxAssembly.assembleRaw (commit-gated assembly + positional
   * replay tombstones, ONE stateful operator) -> Wal2Json.decodePayload ->
   * Transform.normalize -> foreachBatch OrderedSink, with
-  * checkpointLocation for recovery. pgoutput ([[pipelinePgOutput]]) puts
-  * a per-slot decoder in front of the same assembly operator. Both run on
-  * `flatMapGroupsWithState` with event-time timeouts, on whatever
-  * state-store provider the session configures.
+  * checkpointLocation for recovery. pgoutput ([[pipelinePgOutput]]) feeds
+  * the replication source's decoded rows to the same assembly operator.
+  * Assembly runs on `flatMapGroupsWithState` with event-time timeouts, on
+  * whatever state-store provider the session configures.
   *
   * Semantics vs the reference (SURVEY.md §7.4):
   *  - at-least-once base + tx-granular replay suppression in assembly
@@ -87,11 +87,13 @@ object CdcStream {
   }
 
   /** The pgoutput analog of [[pipeline]] — the reference's DEFAULT plugin
-    * (cmd/cdc-handler/main.go:59-74): binary replication frames
-    * (wal_start: long, data: binary[, slot]) → [[PgOutputStream.decode]]
-    * (per-slot keyed registry state, mid-stream Relation replacement) →
-    * the same [[StreamingTxAssembly.assembleRaw]] operator as wal2json,
-    * buffering decoded rows ([[PgRow]]) → Transform.normalize.
+    * (cmd/cdc-handler/main.go:59-74): the rows a pgoutput
+    * [[graft.sources.CopyBothSource]] decodes (relation registry and
+    * transaction cursor kept by the source, mid-stream Relation
+    * replacement) → the same [[StreamingTxAssembly.assembleRaw]] operator
+    * as wal2json, buffering decoded rows ([[PgRow]]) →
+    * Transform.normalize. Corrupt-frame markers, which the source emits
+    * under `corruptPolicy=dlq`, bypass assembly onto the dlq subject.
     *
     * Assembly gives pgoutput the same E7 replay suppression and the same
     * event-time abandoned-tx TTL as wal2json, both from `dedupWatermark`;
@@ -99,18 +101,16 @@ object CdcStream {
     * header/payload parse split — pgoutput decode is a single cheap
     * binary walk whose rows are the payload.
     */
-  def pipelinePgOutput(spark: SparkSession, raw: DataFrame, database: String,
-      tableAllowlist: Seq[String] = Nil, dedupWatermark: String = "2 minutes",
-      slotCol: Option[String] = None,
-      corruptPolicy: String = "crash"): DataFrame = {
-    val decoded = PgOutputStream.decode(spark, raw, slotCol = slotCol,
-      corruptPolicy = corruptPolicy).toDF()
+  def pipelinePgOutput(spark: SparkSession, decoded: DataFrame,
+      database: String, tableAllowlist: Seq[String] = Nil,
+      dedupWatermark: String = "2 minutes"): DataFrame = {
     // corrupt-frame markers (dlq policy) bypass assembly — a frame that
     // cannot be decoded has no transaction to wait for; they rejoin the
     // output as dead-letter records on the dlq subject, the streaming
     // analog of Dlq.quarantine's second frame
+    val dlq = graft.sources.CopyBothSource.corruptPolicyOf(decoded) == "dlq"
     val good =
-      if (corruptPolicy == "dlq") decoded.filter(col("operation") =!= "CORRUPT")
+      if (dlq) decoded.filter(col("operation") =!= "CORRUPT")
       else decoded
     val filtered =
       if (tableAllowlist.isEmpty) good
@@ -136,7 +136,7 @@ object CdcStream {
       .withColumn("is_begin", lit(false))
       .withColumn("is_commit", lit(false))
     val normalized = Transform.normalize(assembled, database)
-    if (corruptPolicy != "dlq") normalized
+    if (!dlq) normalized
     else {
       val lsn = Transform.lsnString(col("wal_start"))
       val dlqRows = decoded.filter(col("operation") === "CORRUPT").select(
@@ -169,8 +169,8 @@ object CdcStream {
     * (ordered), same trade-off (throughput for order). `plugin` selects
     * the decode pipeline like the reference's CDC_PLUGIN option
     * (cmd/cdc-handler/main.go:59-74): "wal2json" expects (wal_start LONG,
-    * data STRING) lines, "pgoutput" expects (wal_start LONG, data BINARY)
-    * replication frames; both take their replay window and abandoned-tx
+    * data STRING) lines, "pgoutput" the decoded rows of a pgoutput
+    * replication source; both take their replay window and abandoned-tx
     * TTL from `dedupWatermark`.
     */
   def start(spark: SparkSession, raw: DataFrame, database: String,

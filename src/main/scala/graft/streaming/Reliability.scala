@@ -28,11 +28,13 @@ object Reliability {
     */
   private val SqlStateSuffix = """.*\(([0-9A-Z]{5})\)\s*$""".r
 
-  /** Spark's refusal to resume a checkpoint whose state schema differs
-    * from the query's: every restart from that checkpoint fails alike. */
+  /** Spark's refusal to resume a checkpoint whose state schema or set of
+    * stateful operators differs from the query's: every restart from
+    * that checkpoint fails alike. */
   private val FatalConditions = Set(
     "STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE",
-    "STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE")
+    "STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE",
+    "STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA")
 
   def isFatal(e: Throwable): Boolean = e match {
     case s: java.sql.SQLException => isFatalSqlState(s.getSQLState)
@@ -93,9 +95,13 @@ object Reliability {
     * reference's Prometheus metric names (events_total,
     * batches_published_total, batch_latency_microseconds,
     * events_per_second, replication_errors_total) — scrapable via
-    * [[HealthServer]]'s /metrics.
+    * [[HealthServer]]'s /metrics. `ofQuery` picks the queries counted
+    * (by id, which a restart from the same checkpoint keeps); the rate
+    * gauge follows micro-batches that read rows, so a no-data batch
+    * (watermark or timeout housekeeping) does not zero it.
     */
-  final class CdcMetricsListener(registry: Option[CdcMetrics.Registry] = None)
+  final class CdcMetricsListener(registry: Option[CdcMetrics.Registry] = None,
+      ofQuery: java.util.UUID => Boolean = _ => true)
       extends StreamingQueryListener {
     val batches = new AtomicLong(0)
     val inputRows = new AtomicLong(0)
@@ -104,25 +110,28 @@ object Reliability {
     val lastError = new AtomicReference[Option[String]](None)
 
     override def onQueryStarted(event: QueryStartedEvent): Unit =
-      starts.incrementAndGet()
-    override def onQueryProgress(event: QueryProgressEvent): Unit = {
-      batches.incrementAndGet()
-      inputRows.addAndGet(event.progress.numInputRows)
-      registry.foreach { r =>
-        r.eventsTotal.add(event.progress.numInputRows)
-        r.batchesPublished.inc()
-        Option(event.progress.durationMs.get("triggerExecution"))
-          .foreach(ms => r.batchLatency.observe(ms * 1000L)) // micros
-        r.eventsPerSecond.set(event.progress.processedRowsPerSecond.toLong)
+      if (ofQuery(event.id)) starts.incrementAndGet()
+    override def onQueryProgress(event: QueryProgressEvent): Unit =
+      if (ofQuery(event.progress.id)) {
+        batches.incrementAndGet()
+        inputRows.addAndGet(event.progress.numInputRows)
+        registry.foreach { r =>
+          r.eventsTotal.add(event.progress.numInputRows)
+          r.batchesPublished.inc()
+          Option(event.progress.durationMs.get("triggerExecution"))
+            .foreach(ms => r.batchLatency.observe(ms * 1000L)) // micros
+          if (event.progress.numInputRows > 0)
+            r.eventsPerSecond.set(event.progress.processedRowsPerSecond.toLong)
+        }
       }
-    }
     override def onQueryIdle(event: QueryIdleEvent): Unit = ()
-    override def onQueryTerminated(event: QueryTerminatedEvent): Unit = {
-      terminations.incrementAndGet()
-      lastError.set(event.exception)
-      if (event.exception.isDefined)
-        registry.foreach(_.replicationErrors.inc())
-    }
+    override def onQueryTerminated(event: QueryTerminatedEvent): Unit =
+      if (ofQuery(event.id)) {
+        terminations.incrementAndGet()
+        lastError.set(event.exception)
+        if (event.exception.isDefined)
+          registry.foreach(_.replicationErrors.inc())
+      }
 
     def snapshot: Map[String, Long] = Map(
       "batches" -> batches.get, "input_rows" -> inputRows.get,

@@ -76,13 +76,14 @@ case class TxState(lines: Array[Byte], committedAtMs: Option[Long],
     committedAtMs, committedLsn, provisionalTimeout)
 }
 
-/** Java serialization of a keyed-state value into one binary column.
+/** Java serialization of a keyed-state value into one binary column, and
+  * of the replication source's decode context into its planned ranges.
   * Classes are resolved through the task's context class loader, where
   * the application's classes live. Every project class stored this way
   * (`PgRow`, `PgSlotState`, `PgOutput.RelationInfo`) carries an explicit
   * `@SerialVersionUID`, so recompiling does not orphan a checkpoint.
   */
-private[streaming] object StateBlob {
+private[graft] object StateBlob {
   def write(v: AnyRef): Array[Byte] = {
     val bytes = new ByteArrayOutputStream()
     val out = new ObjectOutputStream(bytes)

@@ -43,9 +43,9 @@ import graft.streaming.{CdcMetrics, CdcStream, HealthServer}
   * first batch; pass `--conf spark.sql.shuffle.partitions=N` before the
   * first start to choose another.
   *
-  * State: both plugins run their keyed state (pgoutput's per-slot decoder,
-  * the shared transaction assembly) on `flatMapGroupsWithState`, so Main
-  * sets no state-store provider; pass `--conf
+  * State: both plugins run their one keyed state, the shared transaction
+  * assembly, on `flatMapGroupsWithState` (pgoutput decodes in the
+  * replication source), so Main sets no state-store provider; pass `--conf
   * spark.sql.streaming.stateStore.providerClass=...` to choose one. Both
   * suppress replayed transactions within `DUPLICATE_WINDOW` and evict
   * abandoned ones by event time.
@@ -66,6 +66,8 @@ object Main {
       val metrics: CdcMetrics.Registry, maxRestarts: Int) {
     @volatile private var current: StreamingQuery = restart()
     private[tools] var healthServer: HealthServer.Started = _
+    // undoes what Main.start attached to the session for this deployment
+    private[tools] var detach: () => Unit = () => ()
     def query: StreamingQuery = current
     def health: HealthServer.Started = healthServer
     @volatile private var stopped = false
@@ -109,7 +111,7 @@ object Main {
       try this.synchronized {
         stopped = true
         if (current.isActive) current.stop()
-      } finally Option(healthServer).foreach(_.stop())
+      } finally try Option(healthServer).foreach(_.stop()) finally detach()
     }
   }
 
@@ -373,7 +375,19 @@ object Main {
     }
     val maxRestarts = env.get("GRAFT_MAX_RESTARTS").map(_.toInt)
       .getOrElse(Int.MaxValue) // a CDC daemon reconnects until told to stop
-    val running = new Running(startQuery, metrics, maxRestarts)
+    // the engine series of /metrics (events, batches, latency, rate,
+    // replication errors) come from query progress: one listener per
+    // deployment, counting only its own query, whose id every supervised
+    // restart from the checkpoint keeps
+    val ours = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val listener = new graft.streaming.Reliability.CdcMetricsListener(
+      Some(metrics), ours.contains)
+    spark.streams.addListener(listener)
+    val running =
+      try new Running(() => { val q = startQuery(); ours.add(q.id); q },
+        metrics, maxRestarts)
+      catch { case e: Throwable => spark.streams.removeListener(listener); throw e }
+    running.detach = () => spark.streams.removeListener(listener)
     // readiness mirrors the reference's checks (main.go:85-108: slot-store
     // load + publisher ready): the source must be reachable and the
     // streaming query alive without a pending exception (during a

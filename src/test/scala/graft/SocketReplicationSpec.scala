@@ -520,8 +520,13 @@ class SocketReplicationWireSpec extends AnyFunSuite {
       val raw = spark.readStream.format("graft.sources.CopyBothSource")
         .option("host", "127.0.0.1").option("port", srv.port.toString)
         .option("slot", "graft_slot").option("payload", "binary").load()
+      // the source decodes: its rows are pgoutput events, not frames
       assert(raw.schema.fields.map(f => (f.name, f.dataType.typeName)).toSeq
-        == Seq(("wal_start", "long"), ("data", "binary")))
+        == Seq(("wal_start", "long"), ("operation", "string"),
+          ("is_begin", "boolean"), ("is_commit", "boolean"),
+          ("schema_name", "string"), ("table_name", "string"),
+          ("old_values", "map"), ("new_values", "map"), ("txid", "long"),
+          ("action_time", "timestamp")))
       val q = graft.streaming.CdcStream.start(spark, raw, "testdb", out, ckpt,
         trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("50 milliseconds"),
         plugin = "pgoutput")
@@ -532,6 +537,63 @@ class SocketReplicationWireSpec extends AnyFunSuite {
       assert(events.select("after").collect()
         .map(_.getMap[String, String](0)("name")).toSet == Set("alice", "bob"),
         "binary tuple values decode through the socket unchanged")
+    } finally srv.close()
+  }
+
+  test("pgoutput restart between a Begin and its Commit: the new session rebuilds the decode context, every event lands once") {
+    // the decode context (relation registry, open transaction's xid) is
+    // not checkpointed: the restarted query's session gets it back from
+    // what the slot re-sends — the open transaction from its Begin, and
+    // the Relation before its next use — through the real socket
+    val spark = TestSession.spark
+    import spark.implicits._
+    import graft.cdc.PgWire
+    val srv = new InProcessPgReplicationServer
+    try {
+      val t0 = 1705314600123456L
+      srv.inner.deliverBytes(0L,
+        PgWire.relation(100, "public", "users", Seq("id" -> 20, "name" -> 25)))
+      srv.inner.deliverBytes(10L, PgWire.begin(12L, t0, 6))
+      srv.inner.deliverBytes(11L, PgWire.insert(100, Seq(Some("1"), Some("ann"))))
+      srv.inner.deliverBytes(12L, PgWire.commit(12L, 13L, t0))
+      srv.inner.deliverBytes(20L, PgWire.begin(50L, t0, 7))
+      srv.inner.deliverBytes(30L, PgWire.insert(100, Seq(Some("2"), Some("bob"))))
+      val out = java.nio.file.Files.createTempDirectory("pgsock_restart_out").toString
+      val ckpt = java.nio.file.Files.createTempDirectory("pgsock_restart_ckpt").toString
+      def start() = graft.streaming.CdcStream.start(spark,
+        spark.readStream.format("graft.sources.CopyBothSource")
+          .option("host", "127.0.0.1").option("port", srv.port.toString)
+          .option("slot", "graft_slot").option("payload", "binary").load(),
+        "testdb", out, ckpt,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("50 milliseconds"),
+        plugin = "pgoutput")
+      def within(what: String)(done: => Boolean): Unit = {
+        val deadline = System.nanoTime() + 60_000_000_000L
+        while (!done && System.nanoTime() < deadline) Thread.sleep(50)
+        assert(done, what)
+      }
+      val q1 = start()
+      try {
+        drainUntil(q1, out, 1L)
+        // one more change of tx 7 makes the engine confirm the first
+        // batch, so the slot's confirmed position lies inside tx 7
+        srv.inner.deliverBytes(35L, PgWire.insert(100, Seq(Some("3"), Some("cy"))))
+        within("the slot confirms a position inside tx 7")(
+          srv.inner.feedbackPositions.exists(p => p >= 30L && p < 50L))
+        within("tx 7's third change is read")(
+          q1.recentProgress.map(_.numInputRows).sum >= 6L)
+      } finally q1.stop()
+      srv.inner.deliverBytes(40L, PgWire.insert(100, Seq(Some("4"), Some("dee"))))
+      srv.inner.deliverBytes(50L, PgWire.commit(50L, 51L, t0))
+      val q2 = start()
+      try drainUntil(q2, out, 4L) finally q2.stop()
+      val events = spark.read.parquet(out)
+        .select($"event_id", $"txid", $"after".getItem("name")).as[(String, Long, String)]
+        .collect().toSeq
+      assert(events.map(_._1).distinct.size == events.size, s"an event landed twice: $events")
+      assert(events.map(e => (e._2, e._3)).sorted ==
+        Seq((6L, "ann"), (7L, "bob"), (7L, "cy"), (7L, "dee")),
+        s"tx 7 commits whole under its own xid after the restart: $events")
     } finally srv.close()
   }
 

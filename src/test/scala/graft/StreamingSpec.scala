@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
+import graft.sources.InMemoryReplicationServer
 import graft.streaming.{CdcStream, OrderedSink, UnorderedSink}
 
 /** Streaming pipeline semantics: commit-gated emission from stateful tx
@@ -84,32 +85,31 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("pgoutput streaming pipeline: keyed registry survives batches, mid-stream schema change, cross-batch tx") {
-    implicit val sctx = spark.sqlContext
     import graft.cdc.PgWire
     val t0 = 1705314600123456L
-    val input = MemoryStream[(Long, Array[Byte])]
-    val events = CdcStream.pipelinePgOutput(spark,
-      input.toDF().toDF("wal_start", "data"), "testdb")
+    val input = new InMemoryReplicationServer
+    val events = CdcStream.pipelinePgOutput(spark, PgSlot.stream(spark, input),
+      "testdb")
     val q = events.writeStream.outputMode("append")
       .format("memory").queryName("pgout_stream").start()
     try {
       // batch 1: Relation v1 (id, name) + one complete tx
-      input.addData(
+      PgSlot.deliver(input,
         (10L, PgWire.relation(100, "public", "users", Seq("id" -> 20, "name" -> 25))),
         (20L, PgWire.begin(1000, t0, 7)),
         (30L, PgWire.insert(100, Seq(Some("1"), Some("alice")))),
         (40L, PgWire.commit(1000, 1001, t0)))
       q.processAllAvailable()
       // batch 2: NO Relation message — decode works only if the registry
-      // survived the batch boundary in keyed state
-      input.addData(
+      // survived the batch boundary in the source's decode context
+      PgSlot.deliver(input,
         (50L, PgWire.begin(2000, t0, 8)),
         (60L, PgWire.insert(100, Seq(Some("2"), Some("bob")))),
         (70L, PgWire.commit(2000, 2001, t0)))
       q.processAllAvailable()
       // batch 3: mid-stream Relation REPLACEMENT (adds email), then a tx
       // under the new shape — only later events see the new column
-      input.addData(
+      PgSlot.deliver(input,
         (80L, PgWire.relation(100, "public", "users",
           Seq("id" -> 20, "name" -> 25, "email" -> 25))),
         (90L, PgWire.begin(3000, t0, 9)),
@@ -118,12 +118,12 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       // batches 4+5: one transaction SPLIT across the boundary — the tx
       // cursor (xid from Begin) must carry over for the commit to release it
-      input.addData(
+      PgSlot.deliver(input,
         (120L, PgWire.begin(4000, t0, 11)),
         (130L, PgWire.insert(100, Seq(Some("4"), Some("dan"), None))))
       q.processAllAvailable()
       assert(spark.table("pgout_stream").count() == 3, "uncommitted tx must not emit")
-      input.addData((140L, PgWire.commit(4000, 4001, t0)))
+      PgSlot.deliver(input, (140L, PgWire.commit(4000, 4001, t0)))
       q.processAllAvailable()
 
       val out = spark.table("pgout_stream")
@@ -142,33 +142,32 @@ class StreamingSpec extends SparkSpec {
 
   test("pgoutput v2: a streamed tx spans micro-batches — segment bracket " +
       "and membership persist; StreamAbort retracts, StreamCommit releases") {
-    implicit val sctx = spark.sqlContext
     import graft.cdc.PgWire
     val t0 = 1705314600123456L
-    val input = MemoryStream[(Long, Array[Byte])]
-    val events = CdcStream.pipelinePgOutput(spark,
-      input.toDF().toDF("wal_start", "data"), "testdb")
+    val input = new InMemoryReplicationServer
+    val events = CdcStream.pipelinePgOutput(spark, PgSlot.stream(spark, input),
+      "testdb")
     val q = events.writeStream.outputMode("append")
       .format("memory").queryName("pgout_v2_stream").start()
     try {
       // batch 1 ends with the segment still OPEN: the v2 cursor
       // (streamTop) must persist for batch 2's in-stream frame to parse
       // its xid prefix
-      input.addData(
+      PgSlot.deliver(input,
         (10L, PgWire.relation(100, "public", "users", Seq("id" -> 20, "name" -> 25))),
         (20L, PgWire.streamStart(21, firstSegment = true)),
         (30L, PgWire.streamed(21, PgWire.insert(100, Seq(Some("1"), Some("early"))))))
       q.processAllAvailable()
       assert(spark.table("pgout_v2_stream").isEmpty, "uncommitted stream must not emit")
       // batch 2 continues and closes the same segment
-      input.addData(
+      PgSlot.deliver(input,
         (40L, PgWire.streamed(21, PgWire.insert(100, Seq(Some("2"), Some("late"))))),
         (50L, PgWire.streamStop()))
       q.processAllAvailable()
       assert(spark.table("pgout_v2_stream").isEmpty)
       // batch 3: an interleaved second streamed tx ABORTS; the first
       // COMMITS — membership for xid 21 was persisted across batches
-      input.addData(
+      PgSlot.deliver(input,
         (60L, PgWire.streamStart(22, firstSegment = true)),
         (70L, PgWire.streamed(22, PgWire.insert(100, Seq(Some("3"), Some("doomed"))))),
         (80L, PgWire.streamStop()),
@@ -189,18 +188,17 @@ class StreamingSpec extends SparkSpec {
 
   test("pgoutput two-phase: a prepared tx stays pending across micro-" +
       "batches until CommitPrepared; RollbackPrepared drops it") {
-    implicit val sctx = spark.sqlContext
     import graft.cdc.PgWire
     val t0 = 1705314600123456L
-    val input = MemoryStream[(Long, Array[Byte])]
-    val events = CdcStream.pipelinePgOutput(spark,
-      input.toDF().toDF("wal_start", "data"), "testdb")
+    val input = new InMemoryReplicationServer
+    val events = CdcStream.pipelinePgOutput(spark, PgSlot.stream(spark, input),
+      "testdb")
     val q = events.writeStream.outputMode("append")
       .format("memory").queryName("pgout_2pc_stream").start()
     try {
       // batch 1: two prepared txs (31 commits later, 32 rolls back) plus
       // a PLAIN tx — only the plain one may emit this batch
-      input.addData(
+      PgSlot.deliver(input,
         (10L, PgWire.relation(100, "public", "users", Seq("id" -> 20, "name" -> 25))),
         (20L, PgWire.beginPrepare(100L, 101L, t0 - 1000000L, 31, "g31")),
         (30L, PgWire.insert(100, Seq(Some("1"), Some("held")))),
@@ -217,7 +215,7 @@ class StreamingSpec extends SparkSpec {
       assert(afterB1 == List(33L),
         s"prepared txs must stay pending in assembly state: $afterB1")
       // batch 2: resolutions arrive — 31 releases, 32 drops for good
-      input.addData(
+      PgSlot.deliver(input,
         (110L, PgWire.commitPrepared(130L, 131L, t0, 31, "g31")),
         (120L, PgWire.rollbackPrepared(110L, 140L, t0 - 1000000L, t0, 32, "g32")))
       q.processAllAvailable()
@@ -233,16 +231,15 @@ class StreamingSpec extends SparkSpec {
   test("pgoutput multi-relation TRUNCATE: one DDL row per relation survives assembly") {
     // one Truncate frame names two relations, so decode emits two DDL
     // rows at the SAME wal_start — within-tx dedup must not collapse them
-    implicit val sctx = spark.sqlContext
     import graft.cdc.PgWire
     val t0 = 1705314600123456L
-    val input = MemoryStream[(Long, Array[Byte])]
-    val q = CdcStream.pipelinePgOutput(spark,
-        input.toDF().toDF("wal_start", "data"), "testdb")
+    val input = new InMemoryReplicationServer
+    val q = CdcStream.pipelinePgOutput(spark, PgSlot.stream(spark, input),
+        "testdb")
       .writeStream.outputMode("append")
       .format("memory").queryName("pgout_truncate").start()
     try {
-      input.addData(
+      PgSlot.deliver(input,
         (10L, PgWire.relation(100, "public", "orders", Seq("id" -> 20))),
         (20L, PgWire.relation(101, "public", "users", Seq("id" -> 20))),
         (30L, PgWire.begin(1000, t0, 7)),
@@ -258,35 +255,41 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("pgoutput replay suppression (E7): replay emits nothing, recycled xid emits") {
-    implicit val sctx = spark.sqlContext
     import graft.cdc.PgWire
     val t0 = 1705314600123456L
-    val input = MemoryStream[(Long, Array[Byte])]
-    val q = CdcStream.pipelinePgOutput(spark,
-        input.toDF().toDF("wal_start", "data"), "testdb")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("pgout_replay").start()
+    val input = new InMemoryReplicationServer
+    val dir = Files.createTempDirectory("pgout_replay").toString
+    // the parquet sink and checkpoint survive the restart in (a)
+    def start() = CdcStream.start(spark, PgSlot.stream(spark, input), "testdb",
+      s"$dir/out", s"$dir/ck", plugin = "pgoutput")
     def tx(at: Long, name: String): Seq[(Long, Array[Byte])] = Seq(
       (at, PgWire.begin(at + 20, t0, 7)),
       (at + 10, PgWire.insert(100, Seq(Some(s"$at"), Some(name)))),
       (at + 20, PgWire.commit(at + 20, at + 21, t0)))
-    def names() = spark.table("pgout_replay")
+    def names() = spark.read.parquet(s"$dir/out")
       .select($"after".getItem("name")).as[String].collect().toList.sorted
+    PgSlot.deliver(input, (10L, PgWire.relation(100, "public", "users",
+      Seq("id" -> 20, "name" -> 25))) +: tx(100L, "first"): _*)
+    val q1 = start()
     try {
-      input.addData((10L, PgWire.relation(100, "public", "users",
-        Seq("id" -> 20, "name" -> 25))) +: tx(100L, "first"): _*)
-      q.processAllAvailable()
+      q1.processAllAvailable()
       assert(names() == List("first"))
-      // (a) the slot re-delivers the committed tx from its Begin
-      input.addData(tx(100L, "first"): _*)
-      q.processAllAvailable()
+      // (a) the slot re-delivers the committed tx from its Begin: once on
+      // the live session, then to the restarted query's new session
+      PgSlot.deliver(input, tx(100L, "first"): _*)
+      q1.processAllAvailable()
+      assert(names() == List("first"), s"a replayed tx must not re-emit: ${names()}")
+    } finally q1.stop()
+    val q2 = start()
+    try {
+      q2.processAllAvailable()
       assert(names() == List("first"), s"a replayed tx must not re-emit: ${names()}")
       // (b) a new tx reusing xid 7 at higher positions is not a replay
-      input.addData(tx(200L, "second"): _*)
-      q.processAllAvailable()
+      PgSlot.deliver(input, tx(200L, "second"): _*)
+      q2.processAllAvailable()
       assert(names() == List("first", "second"),
         s"a recycled xid at higher positions emits: ${names()}")
-    } finally q.stop()
+    } finally q2.stop()
   }
 
   test("pgoutput streaming: corrupt frame mid-stream — named error (crash) / dead-letter record (dlq)") {
@@ -298,7 +301,6 @@ class StreamingSpec extends SparkSpec {
     // and the surrounding transaction commits normally — the reference's
     // parser-fatal path handed to its dlq/skip/crash failure policy
     // (parser.go:33-38, config.go:101).
-    implicit val sctx = spark.sqlContext
     import graft.cdc.PgWire
     val t0 = 1705314600123456L
     val truncated = PgWire.insert(100, Seq(Some("2"), Some("bob"))).dropRight(3)
@@ -312,13 +314,13 @@ class StreamingSpec extends SparkSpec {
     def causes(t: Throwable): Seq[Throwable] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(20).toSeq
     // crash (default)
-    val in1 = MemoryStream[(Long, Array[Byte])]
-    val q1 = CdcStream.pipelinePgOutput(spark,
-        in1.toDF().toDF("wal_start", "data"), "testdb")
+    val in1 = new InMemoryReplicationServer
+    val q1 = CdcStream.pipelinePgOutput(spark, PgSlot.stream(spark, in1),
+        "testdb")
       .writeStream.outputMode("append")
       .format("memory").queryName("pgcorrupt_crash").start()
     val e = try {
-      in1.addData(frames(): _*)
+      PgSlot.deliver(in1, frames(): _*)
       intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         q1.processAllAvailable()
       }
@@ -332,14 +334,13 @@ class StreamingSpec extends SparkSpec {
       "the taxonomy must replace, not wrap-and-leak, BufferUnderflow")
 
     // dlq
-    val in2 = MemoryStream[(Long, Array[Byte])]
+    val in2 = new InMemoryReplicationServer
     val q2 = CdcStream.pipelinePgOutput(spark,
-        in2.toDF().toDF("wal_start", "data"), "testdb",
-        corruptPolicy = "dlq")
+        PgSlot.stream(spark, in2, corruptPolicy = "dlq"), "testdb")
       .writeStream.outputMode("append")
       .format("memory").queryName("pgcorrupt_dlq").start()
     try {
-      in2.addData(frames(): _*)
+      PgSlot.deliver(in2, frames(): _*)
       q2.processAllAvailable()
       val rows = spark.table("pgcorrupt_dlq")
         .select($"operation", $"subject", $"after", $"event_type").collect()
@@ -360,14 +361,13 @@ class StreamingSpec extends SparkSpec {
     } finally q2.stop()
 
     // skip: frame dropped, stream healthy, nothing quarantined
-    val in3 = MemoryStream[(Long, Array[Byte])]
+    val in3 = new InMemoryReplicationServer
     val q3 = CdcStream.pipelinePgOutput(spark,
-        in3.toDF().toDF("wal_start", "data"), "testdb",
-        corruptPolicy = "skip")
+        PgSlot.stream(spark, in3, corruptPolicy = "skip"), "testdb")
       .writeStream.outputMode("append")
       .format("memory").queryName("pgcorrupt_skip").start()
     try {
-      in3.addData(frames(): _*)
+      PgSlot.deliver(in3, frames(): _*)
       q3.processAllAvailable()
       val ops = spark.table("pgcorrupt_skip")
         .select($"operation").collect().map(_.getString(0)).toSeq
@@ -736,16 +736,14 @@ class StreamingSpec extends SparkSpec {
       "no separate dedup operator — suppression lives in assembly state")
   }
 
-  test("pgoutput pipeline plan shape: exactly TWO stateful operators (slot registry + assembly)") {
-    implicit val sctx = spark.sqlContext
-    val input = MemoryStream[(Long, Array[Byte])]
+  test("pgoutput pipeline plan shape: exactly ONE stateful operator (assembly; decode runs in the source)") {
     val events = CdcStream.pipelinePgOutput(spark,
-      input.toDF().toDF("wal_start", "data"), "testdb")
+      PgSlot.stream(spark, new InMemoryReplicationServer), "testdb")
     val plan = events.queryExecution.analyzed.toString
-    // decode keeps the per-slot relation registry, assembly the per-txid
-    // buffers — each is one keyed exchange; nothing else holds state
-    assert("FlatMapGroupsWithState".r.findAllIn(plan).size == 2,
-      s"registry + assembly, nothing more: $plan")
+    // the source keeps the relation registry and tx cursor, assembly the
+    // per-txid buffers — one keyed exchange; nothing else holds state
+    assert("FlatMapGroupsWithState".r.findAllIn(plan).size == 1,
+      s"assembly, nothing more: $plan")
     assert(!plan.contains("TransformWithState") && !plan.contains("Deduplicate"),
       "no other stateful operator sneaks into the pgoutput path")
   }
@@ -819,13 +817,13 @@ class StreamingSpec extends SparkSpec {
         (ws + 4, PgWire.begin(ws + 100, t0, 2000 + i)),
         (ws + 5, PgWire.insert(100, Seq(Some(s"-$i"), Some("b")))))
     }
-    def compilesPerWarmBatches[T](plugin: String, input: MemoryStream[T],
-        batch: Int => Seq[T]): Long = {
+    def compilesPerWarmBatches(plugin: String, raw: org.apache.spark.sql.DataFrame,
+        add: Int => Unit): Long = {
       val out = Files.createTempDirectory(s"graft_codegen_$plugin").toString
-      val q = CdcStream.start(spark, input.toDF().toDF("wal_start", "data"),
+      val q = CdcStream.start(spark, raw,
         "testdb", s"$out/sink", s"$out/ckpt", plugin = plugin)
       try {
-        def run(i: Int): Unit = { input.addData(batch(i): _*); q.processAllAvailable() }
+        def run(i: Int): Unit = { add(i); q.processAllAvailable() }
         (0 until 2).foreach(run)
         val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         (2 until 7).foreach(run)
@@ -835,8 +833,12 @@ class StreamingSpec extends SparkSpec {
         compiles
       } finally q.stop()
     }
-    val wal = compilesPerWarmBatches("wal2json", MemoryStream[(Long, String)], walBatch)
-    val pg = compilesPerWarmBatches("pgoutput", MemoryStream[(Long, Array[Byte])], pgBatch)
+    val walIn = MemoryStream[(Long, String)]
+    val wal = compilesPerWarmBatches("wal2json", walIn.toDF().toDF("wal_start", "data"),
+      i => walIn.addData(walBatch(i): _*))
+    val pgIn = new InMemoryReplicationServer
+    val pg = compilesPerWarmBatches("pgoutput", PgSlot.stream(spark, pgIn),
+      i => PgSlot.deliver(pgIn, pgBatch(i): _*))
     assert((wal, pg) == ((0L, 0L)), "(wal2json, pgoutput) compiles over 5 warm batches")
   }
 
@@ -868,11 +870,10 @@ class StreamingSpec extends SparkSpec {
       "BATCH_TIMEOUT" -> "50ms",
       "CDC_DATABASE_NAME" -> "testdb")).toOption.get
     assert(cfg.plugin == "pgoutput")
-    implicit val sctx = spark.sqlContext
     import graft.cdc.PgWire
     val t0 = 1705314600123456L
-    val input = MemoryStream[(Long, Array[Byte])]
-    input.addData(
+    val input = new InMemoryReplicationServer
+    PgSlot.deliver(input,
       (10L, PgWire.relation(100, "public", "users", Seq("id" -> 20, "name" -> 25))),
       (20L, PgWire.begin(1000, t0, 7)),
       (30L, PgWire.insert(100, Seq(Some("1"), Some("alice")))),
@@ -881,7 +882,7 @@ class StreamingSpec extends SparkSpec {
       (60L, PgWire.insert(100, Seq(Some("2"), Some("bob")))))
     val out = Files.createTempDirectory("graft_pgcfg_out").toString
     val ckpt = Files.createTempDirectory("graft_pgcfg_ckpt").toString
-    val q = CdcStream.start(spark, input.toDF().toDF("wal_start", "data"),
+    val q = CdcStream.start(spark, PgSlot.stream(spark, input),
       cfg.database, out, ckpt, plugin = cfg.plugin)
     try q.processAllAvailable() finally q.stop()
     val written = spark.read.parquet(out)

@@ -91,6 +91,84 @@ class ToolsMainSpec extends SparkSpec {
     }
   }
 
+  test("/metrics engine series follow Main's own query: events, batches, latency, rate; no errors") {
+    val tmp = Files.createTempDirectory("graft_main_engine").toString
+    val walDir = s"$tmp/wal"; Files.createDirectories(Paths.get(walDir))
+    def tx(file: String, xid: Int): Unit = {
+      Files.write(Paths.get(walDir, file),
+        Seq(walLine("B", xid, 0), walLine("I", xid, xid), walLine("C", xid, 0))
+          .mkString("\n").getBytes(UTF_8)); ()
+    }
+    val running = Main.start(spark, Map(
+      "GRAFT_WAL_DIR" -> walDir,
+      "GRAFT_OUT_DIR" -> s"$tmp/out",
+      "GRAFT_CHECKPOINT_DIR" -> s"$tmp/ck",
+      "CDC_DATABASE_NAME" -> "enginedb",
+      "BATCH_TIMEOUT" -> "100ms"), healthPortOverride = Some(0))
+    try {
+      val deadline = System.currentTimeMillis() + 30000
+      def rows() =
+        try spark.read.parquet(s"$tmp/out").count() catch { case _: Exception => 0L }
+      tx("wal-01.log", 1)
+      while (rows() < 1 && System.currentTimeMillis() < deadline) Thread.sleep(100)
+      tx("wal-02.log", 2)
+      while (rows() < 2 && System.currentTimeMillis() < deadline) Thread.sleep(100)
+      assert(rows() == 2, "two data batches published")
+      def series(): Map[String, Double] = {
+        val (code, body) = get(s"http://localhost:${running.health.port}/metrics")
+        assert(code == 200)
+        "(?m)^(cdc_\\w+) (\\S+)$".r.findAllMatchIn(body)
+          .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      }
+      val engine = Seq("cdc_engine_events_total",
+        "cdc_engine_batches_published_total",
+        "cdc_engine_batch_latency_microseconds_count",
+        "cdc_engine_events_per_second")
+      // progress reaches the listener asynchronously
+      while (!engine.forall(series().getOrElse(_, 0.0) > 0) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(100)
+      val m = series()
+      engine.foreach(k => assert(m.getOrElse(k, 0.0) > 0, s"$k: ${m.get(k)}"))
+      assert(m("cdc_engine_events_total") >= 6, "both batches' lines counted")
+      assert(m("cdc_wal_replication_errors_total") == 0, "nothing failed")
+    } finally running.stop()
+  }
+
+  test("a supervised restart keeps one metrics listener; stop removes it") {
+    import graft.streaming.Reliability.CdcMetricsListener
+    def listeners() =
+      spark.streams.listListeners().count(_.isInstanceOf[CdcMetricsListener])
+    val before = listeners()
+    val srv = new InProcessPgReplicationServer
+    val tmp = Files.createTempDirectory("graft_main_listener").toString
+    try {
+      val ts = "2024-01-15 10:30:00.123456+00"
+      srv.inner.deliver(10L, s"""{"action":"B","xid":5,"timestamp":"$ts"}""")
+      srv.inner.deliver(20L, s"""{"action":"C","xid":5,"timestamp":"$ts"}""")
+      srv.injectError("57P01", "terminating connection due to administrator command")
+      val running = Main.start(spark, Map(
+        "CDC_SOURCE" -> "socket",
+        "DATABASE_URL" -> s"postgres://postgres@127.0.0.1:${srv.port}/lsdb",
+        "CDC_SLOT_NAME" -> "main_listener_slot",
+        "GRAFT_OUT_DIR" -> s"$tmp/out",
+        "GRAFT_CHECKPOINT_DIR" -> s"$tmp/ck",
+        "BATCH_TIMEOUT" -> "100ms"), healthPortOverride = Some(0))
+      @volatile var restarts = -1
+      val awaiter = new Thread(() => { restarts = running.await() })
+      awaiter.setDaemon(true); awaiter.start()
+      try {
+        val deadline = System.currentTimeMillis() + 60000
+        while (srv.inner.feedbackPositions.isEmpty &&
+          System.currentTimeMillis() < deadline) Thread.sleep(100)
+        assert(srv.inner.feedbackPositions.nonEmpty, "the restarted query ran")
+        assert(listeners() == before + 1)
+      } finally running.stop()
+      awaiter.join(15000)
+      assert(restarts >= 1, s"the transient error forced a restart, got $restarts")
+      assert(listeners() == before, "stop detaches the listener")
+    } finally srv.close()
+  }
+
   /** Jobs per (query id, micro-batch id), from the local properties each
     * streaming job carries. [[drain]] runs a marker job and waits for its
     * end: the listener bus delivers in order, so every earlier job has
@@ -506,6 +584,44 @@ class ToolsMainSpec extends SparkSpec {
     running.stop()
     assert(graft.streaming.Reliability.isFatal(e), e.getMessage)
     assert(e.getMessage.contains("SCHEMA_NOT_COMPATIBLE"), e.getMessage)
+    assert(starts == 1, s"restarted a checkpoint that cannot resume: $starts starts")
+  }
+
+  test("Running.await exits on a checkpoint with another set of stateful operators: fatal, no restart") {
+    // a pgoutput checkpoint written when decode was a second keyed
+    // operator ahead of assembly, resumed by a query with assembly alone
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+      OutputMode, StreamingQuery, StreamingQueryException}
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft_main_ops").toString
+    val in = Paths.get(tmp, "in"); Files.createDirectories(in)
+    def write(name: String, keys: String*): Unit = {
+      Files.write(in.resolve(name), keys.mkString("\n").getBytes(UTF_8)); ()
+    }
+    def keyed(ds: org.apache.spark.sql.Dataset[String]) =
+      ds.groupByKey(identity).flatMapGroupsWithState(OutputMode.Append,
+        GroupStateTimeout.NoTimeout)(
+        (k: String, vs: Iterator[String], st: GroupState[Long]) => {
+          st.update(st.getOption.getOrElse(0L) + vs.size); Iterator(k)
+        })
+    def run(ds: org.apache.spark.sql.Dataset[String]): StreamingQuery =
+      ds.writeStream.outputMode("append")
+        .option("checkpointLocation", s"$tmp/ck")
+        .trigger(Trigger.ProcessingTime("50 milliseconds"))
+        .format("noop").start()
+    def lines = spark.readStream.text(in.toString).as[String]
+    write("a.txt", "k1", "k2")
+    val first = run(keyed(keyed(lines)))
+    try first.processAllAvailable() finally first.stop()
+    write("b.txt", "k2")
+    var starts = 0
+    val running = new Main.Running(() => { starts += 1; run(keyed(lines)) },
+      new CdcMetrics.Registry, maxRestarts = 3)
+    val e = intercept[StreamingQueryException](running.await())
+    running.stop()
+    assert(e.getMessage.contains("STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA"),
+      e.getMessage)
+    assert(graft.streaming.Reliability.isFatal(e), e.getMessage)
     assert(starts == 1, s"restarted a checkpoint that cannot resume: $starts starts")
   }
 

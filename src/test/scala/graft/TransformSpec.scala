@@ -148,14 +148,14 @@ class TransformSpec extends SparkSpec {
         case e @ (_: Lower | _: Upper | _: InitCap) => e
       })
     val text = MemoryStream[(Long, String)].toDF().toDF("wal_start", "data")
-    val binary = MemoryStream[(Long, Array[Byte])].toDF().toDF("wal_start", "data")
+    def decoded(policy: String) = PgSlot.stream(spark,
+      new graft.sources.InMemoryReplicationServer, corruptPolicy = policy)
     // the detector sees a case mapping when there is one
     assert(caseMaps(text.select(lower($"data")).queryExecution.analyzed).nonEmpty)
     val plans = Seq(
       "wal2json" -> CdcStream.pipeline(spark, text, "testdb"),
-      "pgoutput" -> CdcStream.pipelinePgOutput(spark, binary, "testdb"),
-      "pgoutput dlq" -> CdcStream.pipelinePgOutput(spark, binary, "testdb",
-        corruptPolicy = "dlq"))
+      "pgoutput" -> CdcStream.pipelinePgOutput(spark, decoded("crash"), "testdb"),
+      "pgoutput dlq" -> CdcStream.pipelinePgOutput(spark, decoded("dlq"), "testdb"))
     plans.foreach { case (name, df) =>
       val found = caseMaps(df.queryExecution.analyzed)
       assert(found.isEmpty, s"$name: $found")
