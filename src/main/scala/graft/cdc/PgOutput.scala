@@ -155,11 +155,32 @@ object PgOutput {
     var streamTop: Long = -1L
     val streamXids: mutable.Map[Long, mutable.LinkedHashSet[Long]] =
       mutable.Map.empty
+    // streamed top-level xids ended by StreamPrepare and not yet resolved:
+    // once the prepare is confirmed, a new session re-sends only the
+    // resolution, so their members are the one part of the context a
+    // slot cannot rebuild ([[preparedStreams]])
+    val prepared: mutable.Set[Long] = mutable.Set.empty
 
     /** The session's state as an immutable value. */
     def snapshot: PgSlotState = PgSlotState(registry.toMap, currentXid,
       currentTs, streamTop,
-      streamXids.map { case (top, xids) => top -> xids.toSeq }.toMap)
+      streamXids.map { case (top, xids) => top -> xids.toSeq }.toMap,
+      prepared.toSet)
+
+    /** Members of the prepared, unresolved streamed transactions. */
+    def preparedStreams: Map[Long, Seq[Long]] =
+      prepared.iterator.map(x => x -> streamXids.get(x).fold(Seq(x))(_.toSeq)).toMap
+
+    /** Merge [[preparedStreams]] taken from an earlier session: a member
+      * set only grows until its resolution, so merging is idempotent with
+      * a slot that re-sends the stream too. */
+    def resume(streams: Map[Long, Seq[Long]]): this.type = {
+      streams.foreach { case (top, xids) =>
+        streamXids.getOrElseUpdate(top, mutable.LinkedHashSet(top)) ++= xids
+        prepared += top
+      }
+      this
+    }
 
     /** Replace this session's state with `st`. */
     def restore(st: PgSlotState): this.type = {
@@ -171,6 +192,7 @@ object PgOutput {
       st.streams.foreach { case (top, xids) =>
         streamXids(top) = mutable.LinkedHashSet(xids: _*)
       }
+      prepared.clear(); prepared ++= st.prepared
       this
     }
 
@@ -213,7 +235,7 @@ object PgOutput {
       }
 
     /** Advance the session over one frame exactly as [[decode]] does —
-      * registry, xid/ts cursor, `streamTop`, `streamXids` — without
+      * registry, xid/ts cursor, `streamTop`, `streamXids`, `prepared` — without
       * reading tuples or building rows. A frame [[decode]] rejects leaves
       * the state where [[decode]] leaves it (both stop at the same read),
       * and nothing is thrown: the caller is the driver, which must not
@@ -390,6 +412,7 @@ object PgOutput {
           b.getLong() // commit LSN
           b.getLong() // end LSN
           val ts = pgTimestamp(b.getLong())
+          prepared -= xid
           val members = streamXids.remove(xid)
             .map(_.toSeq)
             .getOrElse(Seq(xid))
@@ -414,6 +437,7 @@ object PgOutput {
             // own subxid, so retracting only the top xid would leave
             // those groups with neither marker and assembly's coalesce
             // fallback would emit the rolled-back rows as committed.
+            prepared -= xid
             val members = streamXids.remove(xid)
               .map(_.toSeq)
               .getOrElse(Seq(xid))
@@ -465,6 +489,7 @@ object PgOutput {
           // NOT a corrupt frame.
           streamXids.getOrElseUpdate(xid,
             mutable.LinkedHashSet(xid))
+          prepared += xid
           Nil
         case 'K' =>
           b.get() // flags
@@ -472,6 +497,7 @@ object PgOutput {
           val ts = pgTimestamp(b.getLong())
           val xid = b.getInt().toLong & 0xffffffffL
           readCString(b)
+          prepared -= xid
           val members = streamXids.remove(xid).map(_.toSeq).getOrElse(Seq(xid))
           emit(members.map(x => DecodedWalEvent(walStart, "C", is_begin = false,
             is_commit = true, null, null, null, null, x, ts)))
@@ -480,6 +506,7 @@ object PgOutput {
           b.getLong(); b.getLong(); b.getLong(); b.getLong() // LSNs + both ts
           val xid = b.getInt().toLong & 0xffffffffL
           readCString(b)
+          prepared -= xid
           val members = streamXids.remove(xid).map(_.toSeq).getOrElse(Seq(xid))
           emit(members.map(x => DecodedWalEvent(walStart, "ABORT",
             is_begin = false, is_commit = false, null, null, null, null,

@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.nio.ByteBuffer
+import java.util.concurrent.ConcurrentLinkedQueue
 import scala.collection.mutable
 
 import java.util.{Map => JMap}
@@ -101,19 +102,194 @@ trait ReplicationConnection {
   def send(copyData: Array[Byte]): Unit
 }
 
-/** An in-process replication slot that the `server` option of
-  * [[CopyBothSource]] resolves by name: it opens one
-  * [[ReplicationConnection]] per stream instance (the in-memory slot the
-  * tests serve, or an embedding host's own).
+/** In-memory [[ReplicationConnection]]: a bare frame queue plus a log of
+  * the standby feedback sent back — the single-connection stub for codec
+  * and keepalive tests.
   */
-trait ReplicationServer {
-  def connect(): ReplicationConnection
+final class InMemoryReplicationConnection extends ReplicationConnection
+    with AutoCloseable {
+  private val inbox = new ConcurrentLinkedQueue[Array[Byte]]()
+  private val feedback = new ConcurrentLinkedQueue[Array[Byte]]()
+  @volatile var closed = false
+
+  override def close(): Unit = closed = true
+  def deliver(frame: Array[Byte]): Unit = inbox.add(frame)
+  override def receive(): Option[Array[Byte]] = Option(inbox.poll())
+  override def send(copyData: Array[Byte]): Unit = feedback.add(copyData)
+
+  /** Confirmed positions from received StandbyStatusUpdate frames. */
+  def confirmedPositions: Seq[Long] = {
+    import scala.jdk.CollectionConverters._
+    feedback.iterator().asScala.map { bytes =>
+      val b = ByteBuffer.wrap(bytes)
+      require(b.get().toChar == 'r', "standby feedback must be 'r'")
+      b.getLong() // written (= flushed = applied here)
+    }.toSeq
+  }
+}
+
+/** In-memory replication SERVER stub with the slot-retention semantics a
+  * real primary provides (and which the live source's replay guarantee
+  * leans on): XLogData frames are RETAINED until standby feedback confirms
+  * them — `confirmed_flush_lsn` only advances on feedback, and every new
+  * connection re-delivers everything after the confirmed position (what
+  * `START_REPLICATION slot ... <confirmed_lsn>` does on reconnect,
+  * reader.go:311-357). Like Postgres's walsender, a new session also
+  * re-sends each pgoutput transaction still open at that position from
+  * its Begin (or first StreamStart; of a streamed transaction whose
+  * StreamPrepare is confirmed, only the resolution), and the latest
+  * Relation message of every relation before anything else
+  * ([[sessionStart]]). This is what makes a restarted stream instance
+  * stateless: its state is the server's slot + the engine's checkpointed
+  * offset, never reader memory — the pgoutput decode context included
+  * (the members of a confirmed StreamPrepare ride the offset).
+  */
+final class InMemoryReplicationServer {
+  // (lsn, XLogData frame, is a pgoutput frame)
+  private val retained = mutable.ArrayBuffer[(Long, Array[Byte], Boolean)]()
+  private var confirmed = 0L
+  private val feedbackLog = mutable.ArrayBuffer[Long]()
+
+  def deliver(lsn: Long, line: String, serverClock: Long = 0L): Unit =
+    retain(lsn, line.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      serverClock, pgoutput = false)
+
+  /** Binary payload delivery — pgoutput frames ride XLogData as raw bytes
+    * (the reference's default plugin produces binary messages, not text).
+    */
+  def deliverBytes(lsn: Long, payload: Array[Byte],
+      serverClock: Long = 0L): Unit =
+    retain(lsn, payload, serverClock, pgoutput = true)
+
+  private def retain(lsn: Long, payload: Array[Byte], serverClock: Long,
+      pgoutput: Boolean): Unit = synchronized {
+    retained += ((lsn, CopyBothFraming.xlogData(lsn, lsn, serverClock,
+      payload), pgoutput))
+  }
+
+  /** Standby feedback positions received, in arrival order. */
+  def feedbackPositions: Seq[Long] = synchronized(feedbackLog.toSeq)
+
+  /** Where a new session starts and what it sends first. The start is
+    * the first retained frame past the confirmed position, rewound to the
+    * Begin/BeginPrepare of a pgoutput transaction open there and to the
+    * first StreamStart of every streamed one not yet committed, aborted
+    * or prepared (the slot re-sends an unconfirmed transaction whole, and
+    * of a confirmed prepare only the CommitPrepared/RollbackPrepared),
+    * then over the walStart-0 metadata frames just before it. The prelude
+    * is the latest Relation message of each relation retained before the
+    * start, in protocol-v1 layout at walStart 0: a session sends a
+    * relation's metadata before its first use in that session. A frame
+    * this scan cannot parse moves nothing.
+    */
+  private def sessionStart(): (Int, Seq[Array[Byte]]) = synchronized {
+    val resume = retained.indexWhere(_._1 > confirmed) match {
+      case -1 => retained.size
+      case i => i
+    }
+    def message(k: Int): ByteBuffer = {
+      val frame = retained(k)._2
+      ByteBuffer.wrap(frame, 25, frame.length - 25)
+    }
+    def xid(b: ByteBuffer): Long = b.getInt().toLong & 0xffffffffL
+    val inSegment = new Array[Boolean](resume) // before frame k's message
+    var segment = false
+    var openTx = -1
+    val openStreams = mutable.Map.empty[Long, Int]
+    for (k <- 0 until resume if retained(k)._3) {
+      inSegment(k) = segment
+      val b = message(k)
+      try b.get().toChar match {
+        case 'B' | 'b' if !segment => openTx = k
+        case 'C' | 'P' if !segment => openTx = -1
+        case 'S' => openStreams.getOrElseUpdate(xid(b), k); segment = true
+        case 'E' => segment = false
+        case 'c' => openStreams.remove(xid(b))
+        case 'A' => val top = xid(b); if (xid(b) == top) openStreams.remove(top)
+        // a confirmed StreamPrepare is not re-sent: only its resolution is
+        case 'p' | 'K' => b.position(b.position() + 25); openStreams.remove(xid(b))
+        case 'r' => b.position(b.position() + 33); openStreams.remove(xid(b))
+        case _ => ()
+      } catch { case _: java.nio.BufferUnderflowException => () }
+    }
+    var start = (openStreams.values.toSeq :+ openTx :+ resume).filter(_ >= 0).min
+    while (start > 0 && retained(start - 1)._1 == 0L) start -= 1
+    // relation id -> its latest Relation message before the start
+    val relations = mutable.LinkedHashMap.empty[Int, Array[Byte]]
+    for (k <- 0 until start if retained(k)._3) {
+      val b = message(k)
+      try if (b.get() == 'R'.toByte) {
+        if (inSegment(k)) xid(b)
+        val body = new Array[Byte](b.remaining() + 1)
+        body(0) = 'R'.toByte
+        b.get(body, 1, body.length - 1)
+        val id = ByteBuffer.wrap(body, 1, 4).getInt()
+        relations.remove(id)
+        relations(id) = body
+      } catch { case _: RuntimeException => () }
+    }
+    (start, relations.values.toSeq.map(CopyBothFraming.xlogData(0L, 0L, 0L, _)))
+  }
+
+  def connect(): ReplicationConnection = new ReplicationConnection {
+    private val (start, prelude) = sessionStart()
+    private val ahead = mutable.Queue(prelude: _*)
+    // session cursor: next retained frame not yet sent on THIS connection
+    private var cursor = start
+    override def receive(): Option[Array[Byte]] =
+      InMemoryReplicationServer.this.synchronized {
+        if (ahead.nonEmpty) Some(ahead.dequeue())
+        else if (cursor < retained.size) {
+          val f = retained(cursor)._2; cursor += 1; Some(f)
+        } else None
+      }
+    override def send(copyData: Array[Byte]): Unit =
+      InMemoryReplicationServer.this.synchronized {
+        val b = ByteBuffer.wrap(copyData)
+        require(b.get().toChar == 'r', "client sends only StandbyStatusUpdate")
+        val pos = b.getLong()
+        feedbackLog += pos
+        if (pos > confirmed) confirmed = pos
+        // slot retention: confirmed WAL is releasable. (Frames are kept
+        // here so open sessions' cursors stay valid; a real slot frees
+        // the segments.)
+      }
+  }
 }
 
 /** LSN offset of the CopyBoth stream: the position of the last admitted
-  * XLogData message. */
-final case class LsnOffset(lsn: Long) extends Offset {
-  override def json(): String = lsn.toString
+  * XLogData message. In pgoutput mode it also carries the members of the
+  * streamed transactions prepared and not yet resolved at `lsn`
+  * ([[PgOutput.DecodeSession.preparedStreams]]): once such a prepare is
+  * confirmed, a new session re-sends only its CommitPrepared or
+  * RollbackPrepared, so the checkpointed offset is where a restarted
+  * stream finds them. Without any, the JSON is the bare lsn.
+  */
+final case class LsnOffset(lsn: Long,
+    prepared: Map[Long, Seq[Long]] = Map.empty) extends Offset {
+  override def json(): String = {
+    import org.json4s._
+    if (prepared.isEmpty) lsn.toString
+    else jackson.JsonMethods.compact(JObject(
+      "lsn" -> JLong(lsn),
+      "prepared" -> JObject(prepared.toList.sortBy(_._1).map { case (top, xids) =>
+        top.toString -> JArray(xids.map(JLong(_)).toList)
+      })))
+  }
+}
+
+object LsnOffset {
+  def parse(json: String): LsnOffset =
+    if (!json.startsWith("{")) LsnOffset(json.toLong)
+    else {
+      import org.json4s._
+      def long(v: JValue): Long = v.asInstanceOf[JInt].num.toLong
+      val o = jackson.JsonMethods.parse(json)
+      LsnOffset(long(o \ "lsn"),
+        (o \ "prepared").asInstanceOf[JObject].obj.map { case (top, xids) =>
+          top.toLong -> xids.children.map(long)
+        }.toMap)
+    }
 }
 
 /** One planned (start, end] range of admitted messages. In pgoutput mode
@@ -171,8 +347,9 @@ private object LsnRangeReaderFactory extends PartitionReaderFactory {
   *    admitted-but-unacked window, the slot-retention analog);
   *  - admission control caps messages per micro-batch (ReadMaxFiles /
   *    ReadMaxRows both read as a message cap — the bounded-channel
-  *    backpressure analog, reader.go:361-366) past the start offset;
-  *    the remainder stays buffered (contract 3);
+  *    backpressure analog, reader.go:361-366) past the start offset,
+  *    stretched to finish the last admitted lsn; the remainder stays
+  *    buffered (contract 3);
   *  - `commit(end)` sends StandbyStatusUpdate(end) — monotonically: a
   *    re-ack at or below the confirmed position is ignored (contract 4) —
   *    and drops acked frames from the buffer;
@@ -185,9 +362,11 @@ private object LsnRangeReaderFactory extends PartitionReaderFactory {
   *    admission order, and each planned range carries that context
   *    advanced over the buffered frames at or below its start (held
   *    walStart-0 Relations and a resumed session's re-sends included),
-  *    for its reader to decode from. The context is not checkpointed: a
-  *    new session re-sends each open transaction from its Begin and each
-  *    Relation before its first use, which rebuilds it;
+  *    for its reader to decode from. A new session re-sends each open
+  *    transaction from its Begin and each Relation before its first use,
+  *    which rebuilds the context, except the members of streamed
+  *    transactions whose StreamPrepare was confirmed: those ride the
+  *    offsets ([[LsnOffset]]) and seed a resumed instance;
   *  - no offset before the first positioned frame: from the initial
   *    offset, `latestOffset` answers null (no data yet) until an XLogData
   *    frame with a non-zero walStart is admitted — keepalives and held
@@ -226,19 +405,30 @@ final class CopyBothWalStream(connect: () => ReplicationConnection,
   private val zeroHold = mutable.ArrayBuffer[Array[Byte]]()
   private var head = 0L // last admitted lsn
   private var confirmed = 0L // last acked lsn (standby feedback)
-  // pgoutput mode: the decode context after every frame commit released
+  // pgoutput mode: the decode context after every frame commit released,
+  // seeded once with the prepared streams of the first start offset
   private val released = pgoutput.map(_ => new PgOutput.DecodeSession)
+  private var resumed = false
 
-  /** pgoutput mode: the decode context as of `lo` — the released frames'
-    * context advanced over the buffered frames at or below `lo`. A
+  /** pgoutput mode: take the prepared streams of the first start offset
+    * the engine hands this instance. The slot resumes at or below that
+    * offset, so it re-sends nothing that contradicts them. */
+  private def resume(start: Offset): Unit = if (!resumed) {
+    resumed = true
+    released.foreach(_.resume(lsnOffset(start).prepared))
+  }
+
+  /** pgoutput mode: the decode context as of `lsn` — the released frames'
+    * context advanced over the buffered frames at or below `lsn`. A
     * function of the buffer alone, so a range planned twice carries the
     * same context.
     */
-  private def contextAt(lo: Long): Array[Byte] = released.map { s =>
-    val at = new PgOutput.DecodeSession().restore(s.snapshot)
-    buffer.foreach { case (lsn, frame) => if (lsn <= lo) at.track(lsn, frame) }
-    StateBlob.write(at.snapshot)
-  }.orNull
+  private def sessionAt(lsn: Long): Option[PgOutput.DecodeSession] =
+    released.map { s =>
+      val at = new PgOutput.DecodeSession().restore(s.snapshot)
+      buffer.foreach { case (l, frame) => if (l <= lsn) at.track(l, frame) }
+      at
+    }
 
   private def drainConnection(): Unit = {
     var frame = conn.receive()
@@ -277,10 +467,12 @@ final class CopyBothWalStream(connect: () => ReplicationConnection,
     maxMessages.map(n => ReadLimit.maxRows(n.toLong))
       .getOrElse(ReadLimit.allAvailable())
 
-  private def lsnOf(o: Offset): Long =
-    if (o == null) 0L else o.asInstanceOf[LsnOffset].lsn
+  private def lsnOffset(o: Offset): LsnOffset =
+    if (o == null) LsnOffset(0L) else o.asInstanceOf[LsnOffset]
+  private def lsnOf(o: Offset): Long = lsnOffset(o).lsn
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
+    resume(start)
     drainConnection()
     // the head never regresses below the engine's start offset — a fresh
     // instance resuming from a checkpoint starts AT the checkpoint
@@ -291,23 +483,28 @@ final class CopyBothWalStream(connect: () => ReplicationConnection,
       case _ => Int.MaxValue
     }
     // frames at or below the start (a resumed session re-sends them) are
-    // no part of the next batch, so they do not count against the cap
+    // no part of the next batch, so they do not count against the cap;
+    // and an admission never ends inside one lsn (a walStart-0 Relation
+    // shares its data frame's): a frame at or below the head left pending
+    // would fall in no later (start, end] range
     val lo = lsnOf(start)
     var admitted = 0
-    while (pending.nonEmpty && (admitted < cap || pending.head._1 <= lo)) {
+    while (pending.nonEmpty && (admitted < cap || pending.head._1 <= head)) {
       val msg = pending.removeHead()
       buffer.append(msg)
       head = math.max(head, msg._1)
       if (msg._1 > lo) admitted += 1
     }
-    if (head == 0L) null else LsnOffset(head)
+    if (head == 0L) null
+    else LsnOffset(head, sessionAt(head).fold(Map.empty[Long, Seq[Long]])(_.preparedStreams))
   }
 
-  override def deserializeOffset(json: String): Offset = LsnOffset(json.toLong)
+  override def deserializeOffset(json: String): Offset = LsnOffset.parse(json)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
+    resume(start)
     val lo = lsnOf(start)
-    val hi = end.asInstanceOf[LsnOffset].lsn
+    val hi = lsnOf(end)
     // a replayed range may be planned by a fresh instance (task retry /
     // restart): drain so the connection's slot redelivery is visible.
     // Only frames AT OR BELOW the planned end surface into the buffer —
@@ -327,14 +524,15 @@ final class CopyBothWalStream(connect: () => ReplicationConnection,
     }
     Array(LsnRangePartition(
       buffer.filter { case (lsn, _) => lsn > lo && lsn <= hi }.toSeq,
-      contextAt(lo), pgoutput.getOrElse("crash")))
+      sessionAt(lo).map(s => StateBlob.write(s.snapshot)).orNull,
+      pgoutput.getOrElse("crash")))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     LsnRangeReaderFactory
 
   override def commit(end: Offset): Unit = {
-    val pos = end.asInstanceOf[LsnOffset].lsn
+    val pos = lsnOf(end)
     // monotone feedback: never confirm backward (a replayed batch's
     // commit must not regress confirmed_flush_lsn, reader.go:594-605)
     if (pos > confirmed) {
@@ -381,7 +579,7 @@ final class CopyBothWalStream(connect: () => ReplicationConnection,
   * semantics are specified for.
   *
   * Two transports behind the same seam: `server` resolves a live
-  * in-process [[ReplicationServer]] from a process-local registry
+  * in-process [[InMemoryReplicationServer]] from a process-local registry
   * (the embedded/test shape), while `host`/`port`/`slot` dial a
   * [[SocketReplicationConnection]] speaking the public replication
   * protocol over TCP (StartupMessage with replication=database →
@@ -449,9 +647,9 @@ object CopyBothSource {
     }.flatten.getOrElse("crash")
 
   private val servers =
-    scala.collection.concurrent.TrieMap.empty[String, ReplicationServer]
+    scala.collection.concurrent.TrieMap.empty[String, InMemoryReplicationServer]
 
-  def register(name: String, server: ReplicationServer): Unit =
+  def register(name: String, server: InMemoryReplicationServer): Unit =
     servers(name) = server
   def unregister(name: String): Unit = { servers.remove(name); () }
   private[sources] def connect(name: String): ReplicationConnection =

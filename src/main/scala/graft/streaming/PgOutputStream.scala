@@ -12,10 +12,11 @@ import graft.cdc.PgOutput
   * can span a batch boundary like a v1 transaction can) and, per
   * in-flight streamed top-level tx, the (sub)xids whose changes were
   * observed, so a StreamCommit in a later batch still fans out to every
-  * member. The replication source ships it with each planned range as
-  * one [[StateBlob]] ([[PgOutput.DecodeSession.snapshot]]); it is not
-  * checkpointed — a restarted stream rebuilds it from what the slot
-  * re-sends.
+  * member; `prepared` marks those ended by StreamPrepare and not yet
+  * resolved. The replication source ships it with each planned range as
+  * one [[StateBlob]] ([[PgOutput.DecodeSession.snapshot]]). Only the
+  * prepared streams' members are checkpointed, in the source's offsets:
+  * a restarted stream rebuilds the rest from what the slot re-sends.
   */
 @SerialVersionUID(1L)
 case class PgSlotState(
@@ -23,7 +24,8 @@ case class PgSlotState(
     xid: Long,
     ts: Timestamp,
     streamTop: Long,
-    streams: Map[Long, Seq[Long]])
+    streams: Map[Long, Seq[Long]],
+    prepared: Set[Long])
 
 /** A decoded pgoutput data row: the payload transaction assembly buffers
   * ([[StreamingTxAssembly]]), flattened again after it. Buffered rows are

@@ -169,7 +169,7 @@ object PgWalGen {
   def comparable(st: PgSlotState): Product = (
     st.relations.map { case (id, r) =>
       id -> (r.schema, r.table, r.columns.toSeq, r.columnTypes.toSeq) },
-    st.xid, st.ts, st.streamTop, st.streams)
+    st.xid, st.ts, st.streamTop, st.streams, st.prepared)
 }
 
 /** The driver-side decode context of the pgoutput replication source:
@@ -230,6 +230,78 @@ class PgOutputTrackerSpec extends AnyFunSuite {
       }
       stream.stop()
     }
+  }
+
+  test("an admission never ends inside one lsn: a walStart-0 Relation and " +
+      "its data frame ride one range") {
+    val server = new InMemoryReplicationServer
+    val rel = PgWire.relation(100, "public", "users", Seq("id" -> 20))
+    val ins = PgWire.insert(100, Seq(Some("1")))
+    server.deliverBytes(0L, rel)
+    server.deliverBytes(10L, ins)
+    val stream = new CopyBothWalStream(() => server.connect(),
+      pgoutput = Some("crash"))
+    val start = stream.initialOffset()
+    val end = stream.latestOffset(start, ReadLimit.maxRows(1))
+    assert(end == LsnOffset(10L))
+    val part = stream.planInputPartitions(start, end)
+    assert(part.toSeq.flatMap(_.asInstanceOf[LsnRangePartition].rows)
+      .map { case (l, f) => (l, f.toSeq) } == Seq((10L, rel.toSeq), (10L, ins.toSeq)))
+    val reader = stream.createReaderFactory().createReader(part.head)
+    val ops = Iterator.continually(reader.next()).takeWhile(identity)
+      .map(_ => reader.get().getUTF8String(1).toString).toList
+    assert(ops == List("INSERT"), "the range decodes the INSERT")
+    assert(stream.latestOffset(end, ReadLimit.maxRows(1)) == end, "nothing is left behind")
+    stream.stop()
+    // the offset's context covers every frame at its lsn: a cap that
+    // falls on a Relation sharing a StreamPrepare's lsn still takes the
+    // prepare's members into the offset
+    val t0 = 1705314600123456L
+    val server2 = new InMemoryReplicationServer
+    Seq(0L -> rel, 10L -> PgWire.streamStart(21, firstSegment = true),
+      20L -> PgWire.streamed(22, ins), 30L -> PgWire.streamStop(), 0L -> rel,
+      40L -> PgWire.streamPrepare(100L, 101L, t0, 21, "g21")
+    ).foreach { case (lsn, f) => server2.deliverBytes(lsn, f) }
+    val stream2 = new CopyBothWalStream(() => server2.connect(),
+      pgoutput = Some("crash"))
+    assert(stream2.latestOffset(stream2.initialOffset(), ReadLimit.maxRows(5)) ==
+      LsnOffset(40L, Map(21L -> Seq(21L, 22L))))
+    stream2.stop()
+  }
+
+  test("the offset carries a confirmed-prepared stream's members; " +
+      "a resumed instance decodes its CommitPrepared with them") {
+    val t0 = 1705314600123456L
+    val server = new InMemoryReplicationServer
+    Seq(
+      0L -> PgWire.relation(100, "public", "users", Seq("id" -> 20)),
+      10L -> PgWire.streamStart(21, firstSegment = true),
+      20L -> PgWire.streamed(22, PgWire.insert(100, Seq(Some("1")))),
+      30L -> PgWire.streamStop(),
+      40L -> PgWire.streamPrepare(100L, 101L, t0, 21, "g21")
+    ).foreach { case (lsn, f) => server.deliverBytes(lsn, f) }
+    val s1 = new CopyBothWalStream(() => server.connect(), pgoutput = Some("crash"))
+    val end = s1.latestOffset(s1.initialOffset(), ReadLimit.allAvailable())
+    assert(end == LsnOffset(40L, Map(21L -> Seq(21L, 22L))))
+    assert(s1.deserializeOffset(end.json()) == end, s"round trip of ${end.json()}")
+    s1.commit(end)
+    s1.stop()
+    // text offsets stay the bare lsn
+    assert(LsnOffset(40L).json() == "40" && LsnOffset.parse("40") == LsnOffset(40L))
+    server.deliverBytes(50L, PgWire.commitPrepared(120L, 121L, t0, 21, "g21"))
+    val s2 = new CopyBothWalStream(() => server.connect(), pgoutput = Some("crash"))
+    val start = s2.deserializeOffset(end.json())
+    val next = s2.latestOffset(start, ReadLimit.allAvailable())
+    assert(next == LsnOffset(50L), "the resolution ends the prepared stream")
+    val part = s2.planInputPartitions(start, next)
+    assert(part.toSeq.flatMap(_.asInstanceOf[LsnRangePartition].rows)
+      .map { case (l, f) => (l, f.head.toChar) } == Seq((50L, 'R'), (50L, 'K')),
+      "the slot re-sends the relation and the CommitPrepared, not the stream")
+    val reader = s2.createReaderFactory().createReader(part.head)
+    val commits = Iterator.continually(reader.next()).takeWhile(identity)
+      .map(_ => reader.get().getLong(8)).toList
+    assert(commits == List(21L, 22L), "the commit fans out to every member")
+    s2.stop()
   }
 
   test("a new session re-sends open transactions from their Begin, " +

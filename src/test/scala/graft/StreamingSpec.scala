@@ -228,6 +228,57 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("pgoutput two-phase: a streamed tx prepared and confirmed before a " +
+      "restart commits every member after it") {
+    // Postgres re-sends only the CommitPrepared of a streamed transaction
+    // whose StreamPrepare it saw confirmed, so the members streamed under
+    // subtransaction xids must come back from the checkpoint
+    import graft.cdc.PgWire
+    val t0 = 1705314600123456L
+    val input = new InMemoryReplicationServer
+    val dir = Files.createTempDirectory("pgout_2pc_restart").toString
+    def start() = CdcStream.start(spark, PgSlot.stream(spark, input), "testdb",
+      s"$dir/out", s"$dir/ck", plugin = "pgoutput")
+    def names() = spark.read.parquet(s"$dir/out")
+      .select($"txid", $"after".getItem("name"))
+      .as[(Long, String)].collect().toList.sortBy(_._2)
+    PgSlot.deliver(input,
+      (0L, PgWire.relation(100, "public", "users", Seq("id" -> 20, "name" -> 25))),
+      (10L, PgWire.streamStart(21, firstSegment = true)),
+      (20L, PgWire.streamed(21, PgWire.insert(100, Seq(Some("1"), Some("a"))))),
+      (30L, PgWire.streamed(22, PgWire.insert(100, Seq(Some("2"), Some("b"))))),
+      (40L, PgWire.streamStop()),
+      (50L, PgWire.streamPrepare(100L, 101L, t0, 21, "g21")))
+    val q1 = start()
+    try {
+      q1.processAllAvailable()
+      // the next batch confirms the prepare
+      PgSlot.deliver(input,
+        (60L, PgWire.begin(80L, t0, 23)),
+        (70L, PgWire.insert(100, Seq(Some("3"), Some("c")))),
+        (80L, PgWire.commit(80L, 81L, t0)))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    assert(input.feedbackPositions.max >= 50L, "the prepare was confirmed")
+    val resent = {
+      val c = input.connect()
+      Iterator.continually(c.receive()).takeWhile(_.isDefined).map { f =>
+        graft.sources.CopyBothFraming.parse(f.get)
+          .asInstanceOf[graft.sources.CopyBothFraming.XLogData].walStart
+      }.toList
+    }
+    assert(!resent.exists(l => l >= 10L && l <= 50L),
+      s"the slot does not re-send a confirmed prepare's stream: $resent")
+    assert(names() == List((23L, "c")), s"a prepared tx stays pending: ${names()}")
+    val q2 = start()
+    try {
+      PgSlot.deliver(input, (90L, PgWire.commitPrepared(120L, 121L, t0, 21, "g21")))
+      q2.processAllAvailable()
+      assert(names() == List((21L, "a"), (22L, "b"), (23L, "c")),
+        s"CommitPrepared releases every member of the stream: ${names()}")
+    } finally q2.stop()
+  }
+
   test("pgoutput multi-relation TRUNCATE: one DDL row per relation survives assembly") {
     // one Truncate frame names two relations, so decode emits two DDL
     // rows at the SAME wal_start — within-tx dedup must not collapse them
@@ -290,6 +341,48 @@ class StreamingSpec extends SparkSpec {
       assert(names() == List("first", "second"),
         s"a recycled xid at higher positions emits: ${names()}")
     } finally q2.stop()
+  }
+
+  test("pgoutput assembly replay suppression (E7): decoded rows replayed " +
+      "into assembly emit nothing, recycled xid emits") {
+    // the source drops a re-sent frame at or below its start offset before
+    // it is decoded, so the test above never reaches assembly's tombstone;
+    // here the committed transaction's decoded rows arrive again at new
+    // stream offsets, as a source without that filter would deliver them
+    implicit val sctx = spark.sqlContext
+    import graft.cdc.{PgOutput, PgWire}
+    import graft.streaming.DecodedWalEvent
+    val t0 = 1705314600123456L
+    val input = MemoryStream[DecodedWalEvent]
+    val q = CdcStream.pipelinePgOutput(spark, input.toDF(), "testdb")
+      .writeStream.outputMode("append")
+      .format("memory").queryName("pgout_replay_rows").start()
+    val session = new PgOutput.DecodeSession
+    def decoded(frames: (Long, Array[Byte])*): Seq[DecodedWalEvent] =
+      frames.flatMap { case (ws, f) => session.decode(ws, f) }
+    def tx(at: Long, name: String): Seq[DecodedWalEvent] = decoded(
+      (at, PgWire.begin(at + 20, t0, 7)),
+      (at + 10, PgWire.insert(100, Seq(Some(s"$at"), Some(name)))),
+      (at + 20, PgWire.commit(at + 20, at + 21, t0)))
+    def names() = spark.table("pgout_replay_rows")
+      .select($"after".getItem("name")).as[String].collect().toList.sorted
+    try {
+      decoded((10L, PgWire.relation(100, "public", "users",
+        Seq("id" -> 20, "name" -> 25))))
+      val first = tx(100L, "first")
+      input.addData(first)
+      q.processAllAvailable()
+      assert(names() == List("first"))
+      // (a) the committed tx's rows again, at new stream offsets
+      input.addData(first)
+      q.processAllAvailable()
+      assert(names() == List("first"), s"a replayed tx must not re-emit: ${names()}")
+      // (b) a new tx reusing xid 7 at higher positions is not a replay
+      input.addData(tx(200L, "second"))
+      q.processAllAvailable()
+      assert(names() == List("first", "second"),
+        s"a recycled xid at higher positions emits: ${names()}")
+    } finally q.stop()
   }
 
   test("pgoutput streaming: corrupt frame mid-stream — named error (crash) / dead-letter record (dlq)") {
